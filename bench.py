@@ -502,13 +502,14 @@ def _next_round() -> int:
     scan-based rule resolves any LATER in-round run to N+1, so an
     end-of-round curated re-measure landed as next round's artifact
     (the stray BENCH_r13_curated.json the r12 verdict flagged). A
-    builder re-measuring after the driver passes the round explicitly;
+    re-measure after the round's plain artifact landed passes the round
+    explicitly (``13`` or ``r13``; scripts/dump_plan.py resolves here);
     the driver itself never sets the variable, so its artifacts are
     unchanged — and filename == stamped round in both cases because
     both derive from this one resolution."""
-    explicit = os.environ.get("SPARK_GRAFT_ROUND", "")
-    if explicit.strip().isdigit():
-        return int(explicit)
+    explicit = os.environ.get("SPARK_GRAFT_ROUND", "").strip().lower()
+    if explicit.removeprefix("r").isdigit():
+        return int(explicit.removeprefix("r"))
     best = 0
     for f in os.listdir(_REPO):
         m = re.fullmatch(r"BENCH_r(\d+)\.json", f)
@@ -587,13 +588,20 @@ def main() -> None:
     # 2x longer) combined run during the curated pass below.
     print(json.dumps(out), flush=True)
 
-    if not curated_only and not only and sf == 0.1:
+    cur_path = os.path.join(_REPO, f"BENCH_r{this_round}_curated.json")
+    if (
+        not curated_only and not only and sf == 0.1
+        and cpus == "32" and not os.path.exists(cur_path)
+    ):
         # The per-round curated artifact: same stamps and mechanics,
         # curated pins. Written to a FILE — the driver captures stdout
         # for the plain artifact only. Runs after the plain pass in
         # the same JVM; curated-table detection is session-scoped and
         # write-invalidated, so the plain pass above cannot have been
-        # served from the curated tables.
+        # served from the curated tables. Only a 32-core run writes it
+        # (the pins' core count), and only once per round: a later
+        # re-measure or a smaller box cannot overwrite or pre-empt the
+        # round's artifact.
         try:
             c_secs = _curate(spark, sf_dir)
             cur = run_headline(
@@ -603,8 +611,7 @@ def main() -> None:
             cur["curated"] = True
             cur["curate_secs"] = c_secs
             cur["round"] = this_round
-            path = os.path.join(_REPO, f"BENCH_r{this_round}_curated.json")
-            with open(path, "w") as f:
+            with open(cur_path, "w") as f:
                 f.write(json.dumps(cur) + "\n")
         except Exception as e:  # the plain artifact has already shipped
             print(f"curated bench pass failed: {e}", file=sys.stderr)

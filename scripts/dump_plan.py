@@ -1,7 +1,8 @@
 """Dump `.explain("formatted")` for registered queries to
-plans/r13/<query>_<tag>.txt — the judge-checkable plan evidence for
-optimization rounds (brief: commit *_before.txt / *_after.txt for
-every touched query).
+plans/r<N>/<query>_<tag>.txt — the plan evidence for optimization
+rounds (commit *_before.txt / *_after.txt for every touched query).
+The round <N> is bench.py's: `SPARK_GRAFT_ROUND` (``13`` or ``r13``),
+else one past the highest committed BENCH_r<N>.json.
 
 Usage: python scripts/dump_plan.py <tag> <query> [<query> ...]
 """
@@ -13,8 +14,6 @@ import sys
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
-
-ROUND = os.environ.get("SPARK_GRAFT_ROUND", "r13")
 
 
 def main() -> None:
@@ -29,10 +28,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
-    from bench import _drop_persisted
+    from bench import _drop_persisted, _next_round
 
     queries = entrymod.queries()
-    out_dir = os.path.join(_REPO, "plans", ROUND)
+    out_dir = os.path.join(_REPO, "plans", f"r{_next_round()}")
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         _drop_persisted(spark)

@@ -513,36 +513,8 @@ def minhash_dedup_pairs(
         reps = groups.select(F.col("__rep").alias(id_col), text_col)
         sig = minhash_signature(reps, id_col, text_col, num_hashes, shingle_n)
         rep_pairs = lsh_candidate_pairs(sig, id_col, num_hashes, band_size)
-        # Within-group pairs ride DIAGONAL (rep, rep) rows appended to
-        # the rep-level candidates — the r13 setsim fan-out shape: one
-        # ma ⋈ mb join pair serves both branches, and the filter
-        # `doc_a != doc_b OR __ida < __idb` is a no-op on cross rows
-        # and the ordered within-group dedupe on diagonal rows.
-        # Disjointness (cross spans two rep groups, within shares one)
-        # is unchanged, so there is still no distinct over the result.
-        diag = groups.filter(
-            F.col("__has_sh") & (F.col("__cnt") >= 2)
-        ).select(
-            F.col("__rep").alias("doc_a"), F.col("__rep").alias("doc_b")
-        )
-        rep_pairs = rep_pairs.unionByName(diag)
-        ma = members.select(
-            F.col("__rep").alias("doc_a"), F.col(id_col).alias("__ida")
-        )
-        mb = members.select(
-            F.col("__rep").alias("doc_b"), F.col(id_col).alias("__idb")
-        )
-        return (
-            rep_pairs.join(ma, "doc_a")
-            .join(mb, "doc_b")
-            .filter(
-                (F.col("doc_a") != F.col("doc_b"))
-                | (F.col("__ida") < F.col("__idb"))
-            )
-            .select(
-                F.least("__ida", "__idb").alias("doc_a"),
-                F.greatest("__ida", "__idb").alias("doc_b"),
-            )
+        return fan_out_rep_pairs(
+            rep_pairs, members, id_col, groups.filter("__has_sh"), {}
         )
     sig = minhash_signature(docs, id_col, text_col, num_hashes, shingle_n)
     return lsh_candidate_pairs(sig, id_col, num_hashes, band_size)
@@ -784,7 +756,7 @@ def embedding_near_dup_pairs(
     ).filter(F.col(vec_col).isNotNull() & F.col("blk").isNotNull())
     groups = (
         base.groupBy("blk", vec_col)
-        .agg(F.min(id_col).alias("__rep"))
+        .agg(F.min(id_col).alias("__rep"), F.count(F.lit(1)).alias("__cnt"))
         .withColumn(
             "__nz",
             F.aggregate(
@@ -802,40 +774,19 @@ def embedding_near_dup_pairs(
         .groupBy("blk")
         .applyInPandas(score_block, schema="vec_a long, vec_b long, cos double")
     )
-    # Narrow (id, rep, nz) membership map, checkpointed once for the
-    # four fan-out consumers (cross a/b + within a/b).
+    # Narrow (id, rep) membership map, checkpointed once for the two
+    # fan-out consumers.
     members = (
-        base.join(groups.select("blk", vec_col, "__rep", "__nz"), ["blk", vec_col])
-        .select(F.col(id_col), "__rep", "__nz")
+        base.join(groups.select("blk", vec_col, "__rep"), ["blk", vec_col])
+        .select(F.col(id_col), "__rep")
         .localCheckpoint(eager=True)
     )
-    ma = members.select(F.col("__rep").alias("vec_a"), F.col(id_col).alias("__ida"))
-    mb = members.select(F.col("__rep").alias("vec_b"), F.col(id_col).alias("__idb"))
-    cross = (
-        rep_pairs.join(ma, "vec_a")
-        .join(mb, "vec_b")
-        .select(
-            F.least("__ida", "__idb").alias("vec_a"),
-            F.greatest("__ida", "__idb").alias("vec_b"),
-            "cos",
-        )
-    )
     # Degenerate threshold > 1.0 admits nothing (cos caps at 1.0 for
-    # identical vectors), matching the uncollapsed form.
-    if threshold > 1.0:
-        return cross
-    wa = members.filter("__nz").select("__rep", F.col(id_col).alias("__ida"))
-    wb = members.filter("__nz").select("__rep", F.col(id_col).alias("__idb"))
-    within = (
-        wa.join(wb, "__rep")
-        .filter(F.col("__ida") < F.col("__idb"))
-        .select(
-            F.col("__ida").alias("vec_a"),
-            F.col("__idb").alias("vec_b"),
-            F.lit(1.0).alias("cos"),
-        )
+    # identical vectors), matching the uncollapsed form: no diagonal.
+    diag = groups.filter("__nz") if threshold <= 1.0 else None
+    return fan_out_rep_pairs(
+        rep_pairs, members, id_col, diag, {"cos": 1.0}, "vec_a", "vec_b"
     )
-    return cross.unionByName(within)
 
 
 def connected_components(
@@ -1294,39 +1245,15 @@ def minhash_estimate_pairs(
     rep_scored = est.join(truth, ["doc_a", "doc_b"]).withColumn(
         "abs_err", F.round(F.abs(F.col("est_jaccard") - F.col("true_jaccard")), 6)
     )
-    # Fan back out to the doc level in ONE ma ⋈ mb pass (the r13
-    # setsim shape): cross-group pairs inherit the rep pair's scores;
-    # within-group pairs of identical texts ride DIAGONAL (rep, rep)
-    # rows scoring est = truth = 1.0 / abs_err = 0.0 exactly. Only
-    # groups with a non-empty shingle set pair within themselves:
-    # shingle-less docs never get a signature (minhash_signature drops
-    # them, like the SQL mirror's explode), so identical short texts
-    # are NOT candidates in the pair form either. The row filter
-    # `doc_a != doc_b OR __ida < __idb` is a no-op on cross rows and
-    # the ordered within-group dedupe on diagonal rows.
-    diag = groups.filter(F.col("__has_sh") & (F.col("__cnt") >= 2)).select(
-        F.col("__rep").alias("doc_a"),
-        F.col("__rep").alias("doc_b"),
-        F.lit(1.0).alias("est_jaccard"),
-        F.lit(1.0).alias("true_jaccard"),
-        F.lit(0.0).alias("abs_err"),
-    )
-    rep_scored = rep_scored.unionByName(diag)
-    ma = members.select(F.col("__rep").alias("doc_a"), F.col(id_col).alias("__ida"))
-    mb = members.select(F.col("__rep").alias("doc_b"), F.col(id_col).alias("__idb"))
-    return (
-        rep_scored.join(ma, "doc_a")
-        .join(mb, "doc_b")
-        .filter(
-            (F.col("doc_a") != F.col("doc_b")) | (F.col("__ida") < F.col("__idb"))
-        )
-        .select(
-            F.least("__ida", "__idb").alias("doc_a"),
-            F.greatest("__ida", "__idb").alias("doc_b"),
-            "est_jaccard",
-            "true_jaccard",
-            "abs_err",
-        )
+    # Within-group pairs of identical texts score est = truth = 1.0
+    # and abs_err = 0.0 exactly. Only groups with a non-empty shingle
+    # set pair within themselves: shingle-less docs never get a
+    # signature (minhash_signature drops them, like the SQL mirror's
+    # explode), so identical short texts are NOT candidates in the
+    # pair form either.
+    return fan_out_rep_pairs(
+        rep_scored, members, id_col, groups.filter("__has_sh"),
+        {"est_jaccard": 1.0, "true_jaccard": 1.0, "abs_err": 0.0},
     )
 
 
@@ -1517,7 +1444,7 @@ def srp_near_dup_pairs(
     ).select(F.col(id_col), F.col(vec_col))
     groups = (
         base.groupBy(vec_col)
-        .agg(F.min(id_col).alias("__rep"))
+        .agg(F.min(id_col).alias("__rep"), F.count(F.lit(1)).alias("__cnt"))
         .withColumn(
             "__nz",
             F.aggregate(
@@ -1554,37 +1481,16 @@ def srp_near_dup_pairs(
         .filter(F.col("cos") >= threshold)
     )
     members = (
-        base.join(groups.select(F.col(vec_col), "__rep", "__nz"), vec_col)
-        .select(F.col(id_col), "__rep", "__nz")
+        base.join(groups.select(F.col(vec_col), "__rep"), vec_col)
+        .select(F.col(id_col), "__rep")
         .localCheckpoint(eager=True)
     )
-    ma = members.select(F.col("__rep").alias("vec_a"), F.col(id_col).alias("__ida"))
-    mb = members.select(F.col("__rep").alias("vec_b"), F.col(id_col).alias("__idb"))
-    cross = (
-        rep_pairs.join(ma, "vec_a")
-        .join(mb, "vec_b")
-        .select(
-            F.least("__ida", "__idb").alias("vec_a"),
-            F.greatest("__ida", "__idb").alias("vec_b"),
-            "cos",
-        )
-    )
     # Degenerate threshold > 1.0 admits nothing (cos caps at 1.0 for
-    # identical vectors), matching the uncollapsed form.
-    if threshold > 1.0:
-        return cross
-    wa = members.filter("__nz").select("__rep", F.col(id_col).alias("__ida"))
-    wb = members.filter("__nz").select("__rep", F.col(id_col).alias("__idb"))
-    within = (
-        wa.join(wb, "__rep")
-        .filter(F.col("__ida") < F.col("__idb"))
-        .select(
-            F.col("__ida").alias("vec_a"),
-            F.col("__idb").alias("vec_b"),
-            F.lit(1.0).alias("cos"),
-        )
+    # identical vectors), matching the uncollapsed form: no diagonal.
+    diag = groups.filter("__nz") if threshold <= 1.0 else None
+    return fan_out_rep_pairs(
+        rep_pairs, members, id_col, diag, {"cos": 1.0}, "vec_a", "vec_b"
     )
-    return cross.unionByName(within)
 
 
 def minhash_containment_pairs(
@@ -1669,43 +1575,20 @@ def minhash_containment_pairs(
             F.round(shared / zb, 6).alias("true_cont_b_in_a"),
         )
     )
-    # Doc-level fan-out in ONE ma ⋈ mb pass (r13 setsim shape):
-    # within-group pairs ride DIAGONAL (rep, rep) rows whose five
-    # scores are all exactly 1.0 — the directional swap is the
-    # identity on them (fwd = rev), and the row filter
-    # `doc_a != doc_b OR __ida < __idb` is a no-op on cross rows and
-    # the ordered within-group dedupe on diagonal rows.
-    diag = groups.filter(F.col("__has_sh") & (F.col("__cnt") >= 2)).select(
-        F.col("__rep").alias("doc_a"),
-        F.col("__rep").alias("doc_b"),
-        F.lit(1.0).alias("est_jaccard"),
-        F.lit(1.0).alias("est_cont_a_in_b"),
-        F.lit(1.0).alias("est_cont_b_in_a"),
-        F.lit(1.0).alias("true_cont_a_in_b"),
-        F.lit(1.0).alias("true_cont_b_in_a"),
+    # Within-group pairs of identical texts score exactly 1.0 on all
+    # five columns, so the directional swap is the identity on them.
+    return fan_out_rep_pairs(
+        rep_scored, members, id_col, groups.filter("__has_sh"),
+        dict.fromkeys(
+            ["est_jaccard", "est_cont_a_in_b", "est_cont_b_in_a",
+             "true_cont_a_in_b", "true_cont_b_in_a"],
+            1.0,
+        ),
+        swap=(
+            ("est_cont_a_in_b", "est_cont_b_in_a"),
+            ("true_cont_a_in_b", "true_cont_b_in_a"),
+        ),
     )
-    rep_scored = rep_scored.unionByName(diag)
-    ma = members.select(F.col("__rep").alias("doc_a"), F.col(id_col).alias("__ida"))
-    mb = members.select(F.col("__rep").alias("doc_b"), F.col(id_col).alias("__idb"))
-    keep = F.col("__ida") < F.col("__idb")  # does least/greatest keep rep order?
-    swap = lambda fwd, rev: F.when(keep, F.col(fwd)).otherwise(F.col(rev))
-    out = (
-        rep_scored.join(ma, "doc_a")
-        .join(mb, "doc_b")
-        .filter(
-            (F.col("doc_a") != F.col("doc_b")) | (F.col("__ida") < F.col("__idb"))
-        )
-        .select(
-            F.least("__ida", "__idb").alias("doc_a"),
-            F.greatest("__ida", "__idb").alias("doc_b"),
-            F.col("est_jaccard"),
-            swap("est_cont_a_in_b", "est_cont_b_in_a").alias("est_cont_a_in_b"),
-            swap("est_cont_b_in_a", "est_cont_a_in_b").alias("est_cont_b_in_a"),
-            swap("true_cont_a_in_b", "true_cont_b_in_a").alias("true_cont_a_in_b"),
-            swap("true_cont_b_in_a", "true_cont_a_in_b").alias("true_cont_b_in_a"),
-        )
-    )
-    return out
 
 
 def setsim_prefix_join(
@@ -1974,6 +1857,74 @@ def collapse_exact_text(
     return groups, members
 
 
+def fan_out_rep_pairs(
+    rep_pairs: DataFrame,
+    members: DataFrame,
+    id_col: str,
+    diag_groups: DataFrame | None,
+    scores: dict,
+    a: str = "doc_a",
+    b: str = "doc_b",
+    swap: tuple = (),
+) -> DataFrame:
+    """Member-level pairs from the representative-level pairs of an
+    exact-duplicate collapse (collapse_exact_text and the distinct-
+    vector collapses): the one fan-out every collapsed pair operator
+    shares.
+
+    - ``rep_pairs``: (a, b, *scores) over representatives, a < b.
+    - ``members``: (id_col, __rep) membership map; materialize it
+      before the call (two plan branches read it).
+    - ``diag_groups``: the collapse's (__rep, __cnt) group rows whose
+      members pair AMONG THEMSELVES (a scoreable value: non-empty
+      shingle set, non-zero vector), or None when no within-group pair
+      qualifies. Each multi-member group becomes a DIAGONAL (rep, rep)
+      row scoring ``scores`` — what two identical members score
+      against each other.
+    - ``swap``: (fwd, rev) directional score pairs, exchanged when the
+      member order reverses the rep order.
+
+    Cross-group pairs carry their rep pair's scores verbatim (identical
+    content scores identically); within-group pairs are the diagonal
+    rows' fan-out. ONE ma ⋈ mb join pair serves both, and the row
+    filter ``a != b OR __ida < __idb`` is a no-op on cross rows
+    (members of different groups are different ids) and the ordered
+    within-group dedupe on diagonal rows. Cross and within sets are
+    disjoint (cross spans two groups, within shares one), so there is
+    no distinct over the result. Under AQE each member-side plan
+    branch costs a materialization job, which is why the diagonal
+    fuse beats a separate within-group self-join plus union."""
+    if diag_groups is not None:
+        rep_pairs = rep_pairs.unionByName(
+            diag_groups.filter(F.col("__cnt") >= 2).select(
+                F.col("__rep").alias(a),
+                F.col("__rep").alias(b),
+                *[F.lit(v).alias(c) for c, v in scores.items()],
+            )
+        )
+    ma = members.select(F.col("__rep").alias(a), F.col(id_col).alias("__ida"))
+    mb = members.select(F.col("__rep").alias(b), F.col(id_col).alias("__idb"))
+    keep = F.col("__ida") < F.col("__idb")  # member order == rep order?
+    flip = {**dict(swap), **{rev: fwd for fwd, rev in swap}}
+    return (
+        rep_pairs.join(ma, a)
+        .join(mb, b)
+        .filter((F.col(a) != F.col(b)) | keep)
+        .select(
+            F.least("__ida", "__idb").alias(a),
+            F.greatest("__ida", "__idb").alias(b),
+            *[
+                (
+                    F.when(keep, F.col(c)).otherwise(F.col(flip[c]))
+                    if c in flip
+                    else F.col(c)
+                ).alias(c)
+                for c in scores
+            ],
+        )
+    )
+
+
 def setsim_prefix_join_collapsed(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -2002,19 +1953,9 @@ def setsim_prefix_join_collapsed(
     shuffle disk and died, while this form's pre-verify work is
     proportional to distinct content and its output to true pairs.
 
-    Fan-out shape (r13): within-group pairs are the member fan-out of
-    the DIAGONAL rep pair (rep, rep, J=1.0) — identical texts have
-    identical shingle sets, so every non-empty duplicate group is a
-    clique at Jaccard exactly 1.0. Appending the diagonal rows
-    (rep-level, one per multi-member group with a non-empty shingle
-    set) to the verified rep pairs lets ONE ma ⋈ mb fan-out serve
-    both branches; the row filter ``doc_a != doc_b OR __ida < __idb``
-    is a no-op on cross-group rows (members of different groups are
-    different docs) and is exactly the old within-branch's ordered
-    dedupe on diagonal rows. This halves the member-side joins (4 → 2
-    plan branches over members, which under AQE each cost a
-    materialization job) and drops the output union, with the same
-    output set by the argument above."""
+    Identical texts have identical shingle sets, so every non-empty
+    duplicate group is a clique at Jaccard exactly 1.0: its pairs are
+    the fan_out_rep_pairs diagonal of the group."""
     groups, members = collapse_exact_text(
         docs, id_col, text_col, shingle_n, members_materialize="checkpoint"
     )
@@ -2022,27 +1963,8 @@ def setsim_prefix_join_collapsed(
     rep_pairs = setsim_prefix_join(reps, id_col, text_col, threshold, shingle_n)
     # Degenerate threshold > 1.0 admits nothing (Jaccard caps at 1.0
     # for identical sets), matching the uncollapsed form: no diagonal.
-    if threshold <= 1.0:
-        diag = groups.filter(
-            F.col("__has_sh") & (F.col("__cnt") >= 2)
-        ).select(
-            F.col("__rep").alias("doc_a"),
-            F.col("__rep").alias("doc_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-        rep_pairs = rep_pairs.unionByName(diag)
-    ma = members.select(F.col("__rep").alias("doc_a"), F.col(id_col).alias("__ida"))
-    mb = members.select(F.col("__rep").alias("doc_b"), F.col(id_col).alias("__idb"))
-    return (
-        rep_pairs.join(ma, "doc_a")
-        .join(mb, "doc_b")
-        .filter((F.col("doc_a") != F.col("doc_b")) | (F.col("__ida") < F.col("__idb")))
-        .select(
-            F.least("__ida", "__idb").alias("doc_a"),
-            F.greatest("__ida", "__idb").alias("doc_b"),
-            "jaccard",
-        )
-    )
+    diag = groups.filter("__has_sh") if threshold <= 1.0 else None
+    return fan_out_rep_pairs(rep_pairs, members, id_col, diag, {"jaccard": 1.0})
 
 
 def setsim_clusters_collapsed(

@@ -23,9 +23,9 @@ from collections import OrderedDict
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import fan_out, ring_persist
+from ..session import ring_persist
 
-# Memoized final rank tables for pagerank/weighted_pagerank:
+# Memoized final rank tables for weighted_pagerank_from_half:
 # (canonicalized edge plan, params) -> checkpointed ranks DataFrame.
 # Bounded replacement for the per-call cache() leak this module used
 # to have: the heavy per-call caches (edge list, degrees, node set)
@@ -156,302 +156,6 @@ def _pagerank_local_finish(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 3,
-    damping: float = 0.85,
-    normalize: bool = False,
-    local_finish_edges: int = 100_000,
-    broadcast_nodes: int = 1_000_000,
-    broadcast_min_edges: int = 10_000_000,
-) -> DataFrame:
-    """PageRank over a directed edge list, `iters` synchronous rounds.
-
-    Each round: contrib = ranks ⋈ edges (equi-join on src) →
-    groupBy(dst).sum (map-side partial agg) → left-join back onto the
-    node set for the damping update. No driver-side state except the
-    node COUNT (one scalar); ranks stay distributed end to end. With
-    a bounded iteration count the lineage stays shallow enough that
-    no checkpoint is needed — an unbounded convergence loop would
-    truncate lineage per round like extensions.dedup.
-    connected_components does.
-
-    Physical tiers, chosen from the two counts the plan needs anyway:
-
-    - edges ≤ ``local_finish_edges``: driver-side power iteration
-      (model-sized collect, see _pagerank_local_finish);
-    - nodes ≤ ``broadcast_nodes`` AND edges ≥ ``broadcast_min_edges``
-      (a dense co-occurrence or web-host graph — the rank table is
-      orders of magnitude smaller than the edge list): broadcast
-      rounds. rank/deg fold into one ≤n-row broadcast hinted into the
-      edge join, so the CACHED edge list is scanned map-side every
-      round and NEVER shuffled — in particular the partitioned
-      shape's one-time edge-list shuffle (e ⋈ deg + repartition),
-      which at 10^10+ edges is the dominant cost, disappears. The
-      price is 2 broadcast barriers per round (~0.1-0.2s each on
-      local[32]), which is why SMALL edge lists skip this tier: at
-      2.4M edges the saved shuffle costs less than the barriers
-      (measured 2.7s vs 4.5s at the 100x co-order proxy, whose
-      distinct edge set stays 2.4M);
-    - otherwise: both sides hash-partition on the node key up front
-      and every round reuses the same exchange — the only shape that
-      survives when ranks themselves are TBs.
-
-    The edge list is cached and counted up front (deg / out / nodes
-    all re-derive it otherwise — for co-occurrence callers that is a
-    repeated groupBy+explode). When the count fits under
-    ``local_finish_edges`` (~2 MB collected at the 100k default, same
-    cutover as connected_components), the whole iteration runs as a
-    driver-side power iteration instead: each distributed round costs
-    ~0.7s of sequential join+agg stage latency regardless of edge
-    count, so 3 rounds on a 60k-edge graph collapse from ~2.6s to
-    ~0.6s at sf0.1. Above the cutover every round runs distributed —
-    at 100 TB the edge list never fits and the join-based matvec is
-    the only shape that survives.
-
-    Nodes with no out-edges (dangling) keep redistributing only the
-    teleport mass — callers building from undirected co-occurrence
-    edges have none by construction."""
-    spark = edges.sparkSession
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    mk = _rank_memo_key(edges, src, dst, iters, damping, normalize)
-    hit = _RANK_MEMO.get(mk) if mk is not None else None
-    if hit is not None:
-        return hit
-    e = fan_out(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))).cache()
-    n_edges = e.count()
-    if n_edges <= local_finish_edges:
-        deg: dict = {}
-        rows = e.collect()
-        for s, _ in rows:
-            deg[s] = deg.get(s, 0) + 1
-        res = _pagerank_local_finish(
-            e, [(s, d, 1.0 / deg[s]) for s, d in rows], iters, damping, normalize
-        )
-        # The edge rows are already in the driver; holding the cached
-        # copy past return would accumulate across library calls.
-        e.unpersist()
-        _rank_memo_put(mk, res)
-        return res
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition(shuffle, "node")
-        .cache()
-    )
-    n = nodes.count()  # the one driver scalar
-    small_ranks = n <= broadcast_nodes and n_edges >= broadcast_min_edges
-    if small_ranks:
-        # ≤ n rows; cached so each round's broadcast subtree reuses it
-        # instead of re-shuffling e (deg is folded into the cached
-        # `out` on the partitioned tier — this is the same saving).
-        deg = deg.cache()
-    else:
-        out = e.join(deg, "src").repartition(shuffle, "src").cache()
-    teleport = (1.0 - damping) / n
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for _ in range(iters):
-        if small_ranks:
-            # rank/deg folded into one ≤n-row broadcast; the cached
-            # edge list is scanned map-side, never shuffled.
-            # Key the broadcast side by the RANK table's node column
-            # under a fresh name: deg derives from e, so carrying its
-            # src attribute into a join back against e is ambiguous.
-            shares = ranks.join(deg, ranks["node"] == deg["src"]).select(
-                ranks["node"].alias("__src"),
-                (F.col("rank") / F.col("__deg")).alias("__share"),
-            )
-            contrib = (
-                e.join(F.broadcast(shares), e["src"] == F.col("__src"))
-                .select(F.col("dst").alias("node"), F.col("__share").alias("__c"))
-                .groupBy("node")
-                .agg(F.sum("__c").alias("__in"))
-            )
-        else:
-            contrib = (
-                out.join(ranks, out["src"] == ranks["node"])
-                .select(F.col("dst").alias("node"), (F.col("rank") / F.col("__deg")).alias("__c"))
-                .groupBy("node")
-                .agg(F.sum("__c").alias("__in"))
-            )
-        right = F.broadcast(contrib) if small_ranks else contrib
-        ranks = nodes.join(right, "node", "left").select(
-            "node",
-            (F.lit(teleport) + F.lit(damping) * F.coalesce(F.col("__in"), F.lit(0.0))).alias("rank"),
-        )
-    if normalize:
-        # Mean-1 normalization (rank · N): keeps the output resolution
-        # independent of graph size — raw ranks are O(1/N) and would
-        # vanish under fixed-precision rounding on large graphs.
-        ranks = ranks.select("node", (F.col("rank") * F.lit(float(n))).alias("rank"))
-    # Materialize the final ranks WHILE the per-call caches are hot
-    # (the iterative rounds read the cached edge list), then drop
-    # every per-call cache — without this, repeated library calls
-    # accumulate cached edge lists until JVM exit. persist+count, NOT
-    # localCheckpoint: checkpoint truncates lineage, so a harness that
-    # force-drops blocks between runs (bench/scalecheck heap hygiene)
-    # would leave the memoized frame unrecomputable
-    # (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND); a persisted frame just
-    # recomputes from source.
-    ranks = ranks.persist()
-    ranks.count()
-    e.unpersist()
-    nodes.unpersist()
-    (deg if small_ranks else out).unpersist()
-    _rank_memo_put(mk, ranks)
-    return ranks
-
-
-def pagerank_from_half(
-    half: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 3,
-    damping: float = 0.85,
-    normalize: bool = False,
-    local_finish_edges: int = 100_000,
-    broadcast_nodes: int = 1_000_000,
-    broadcast_min_edges: int = 10_000_000,
-) -> DataFrame:
-    """`pagerank` over an UNDIRECTED graph given as its (src < dst)
-    half-edge set — the canonical stored/derived form every
-    co-occurrence caller already holds (co_occurrence_weighted_half /
-    io.layout.write_curated_edges). Exploiting the mirror symmetry
-    instead of materializing the mirrored union (the r12 optimization
-    pass) removes, at every scale:
-
-    - the mirrored edge list's cache+count (2·E rows): the half set is
-      the caller's persist-backed table and every derived quantity
-      below reads it narrowly — the full directed set is never
-      materialized on its own (at 100 TB that cache DOUBLES the edge
-      tier's memory/storage footprint for zero information);
-    - the node-set derivation (union of 2·E src + 2·E dst, distinct,
-      repartition, cache — a 4·E-row shuffle): an undirected node's
-      degree table already contains every node exactly once, so nodes
-      ride the degree aggregate (one endpoint-explode over E rows,
-      map-side combinable) and `n` is its count;
-    - half the local-finish collect bytes (E/2 rows cross py4j, the
-      mirror is rebuilt in the driver).
-
-    Measured at sf0.1 (2.39M directed edges, 20k nodes, steal < 2%):
-    2.90 → 2.20 s min-of-3, same 4 driver jobs, identical output
-    (exceptAll both ways = 0 rows). Tier semantics and cutovers are
-    UNCHANGED (counts compare the DIRECTED edge count 2·|half|), and
-    the distributed rounds are byte-identical plans to `pagerank`'s —
-    only the build of e/deg/nodes changes shape.
-
-    Contract: ``half`` holds unique (src < dst) rows and should be
-    persist/checkpoint-backed by the caller (it is counted, exploded
-    for degrees, and mirrored into the round joins).
-
-    Why there is deliberately NO fan_out(h) here (ADVICE r12): h is
-    scanned narrowly by SEVERAL consumers (the count, the degree
-    explode, and each round's mirror join) straight off the caller's
-    persisted/stored table. An un-cached repartition would re-execute
-    its exchange once PER consumer (3 rounds = 3 extra shuffles of
-    the half set), and caching the repartitioned copy would
-    reintroduce exactly the second edge-mass materialization this
-    build exists to avoid. The single-input-split pin the fan-out
-    would fix only occurs when the whole edge table fits one parquet
-    split (~sub-128 MB) — at that size the explode is trivial; at any
-    scale where parallelism matters the stored table already has many
-    splits."""
-    spark = half.sparkSession
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    h = half.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    mk = _rank_memo_key(h, "half", iters, damping, normalize)
-    hit = _RANK_MEMO.get(mk) if mk is not None else None
-    if hit is not None:
-        return hit
-    n_half = h.count()
-    if 2 * n_half <= local_finish_edges:
-        deg: dict = {}
-        rows = h.collect()
-        for s, d in rows:
-            deg[s] = deg.get(s, 0) + 1
-            deg[d] = deg.get(d, 0) + 1
-        shares = [
-            (s, d, 1.0 / deg[s]) for s, d in rows
-        ] + [(d, s, 1.0 / deg[d]) for s, d in rows]
-        res = _pagerank_local_finish(h, shares, iters, damping, normalize)
-        _rank_memo_put(mk, res)
-        return res
-    # Degree table = node universe: every undirected node appears in
-    # ≥1 half row, so one endpoint-explode + map-side-combinable count
-    # yields (node, deg) WITH the node set for free. groupBy output is
-    # already hash-partitioned on node — rounds' contrib groupBy and
-    # the damping left-join reuse that exchange.
-    deg = (
-        h.select(F.explode(F.array(F.col("src"), F.col("dst"))).alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("__deg"))
-        .cache()
-    )
-    n = deg.count()  # the one driver scalar
-    nodes = deg.select("node")
-    e = mirror_edges(h)
-    n_edges = 2 * n_half
-    small_ranks = n <= broadcast_nodes and n_edges >= broadcast_min_edges
-    if not small_ranks:
-        out = (
-            e.join(deg.withColumnRenamed("node", "src"), "src")
-            .repartition(shuffle, "src")
-            .cache()
-        )
-    teleport = (1.0 - damping) / n
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for _ in range(iters):
-        if small_ranks:
-            # rank/deg folded into one ≤n-row broadcast; the mirrored
-            # half set is scanned map-side (narrow over the caller's
-            # persisted half), never shuffled and never cached. deg's
-            # node column joins under a FRESH alias: ranks derives
-            # from deg's own node attribute, so a bare deg["node"]
-            # here would be a self-referential join predicate.
-            degj = deg.select(F.col("node").alias("__dnode"), "__deg")
-            shares = ranks.join(degj, ranks["node"] == F.col("__dnode")).select(
-                ranks["node"].alias("__src"),
-                (F.col("rank") / F.col("__deg")).alias("__share"),
-            )
-            contrib = (
-                e.join(F.broadcast(shares), e["src"] == F.col("__src"))
-                .select(F.col("dst").alias("node"), F.col("__share").alias("__c"))
-                .groupBy("node")
-                .agg(F.sum("__c").alias("__in"))
-            )
-        else:
-            contrib = (
-                out.join(ranks, out["src"] == ranks["node"])
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("rank") / F.col("__deg")).alias("__c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("__c").alias("__in"))
-            )
-        right = F.broadcast(contrib) if small_ranks else contrib
-        ranks = nodes.join(right, "node", "left").select(
-            "node",
-            (
-                F.lit(teleport)
-                + F.lit(damping) * F.coalesce(F.col("__in"), F.lit(0.0))
-            ).alias("rank"),
-        )
-    if normalize:
-        ranks = ranks.select("node", (F.col("rank") * F.lit(float(n))).alias("rank"))
-    ranks = ranks.persist()
-    ranks.count()
-    deg.unpersist()
-    if not small_ranks:
-        out.unpersist()
-    _rank_memo_put(mk, ranks)
-    return ranks
-
-
 def weighted_pagerank_from_half(
     half: DataFrame,
     src: str = "src",
@@ -464,14 +168,55 @@ def weighted_pagerank_from_half(
     broadcast_nodes: int = 1_000_000,
     broadcast_min_edges: int = 10_000_000,
 ) -> DataFrame:
-    """`weighted_pagerank` over an undirected weighted (src < dst, w)
-    half-edge set — the mirror-aware build of `pagerank_from_half`
-    applied to the weighted variant: weights are symmetric by
-    construction, so Σ_out w per node is one endpoint-explode over the
-    half rows and the mirrored union is never cached or shuffled.
-    Tier cutovers unchanged (directed count = 2·|half|). No fan_out
-    on h for the same reason as pagerank_from_half (see its note):
-    multiple narrow consumers over the caller's persisted table."""
+    """PageRank over an UNDIRECTED weighted graph given as its
+    (src < dst, w) half-edge set, `iters` synchronous rounds. Each
+    round a node distributes its rank over its edges in proportion to
+    edge weight (w / Σ w); unweighted PageRank is w = 1.0 on every
+    edge (share = 1 / degree).
+
+    Each round: contrib = ranks ⋈ edges (equi-join on src) →
+    groupBy(dst).sum (map-side partial agg) → left-join back onto the
+    node set for the damping update. The node COUNT is the only
+    driver scalar; ranks stay distributed end to end, and with a
+    bounded iteration count the lineage stays shallow enough that no
+    checkpoint is needed.
+
+    Physical tiers, chosen from the two counts the plan needs anyway
+    (edge counts are DIRECTED: 2·|half|):
+
+    - edges ≤ ``local_finish_edges``: driver-side power iteration
+      (model-sized collect, see _pagerank_local_finish). Each
+      distributed round costs ~0.7s of sequential join+agg stage
+      latency regardless of edge count, so 3 rounds on a 60k-edge
+      graph collapse from ~2.6s to ~0.6s at sf0.1;
+    - nodes ≤ ``broadcast_nodes`` AND edges ≥ ``broadcast_min_edges``
+      (a dense co-occurrence or web-host graph): broadcast rounds.
+      rank/Σw folds into one ≤n-row broadcast hinted into the edge
+      join, so the mirrored half set is scanned map-side every round
+      and NEVER shuffled. The price is 2 broadcast barriers per round,
+      which is why small edge lists skip this tier (measured 2.7s vs
+      4.5s at the 100x co-order proxy, 2.4M distinct edges);
+    - otherwise: the per-edge share table is hash-partitioned on src
+      once and cached, so every round reuses the same exchange — the
+      only shape that survives when ranks themselves are TBs.
+
+    The build exploits the mirror symmetry instead of materializing
+    the mirrored union: weights are symmetric, so Σ w per node is one
+    endpoint-explode over the half rows (map-side combinable), and
+    that aggregate IS the node universe (every undirected node appears
+    in ≥1 half row), so `n` is its count. The full directed set is
+    never cached on its own and the local finish collects only the
+    half rows (measured at sf0.1, 2.39M directed edges: 2.90 → 2.20 s
+    against the mirrored build, same driver jobs, identical output).
+
+    Contract: ``half`` holds unique (src < dst) rows and should be
+    persist/checkpoint-backed by the caller: it is counted, exploded
+    for the weight sums, and mirrored into the round joins. There is
+    deliberately NO fan_out here: an un-cached repartition would
+    re-execute its exchange once PER consumer, and caching the
+    repartitioned copy would reintroduce the second edge-mass
+    materialization this build avoids. Graphs are undirected, so no
+    node is dangling."""
     spark = half.sparkSession
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     h = half.select(
@@ -479,7 +224,7 @@ def weighted_pagerank_from_half(
         F.col(dst).alias("dst"),
         F.col(weight).cast("double").alias("__w"),
     )
-    mk = _rank_memo_key(h, "whalf", iters, damping, normalize)
+    mk = _rank_memo_key(h, iters, damping, normalize)
     hit = _RANK_MEMO.get(mk) if mk is not None else None
     if hit is not None:
         return hit
@@ -497,15 +242,7 @@ def weighted_pagerank_from_half(
         _rank_memo_put(mk, res)
         return res
     wsum = (
-        h.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("src").alias("node"), F.col("__w")),
-                    F.struct(F.col("dst").alias("node"), F.col("__w")),
-                )
-            ).alias("__e")
-        )
-        .select("__e.*")
+        h.select(F.explode(F.array("src", "dst")).alias("node"), "__w")
         .groupBy("node")
         .agg(F.sum("__w").alias("__wsum"))
         .cache()
@@ -528,8 +265,9 @@ def weighted_pagerank_from_half(
         if small_ranks:
             # rank·(w/Σw) = (rank/Σw)·w — the per-edge share never
             # materializes on the (uncached, narrow) mirrored scan.
-            # Same fresh-alias rule as pagerank_from_half: ranks
-            # derives from wsum's node attribute.
+            # wsum's node column joins under a FRESH alias: ranks
+            # derives from wsum's own node attribute, so a bare
+            # wsum["node"] here would be a self-referential predicate.
             wsumj = wsum.select(F.col("node").alias("__wnode"), "__wsum")
             scaled = ranks.join(wsumj, ranks["node"] == F.col("__wnode")).select(
                 ranks["node"].alias("__src"),
@@ -563,7 +301,17 @@ def weighted_pagerank_from_half(
             ).alias("rank"),
         )
     if normalize:
+        # Mean-1 normalization (rank · N): keeps the output resolution
+        # independent of graph size — raw ranks are O(1/N) and would
+        # vanish under fixed-precision rounding on large graphs.
         ranks = ranks.select("node", (F.col("rank") * F.lit(float(n))).alias("rank"))
+    # Materialize the final ranks WHILE the per-call caches are hot,
+    # then drop them — repeated calls would otherwise accumulate
+    # cached tables until JVM exit. persist+count, NOT
+    # localCheckpoint: a harness that force-drops blocks between runs
+    # would leave a checkpointed memo entry unrecomputable
+    # (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND); a persisted frame just
+    # recomputes from source.
     ranks = ranks.persist()
     ranks.count()
     wsum.unpersist()
@@ -573,35 +321,16 @@ def weighted_pagerank_from_half(
     return ranks
 
 
-def degree_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Per-node in/out degree in ONE pass: each edge explodes into its
-    two endpoint rows tagged (out, in), then a single
-    map-side-combinable groupBy(node) sums the tags — the edge list
-    (often itself derived) is never scanned twice, and no outer merge
-    of two aggregates is needed."""
-    both = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col(src).alias("node"), F.lit(1).alias("o"), F.lit(0).alias("i")),
-                F.struct(F.col(dst).alias("node"), F.lit(0).alias("o"), F.lit(1).alias("i")),
-            )
-        ).alias("e")
-    ).select("e.*")
-    return both.groupBy("node").agg(
-        F.sum("o").cast("long").alias("out_deg"),
-        F.sum("i").cast("long").alias("in_deg"),
-    )
-
-
 def degree_stats_from_half(
     half: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
-    """`degree_stats` of the MIRRORED graph computed from its
-    (src < dst) half-edge set: on a symmetric edge list every node's
-    out-degree equals its in-degree equals its undirected degree, so
-    one endpoint-explode over the half rows (E rows, map-side
-    combinable) replaces the mirror-then-explode form (2·E exploded to
-    4·E) — half the aggregate input at any scale, same output."""
+    """Per-node (out_deg, in_deg) of the MIRRORED graph computed from
+    its (src < dst) half-edge set: on a symmetric edge list every
+    node's out-degree equals its in-degree equals its undirected
+    degree, so one endpoint-explode over the half rows (E rows,
+    map-side combinable) replaces the mirror-then-explode form (2·E
+    exploded to 4·E) — half the aggregate input at any scale, same
+    output."""
     both = half.select(
         F.explode(F.array(F.col(src).alias("node"), F.col(dst).alias("node"))).alias(
             "node"
@@ -751,128 +480,6 @@ def item_cf_topk(
     )
 
 
-def weighted_pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    iters: int = 3,
-    damping: float = 0.85,
-    normalize: bool = False,
-    local_finish_edges: int = 100_000,
-    broadcast_nodes: int = 1_000_000,
-    broadcast_min_edges: int = 10_000_000,
-) -> DataFrame:
-    """PageRank with edge weights: each round distributes a node's
-    rank proportionally to outgoing edge weight (w / Σ_out w) instead
-    of uniformly — co-occurrence COUNTS become link strength. Same
-    three physical tiers as `pagerank` (driver finish for model-sized
-    edge lists; broadcast rounds when nodes ≤ ``broadcast_nodes`` AND
-    edges ≥ ``broadcast_min_edges``, scanning the cached edge list
-    map-side with rank/Σw folded into one ≤n-row broadcast so the
-    edge list is never shuffled; fully partitioned otherwise); the
-    only semantic change is the per-edge share, precomputed once so
-    rounds multiply instead of re-aggregating."""
-    spark = edges.sparkSession
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    mk = _rank_memo_key(edges, src, dst, weight, iters, damping, normalize)
-    hit = _RANK_MEMO.get(mk) if mk is not None else None
-    if hit is not None:
-        return hit
-    e = fan_out(
-        edges.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(weight).cast("double").alias("__w"),
-        )
-    ).cache()
-    n_edges = e.count()
-    if n_edges <= local_finish_edges:
-        wsum: dict = {}
-        rows = e.collect()
-        for s, _, w in rows:
-            wsum[s] = wsum.get(s, 0.0) + w
-        res = _pagerank_local_finish(
-            e, [(s, d, w / wsum[s]) for s, d, w in rows], iters, damping, normalize
-        )
-        e.unpersist()
-        _rank_memo_put(mk, res)
-        return res
-    wsum = e.groupBy("src").agg(F.sum("__w").alias("__wsum"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition(shuffle, "node")
-        .cache()
-    )
-    n = nodes.count()
-    small_ranks = n <= broadcast_nodes and n_edges >= broadcast_min_edges
-    if small_ranks:
-        # ≤ n rows; cached so each round's broadcast subtree reuses it
-        # instead of re-aggregating e (folded into the cached `out` on
-        # the partitioned tier — same saving).
-        wsum = wsum.cache()
-    else:
-        out = (
-            e.join(wsum, "src")
-            .select("src", "dst", (F.col("__w") / F.col("__wsum")).alias("__share"))
-            .repartition(shuffle, "src")
-            .cache()
-        )
-    teleport = (1.0 - damping) / n
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for _ in range(iters):
-        if small_ranks:
-            # rank/Σw folded into one ≤n-row broadcast; the cached
-            # weighted edge list is scanned map-side, never shuffled —
-            # rank·(w/Σw) = (rank/Σw)·w, so the per-edge share never
-            # needs materializing on the edge side at this tier.
-            scaled = ranks.join(wsum, ranks["node"] == wsum["src"]).select(
-                ranks["node"].alias("__src"),
-                (F.col("rank") / F.col("__wsum")).alias("__rs"),
-            )
-            contrib = (
-                e.join(F.broadcast(scaled), e["src"] == F.col("__src"))
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("__rs") * F.col("__w")).alias("__c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("__c").alias("__in"))
-            )
-        else:
-            contrib = (
-                out.join(ranks, out["src"] == ranks["node"])
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("rank") * F.col("__share")).alias("__c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("__c").alias("__in"))
-            )
-        right = F.broadcast(contrib) if small_ranks else contrib
-        ranks = nodes.join(right, "node", "left").select(
-            "node",
-            (
-                F.lit(teleport)
-                + F.lit(damping) * F.coalesce(F.col("__in"), F.lit(0.0))
-            ).alias("rank"),
-        )
-    if normalize:
-        ranks = ranks.select("node", (F.col("rank") * F.lit(float(n))).alias("rank"))
-    # Same per-call cache release as `pagerank`: materialize via
-    # persist+count (recomputable if a harness drops blocks), then
-    # unpersist everything this call pinned; memoize only the result.
-    ranks = ranks.persist()
-    ranks.count()
-    e.unpersist()
-    nodes.unpersist()
-    (wsum if small_ranks else out).unpersist()
-    _rank_memo_put(mk, ranks)
-    return ranks
-
-
 def co_occurrence_weighted_half(
     facts: DataFrame,
     group_col: str,
@@ -909,22 +516,3 @@ def mirror_edges(half: DataFrame) -> DataFrame:
         *[F.col(c) for c in cols if c not in ("src", "dst")],
     )
     return half.unionByName(swapped.select(*cols))
-
-
-def co_occurrence_weighted_edges(
-    facts: DataFrame,
-    group_col: str,
-    item_col: str,
-    max_group: int = 64,
-) -> DataFrame:
-    """Directed co-occurrence edges weighted by the number of groups
-    linking the pair — `co_occurrence_edges` with counts instead of
-    distinct, same bounded in-group generation. The weight is
-    symmetric (both directions of a pair co-occur in the same
-    groups), so only the (src < dst) half is aggregated and the
-    mirror is a shuffle-free union — the same halved-shuffle move as
-    co_occurrence_edges."""
-    und = ring_persist(
-        co_occurrence_weighted_half(facts, group_col, item_col, max_group)
-    )
-    return mirror_edges(und)

@@ -43,10 +43,6 @@ def re_token_count(t: Column) -> Column:
     ).cast("long")
 
 
-def word_count(text: Column) -> Column:
-    return F.size(F.split(text, " ")).cast("long")
-
-
 def marker_hits(text: Column, markers: list[str]) -> Column:
     """Occurrences of any marker word (whitespace tokenization)."""
     words = F.split(text, " ")
@@ -318,7 +314,8 @@ def lm_doc_score(
     # blocks; above the threshold both scoring joins drop the hint and
     # fall to shuffled hash/SMJ joins, which only need the shuffle the
     # instance stream would pay anyway. Same tiering pattern as
-    # extensions.graph.pagerank's broadcast-rounds cutover.
+    # extensions.graph.weighted_pagerank_from_half's broadcast-rounds
+    # cutover.
     small_model = c_bi.count() <= broadcast_types
     bi_side = F.broadcast(c_bi) if small_model else c_bi
     ctx_side = F.broadcast(c_ctx_v) if small_model else c_ctx_v

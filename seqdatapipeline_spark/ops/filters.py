@@ -58,13 +58,6 @@ def nonempty_check(df: DataFrame) -> DataFrame:
     return df.agg((F.count("*") > 0).alias("nonempty"))
 
 
-def assert_nonempty(df: DataFrame, what: str = "input") -> DataFrame:
-    """Fail-fast variant used by the pipeline DAG runner."""
-    if df.limit(1).count() == 0:
-        raise ValueError(f"{what} is empty (reference guard tools.py:116)")
-    return df
-
-
 def filter_whitelist(df: DataFrame, col: str, allowed: list[str], casefold: bool = True) -> DataFrame:
     """Application whitelist (reference pipelineParser.py:90-92:
     application ∉ {rna-seq, gdna-seq, chip/clip-seq, atac-seq} → reject)."""

@@ -81,12 +81,6 @@ def mate_number_sra(read_id: Column) -> Column:
     return F.element_at(F.split(read_id, r"\."), -1).cast("int")
 
 
-def mate_number_illumina(desc: Column) -> Column:
-    """Illumina mate number: first char of the 2nd header field
-    (reference tools.py:770-771)."""
-    return F.element_at(F.split(desc, ":"), 1).cast("int")
-
-
 def abs_int(s: Column) -> Column:
     """``abs(int(x))`` with truncation-toward-zero (reference
     tools.py:295-296 on TLEN strings)."""

@@ -17,7 +17,7 @@ from .extensions import similarity as sim
 from .extensions import textstats as tx
 from .io import layout as lay
 from .registry import _t, _t_events_curated, q
-from .session import fan_out, persist_for_rescan, rescan_gate_fires, ring_persist
+from .session import fan_out, persist_for_rescan
 
 # Shared CTE fragments for shingle-based oracles.
 _SHINGLES3 = """
@@ -3155,7 +3155,8 @@ _PR_ITER = """c{i} AS (
 )
 def q_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (3 synchronous rounds, damping 0.85) over the item
-    co-order graph (extensions.graph.pagerank). Each round is one
+    co-order graph (extensions.graph.weighted_pagerank_from_half at
+    unit weights: every edge's share is 1/degree). Each round is one
     equi-join + one map-side-combinable groupBy — the Pregel matvec
     expressed declaratively; both join sides are pre-partitioned on
     the node key so every round reuses one exchange. The undirected
@@ -3175,8 +3176,9 @@ def q_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with no_aqe(spark):
         half = _co_order_half_maybe_curated(spark, sf_dir)
-        pr = gr.pagerank_from_half(
-            half.select("src", "dst"), iters=3, damping=0.85, normalize=True
+        pr = gr.weighted_pagerank_from_half(
+            half.select("src", "dst", F.lit(1.0).alias("w")),
+            iters=3, damping=0.85, normalize=True,
         )
     return pr.select("node", F.round(F.col("rank"), 6).alias("rank_norm"))
 
@@ -3983,7 +3985,7 @@ _WPR_ITER = """c{i} AS (
 )
 def q_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank over the co-order graph (extensions.graph.
-    weighted_pagerank): link strength = number of orders pairing the
+    weighted_pagerank_from_half): link strength = number of orders pairing the
     two parts, rank distributed by weight share — the authority
     ranking a recommender actually wants (repeat co-purchases count
     more than one-off baskets). Same one-join-one-agg round shape and

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
 
@@ -63,11 +62,6 @@ def stream_parquet_table(
         .option("pathGlobFilter", f"{table}.parquet")
         .parquet(sf_dir)
     )
-
-
-def with_poll_trigger(writer: DataStreamWriter, interval: str = "12 hours") -> DataStreamWriter:
-    """Processing-time trigger replacing ``sleep 12h`` (scanner.sh:10)."""
-    return writer.trigger(processingTime=interval)
 
 
 def run_batches(

@@ -791,12 +791,27 @@ def test_srp_finds_constructed_near_dups(spark):
     assert (1, 2) in out and out[(1, 2)] > 0.99
 
 
-def test_embedding_near_dup_collapse_branches(spark):
+_VECTOR_PATHS = {
+    # srp has no block column: id 5 (v1 in block b) joins the v1 group.
+    "embedding": (
+        lambda df, t: dd.embedding_near_dup_pairs(df, block_col="label", threshold=t),
+        {(1, 2), (1, 3), (2, 3)},
+    ),
+    "srp": (
+        lambda df, t: dd.srp_near_dup_pairs(df, band_bits=4, threshold=t),
+        {(1, 2), (1, 3), (2, 3), (1, 5), (2, 5), (3, 5)},
+    ),
+}
+
+
+@pytest.mark.parametrize("path", sorted(_VECTOR_PATHS))
+def test_embedding_near_dup_collapse_branches(spark, path):
     """The distinct-vector collapse must reproduce the uncollapsed
     semantics: exact-duplicate vectors pair at cos 1.0 (within-group
     fan-out), duplicates of a matched vector inherit the
     representative pair's cosine (cross-group fan-out), zero vectors
     never pair (NaN cosine), and different blocks never compare."""
+    pairs, want = _VECTOR_PATHS[path]
     v1 = [1.0] + [0.0] * 63
     v2 = [1.0, 0.2] + [0.0] * 62          # cos(v1,v2) ~ 0.9806
     v3 = [0.0] * 63 + [1.0]               # orthogonal to v1/v2
@@ -809,21 +824,13 @@ def test_embedding_near_dup_collapse_branches(spark):
         (6, "a", z), (7, "a", z),           # zero vectors: never pair
     ]
     df = spark.createDataFrame(rows, "vec_id long, label string, embedding array<float>")
-    out = {
-        (r.vec_a, r.vec_b): r.cos
-        for r in dd.embedding_near_dup_pairs(
-            df, block_col="label", threshold=0.5
-        ).collect()
-    }
-    assert out[(1, 2)] == 1.0
+    out = {(r.vec_a, r.vec_b): r.cos for r in pairs(df, 0.5).collect()}
+    assert set(out) == want
+    assert all(out[p] == 1.0 for p in want if 3 not in p)
     assert out[(1, 3)] == out[(2, 3)] and 0.97 < out[(1, 3)] < 0.99
-    assert set(out) == {(1, 2), (1, 3), (2, 3)}
     # Degenerate threshold > 1.0 admits nothing — cos caps at 1.0, so
     # the within-group cos=1.0 fan-out must be gated too.
-    assert (
-        dd.embedding_near_dup_pairs(df, block_col="label", threshold=1.1).count()
-        == 0
-    )
+    assert pairs(df, 1.1).count() == 0
 
 
 def test_setsim_collapsed_degenerate_threshold(spark):

@@ -24,111 +24,68 @@ def _plan(df) -> str:
 # ---------------------------------------------------------------- pagerank
 
 
-@pytest.mark.parametrize(
+_TIERS = pytest.mark.parametrize(
     "cutover,bcast",
     [(100_000, 1_000_000), (0, 1_000_000), (0, 0)],
     ids=["local-finish", "broadcast-rounds", "partitioned-rounds"],
 )
-def test_pagerank_matches_numpy_power_iteration(spark, cutover, bcast):
-    # Directed graph with a hub; no dangling nodes (every node has an
-    # out-edge) to match the co-occurrence contract. All three tiers
-    # — driver-side finish, broadcast-rank rounds (broadcast_min_edges
-    # forced to 0 so the tiny graph takes that tier), fully
-    # partitioned rounds — must match the reference power iteration
-    # exactly.
-    edges = [
-        (0, 1), (1, 0), (1, 2), (2, 0), (2, 3), (3, 2), (3, 1), (0, 3),
-        (4, 0), (0, 4),
-    ]
-    df = spark.createDataFrame(edges, "src int, dst int")
-    got = {
-        r["node"]: r["rank"]
-        for r in gr.pagerank(
-            df, iters=3, damping=0.85,
-            local_finish_edges=cutover, broadcast_nodes=bcast,
-            broadcast_min_edges=0,
-        ).collect()
-    }
 
-    n = 5
-    deg = np.zeros(n)
-    for s, _ in edges:
-        deg[s] += 1
+
+def _numpy_pagerank(half, iters=3, damping=0.85):
+    """Reference power iteration over the mirrored (src, dst, w) list:
+    each node sends rank · w / Σw along every incident edge."""
+    n = 1 + max(max(s, d) for s, d, _ in half)
+    wsum = np.zeros(n)
+    for s, d, w in half:
+        wsum[s] += w
+        wsum[d] += w
     r = np.full(n, 1.0 / n)
-    for _ in range(3):
-        nxt = np.full(n, 0.15 / n)
-        for s, d in edges:
-            nxt[d] += 0.85 * r[s] / deg[s]
+    for _ in range(iters):
+        nxt = np.full(n, (1.0 - damping) / n)
+        for s, d, w in half:
+            nxt[d] += damping * r[s] * w / wsum[s]
+            nxt[s] += damping * r[d] * w / wsum[d]
         r = nxt
-    for i in range(n):
-        assert got[i] == pytest.approx(r[i], abs=1e-12)
+    return r
 
 
-@pytest.mark.parametrize(
-    "cutover,bcast",
-    [(1_000_000, 0), (0, 1_000_000), (0, 0)],
-    ids=["local-finish", "broadcast-rounds", "partitioned-rounds"],
-)
-def test_pagerank_from_half_matches_mirrored_pagerank(spark, cutover, bcast):
-    # The mirror-aware build (r12 optimization: deg/nodes derived from
-    # the half set, mirrored union never cached) must agree with
-    # pagerank over the explicit mirrored edge list on every tier.
-    half = [(0, 1), (0, 2), (1, 3), (2, 3), (0, 4), (3, 5)]
-    hdf = spark.createDataFrame(half, "src int, dst int").localCheckpoint()
-    want = {
-        r["node"]: r["rank"]
-        for r in gr.pagerank(
-            gr.mirror_edges(hdf), iters=3, damping=0.85, normalize=True,
-            local_finish_edges=cutover, broadcast_nodes=bcast,
-            broadcast_min_edges=0,
-        ).collect()
-    }
-    got = {
-        r["node"]: r["rank"]
-        for r in gr.pagerank_from_half(
-            hdf, iters=3, damping=0.85, normalize=True,
-            local_finish_edges=cutover, broadcast_nodes=bcast,
-            broadcast_min_edges=0,
-        ).collect()
-    }
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k] == pytest.approx(want[k], abs=1e-9)
-
-
-@pytest.mark.parametrize(
-    "cutover,bcast",
-    [(1_000_000, 0), (0, 1_000_000), (0, 0)],
-    ids=["local-finish", "broadcast-rounds", "partitioned-rounds"],
-)
-def test_weighted_pagerank_from_half_matches_mirrored(spark, cutover, bcast):
-    half = [(0, 1, 2.0), (0, 2, 1.0), (1, 3, 4.0), (2, 3, 1.0), (0, 4, 3.0)]
+def _assert_pagerank_matches_numpy(spark, half, cutover, bcast):
+    # All three tiers — driver-side finish, broadcast-rank rounds
+    # (broadcast_min_edges forced to 0 so the tiny graph takes that
+    # tier), fully partitioned rounds — must match the reference power
+    # iteration, raw and mean-1 normalized.
     hdf = spark.createDataFrame(half, "src int, dst int, w double").localCheckpoint()
-    want = {
-        r["node"]: r["rank"]
-        for r in gr.weighted_pagerank(
-            gr.mirror_edges(hdf), iters=3, damping=0.85, normalize=True,
-            local_finish_edges=cutover, broadcast_nodes=bcast,
-            broadcast_min_edges=0,
-        ).collect()
-    }
-    got = {
-        r["node"]: r["rank"]
-        for r in gr.weighted_pagerank_from_half(
-            hdf, iters=3, damping=0.85, normalize=True,
-            local_finish_edges=cutover, broadcast_nodes=bcast,
-            broadcast_min_edges=0,
-        ).collect()
-    }
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k] == pytest.approx(want[k], abs=1e-9)
+    want = _numpy_pagerank(half)
+    for normalize, scale in [(False, 1.0), (True, float(len(want)))]:
+        got = {
+            r["node"]: r["rank"]
+            for r in gr.weighted_pagerank_from_half(
+                hdf, iters=3, damping=0.85, normalize=normalize,
+                local_finish_edges=cutover, broadcast_nodes=bcast,
+                broadcast_min_edges=0,
+            ).collect()
+        }
+        assert set(got) == set(range(len(want)))
+        for i, r in enumerate(want):
+            assert got[i] == pytest.approx(r * scale, abs=1e-12)
+
+
+@_TIERS
+def test_pagerank_matches_numpy_power_iteration(spark, cutover, bcast):
+    # Unweighted PageRank is unit weights: share = 1 / degree. An
+    # undirected graph with a hub (node 0) and a pendant (node 5).
+    half = [(0, 1), (0, 2), (1, 3), (2, 3), (0, 4), (3, 5), (1, 2)]
+    _assert_pagerank_matches_numpy(
+        spark, [(s, d, 1.0) for s, d in half], cutover, bcast
+    )
 
 
 def test_pagerank_conserves_mass(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    edges = gr.co_occurrence_edges(li, "l_orderkey", "l_partkey")
-    pr = gr.pagerank(edges, iters=3, damping=0.85)
+    half = gr.co_occurrence_weighted_half(li, "l_orderkey", "l_partkey")
+    pr = gr.weighted_pagerank_from_half(
+        half.select("src", "dst", F.lit(1.0).alias("w")), iters=3, damping=0.85
+    )
     row = pr.agg(F.sum("rank").alias("s"), F.count("*").alias("n")).collect()[0]
     # Undirected edge set -> no dangling mass: total rank stays 1.
     assert row["s"] == pytest.approx(1.0, abs=1e-9)
@@ -138,8 +95,11 @@ def test_pagerank_conserves_mass(spark, sf_dir):
 def test_degree_stats_from_half_matches_mirrored(spark):
     half = [(0, 1), (0, 2), (1, 3), (2, 3), (0, 4), (3, 5)]
     hdf = spark.createDataFrame(half, "src int, dst int")
+    mirrored = half + [(d, s) for s, d in half]
+    nodes = {u for e in mirrored for u in e}
     want = sorted(
-        map(tuple, gr.degree_stats(gr.mirror_edges(hdf)).collect())
+        (u, sum(s == u for s, _ in mirrored), sum(d == u for _, d in mirrored))
+        for u in nodes
     )
     got = sorted(map(tuple, gr.degree_stats_from_half(hdf).collect()))
     assert got == want
@@ -169,10 +129,12 @@ def test_co_occurrence_mega_group_dropped(spark):
                          ids=["partitioned-rounds", "broadcast-rounds"])
 def test_pagerank_plan_no_cartesian(spark, sf_dir, bcast):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    edges = gr.co_occurrence_edges(li, "l_orderkey", "l_partkey")
+    half = gr.co_occurrence_weighted_half(li, "l_orderkey", "l_partkey")
     plan = _plan(
-        gr.pagerank(edges, iters=3, local_finish_edges=0,
-                    broadcast_nodes=bcast, broadcast_min_edges=0)
+        gr.weighted_pagerank_from_half(
+            half, iters=3, local_finish_edges=0,
+            broadcast_nodes=bcast, broadcast_min_edges=0,
+        )
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -479,43 +441,30 @@ def test_setsim_prefix_join_no_false_negatives(spark, sf_dir):
     assert got == expected
 
 
-@pytest.mark.parametrize(
-    "cutover,bcast",
-    [(100_000, 1_000_000), (0, 1_000_000), (0, 0)],
-    ids=["local-finish", "broadcast-rounds", "partitioned-rounds"],
-)
+@_TIERS
 def test_weighted_pagerank_matches_numpy(spark, cutover, bcast):
-    # weighted edges: node 0 sends 3/4 of its rank to 1, 1/4 to 2
-    edges = [(0, 1, 3.0), (0, 2, 1.0), (1, 0, 1.0), (2, 0, 2.0), (2, 1, 2.0)]
-    df = spark.createDataFrame(edges, "src int, dst int, w double")
-    got = {
-        r["node"]: r["rank"]
-        for r in gr.weighted_pagerank(
-            df, iters=3, damping=0.85,
-            local_finish_edges=cutover, broadcast_nodes=bcast,
-            broadcast_min_edges=0,
-        ).collect()
-    }
-    n = 3
-    wsum = {0: 4.0, 1: 1.0, 2: 4.0}
-    r = np.full(n, 1.0 / n)
-    for _ in range(3):
-        nxt = np.full(n, 0.15 / n)
-        for s, d, w in edges:
-            nxt[d] += 0.85 * r[s] * (w / wsum[s])
-        r = nxt
-    for i in range(n):
-        assert got[i] == pytest.approx(r[i], abs=1e-12)
+    # Node 0 sends 3/6 of its rank to 1, 1/6 to 2 and 2/6 to 4.
+    half = [(0, 1, 3.0), (0, 2, 1.0), (1, 2, 2.0), (1, 3, 4.0), (2, 3, 1.0), (0, 4, 2.0)]
+    _assert_pagerank_matches_numpy(spark, half, cutover, bcast)
 
 
 def test_weighted_pagerank_reduces_to_uniform_on_equal_weights(spark):
-    edges = [(0, 1), (1, 0), (1, 2), (2, 0)]
-    uw = spark.createDataFrame(edges, "src int, dst int")
-    ww = spark.createDataFrame([(s, d, 7.0) for s, d in edges], "src int, dst int, w double")
-    a = {r["node"]: r["rank"] for r in gr.pagerank(uw, iters=3).collect()}
-    b = {r["node"]: r["rank"] for r in gr.weighted_pagerank(ww, iters=3).collect()}
-    for k in a:
-        assert a[k] == pytest.approx(b[k], abs=1e-12)
+    half = [(0, 1), (1, 2), (0, 2), (2, 3)]
+    ranks = [
+        {
+            r["node"]: r["rank"]
+            for r in gr.weighted_pagerank_from_half(
+                spark.createDataFrame(
+                    [(s, d, w) for s, d in half], "src int, dst int, w double"
+                ),
+                iters=3,
+            ).collect()
+        }
+        for w in (1.0, 7.0)
+    ]
+    assert set(ranks[0]) == set(ranks[1]) == {0, 1, 2, 3}
+    for k in ranks[0]:
+        assert ranks[0][k] == pytest.approx(ranks[1][k], abs=1e-12)
 
 
 def test_plan_fingerprint_refuses_driver_built_frames(spark, sf_dir):
