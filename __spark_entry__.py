@@ -41,9 +41,11 @@ def entry(spark: SparkSession) -> DataFrame:
 _PRIORITY = [
     "form_scan",  # canary, last green r13
     "gene_read_count",  # canary, last green r13
+    "triangle_count",  # CHANGED since green, last green r9
     "dedup_embedding_cosine",  # CHANGED since green, last green r12
     "srp_embedding_pairs",  # CHANGED since green, last green r12
     "graph_degree_stats",  # CHANGED since green, last green r12
+    "feature_interval_join",  # CHANGED since green, last green r12
     "minhash_jaccard_estimate",  # CHANGED since green, last green r13
     "minhash_containment",  # CHANGED since green, last green r13
     "setsim_prefix_join",  # CHANGED since green, last green r13
@@ -52,6 +54,12 @@ _PRIORITY = [
     "pagerank_iter",  # CHANGED since green, last green r13
     "pagerank_weighted",  # CHANGED since green, last green r13
     "lm_doc_score",  # CHANGED since green, last green r13
+    "dedup_minhash_clusters",  # CHANGED since green, last green r13
+    "setsim_clusters",  # CHANGED since green, last green r13
+    "lsh_recall_metrics",  # CHANGED since green, last green r13
+    "semdedup_prune",  # CHANGED since green, last green r13
+    "quality_percentile_by_source",  # CHANGED since green, last green r13
+    "knn_graph",  # CHANGED since green, last green r13
     "bpe_pair_merge",  # last green r7
     "stream_late_monitor",  # last green r7
     "dedup_threshold_sweep",  # last green r7
@@ -81,14 +89,6 @@ _PRIORITY = [
     "lsh_index_stats",  # last green r8
     "shard_balance_report",  # last green r8
     "neardup_review_sample",  # last green r8
-    "token_budget_planner",  # last green r8
-    "minhash_band_tuner",  # last green r8
-    "software_version_scan",  # last green r9
-    "hist_tsv_sink",  # last green r9
-    "email_sink",  # last green r9
-    "trim_report_sink",  # last green r9
-    "filter_not_chrm",  # last green r9
-    "filter_mapped_flag",  # last green r9
 ]
 
 

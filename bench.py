@@ -318,16 +318,9 @@ def _drop_persisted(spark) -> None:
     timing that hits it measures a dict lookup, not the operator —
     r7's published pagerank_iter 0.237s was such a hit. Pins must
     regress when the ALGORITHM regresses."""
-    from seqdatapipeline_spark.extensions.dedup import _dup_stats_clear
-    from seqdatapipeline_spark.extensions.graph import _rank_memo_clear
-    from seqdatapipeline_spark.ops.joins import _adaptive_stats_clear
-    from seqdatapipeline_spark.session import ring_clear
+    from seqdatapipeline_spark.session import clear_memos
 
-    _rank_memo_clear()
-    _adaptive_stats_clear()
-    _dup_stats_clear()  # the LSH collapse-dispatch stat (r12)
-    ring_clear()  # release ring-registered SQL cache entries
-    # cleanly before the raw unpersist sweep below
+    clear_memos()  # every session.Memo: result memos + persist ring
     jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
     it = jmap.values().iterator()
     while it.hasNext():
@@ -427,21 +420,26 @@ def run_headline(spark, queries, sf_dir: str, sf: float, only: set, pins: dict,
             warm = []
             for _ in range(3):
                 s0, j0 = _cpu_steal_total()
+                jobs0 = max(tracker.getJobIdsForGroup(None) or [-1])
                 t0 = time.perf_counter()
                 df = fn(spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()
                 w = time.perf_counter() - t0
+                jobs = max(tracker.getJobIdsForGroup(None) or [-1]) - jobs0
                 s1, j1 = _cpu_steal_total()
                 if not warm or w < min(warm):
                     re_steal = 100.0 * (s1 - s0) / max(j1 - j0, 1)
+                    re_jobs = jobs
                 warm.append(w)
                 _drop_persisted(spark)
             if min(warm) < timings[name]:
-                # The re-measure replaces the wall, so its steal
-                # reading must replace the stamp too — otherwise the
-                # artifact pairs one run's wall with another's steal.
+                # The re-measure replaces the wall, so its steal and
+                # job-count readings must replace the stamps too —
+                # otherwise the artifact (and adj_sec) pairs one run's
+                # wall with another run's steal or jobs.
                 timings[name] = round(min(warm), 3)
                 steal_pct[name] = round(re_steal, 2)
+                n_jobs[name] = re_jobs
         out["value"] = round(sum(timings.values()), 3)
         out["regressions"] = {
             name: {

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import fan_out, ring_persist
+from ..session import Memo, fan_out, memo_key, ring_persist
 
 
 def _bucket_pairs(keyed: DataFrame, id_col: str, bucket_col: str, max_bucket: int | None = None) -> DataFrame:
@@ -437,13 +437,8 @@ def lsh_band_incidence(
     return sig.select(F.col(id_col), F.explode(bands).alias("band_key"))
 
 
-_DUP_STATS_MEMO: dict = {}
-
-
-def _dup_stats_clear() -> None:
-    """Drop the memoized duplication-factor stats (bench measurement
-    integrity: a timed run must pay the stats job, not a dict hit)."""
-    _DUP_STATS_MEMO.clear()
+_DUP_FACTORS = Memo("dup-factor", 64)
+_dup_stats_clear = _DUP_FACTORS.clear
 
 
 def _duplication_factor(docs: DataFrame, key_col: str) -> float:
@@ -451,10 +446,11 @@ def _duplication_factor(docs: DataFrame, key_col: str) -> float:
     the adaptive exact-dup collapse. HLL (approx_count_distinct)
     instead of exact: one map-side-combinable pass, no second shuffle,
     and a dispatch threshold needs no exactness. Memoized per
-    (session, plan semantics) like the interval dispatcher's stats —
-    serving sessions pay it once."""
-    key = (id(docs.sparkSession), docs.semanticHash())
-    hit = _DUP_STATS_MEMO.get(key)
+    session.memo_key like the interval dispatcher's stats — serving
+    sessions pay it once per source; driver-built frames are not
+    memoized."""
+    key = memo_key((docs,), key_col)
+    hit = _DUP_FACTORS.get(key)
     if hit is not None:
         return hit
     row = docs.agg(
@@ -462,7 +458,7 @@ def _duplication_factor(docs: DataFrame, key_col: str) -> float:
         F.approx_count_distinct(key_col).alias("__d"),
     ).first()
     factor = float(row["__n"]) / float(max(row["__d"], 1))
-    _DUP_STATS_MEMO[key] = factor
+    _DUP_FACTORS.put(key, factor)
     return factor
 
 

@@ -18,102 +18,16 @@ shape that survives 100 TB:
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import ring_persist
+from ..session import Memo, memo_key
 
-# Memoized final rank tables for weighted_pagerank_from_half:
-# (canonicalized edge plan, params) -> checkpointed ranks DataFrame.
-# Bounded replacement for the per-call cache() leak this module used
-# to have: the heavy per-call caches (edge list, degrees, node set)
-# are unpersisted before returning, and ONLY the model-sized result
-# survives here, FIFO-capped. Staleness contract matches Spark's own
-# plan cache (a persisted frame over mutated input files).
-_RANK_MEMO: "OrderedDict" = OrderedDict()
-_RANK_MEMO_CAP = 8
-
-
-def _rank_memo_key(edges: DataFrame, *params):
-    from ..session import plan_fingerprint
-
-    plan = plan_fingerprint(edges)
-    if plan is None:
-        # Driver-built edge lists (createDataFrame) canonicalize
-        # without their rows — memoizing them would serve one graph's
-        # ranks for another. File-backed plans only.
-        return None
-    return (plan, *params)
-
-
-def _rank_memo_put(key, ranks: DataFrame) -> None:
-    if key is None:
-        return
-    while len(_RANK_MEMO) >= _RANK_MEMO_CAP:
-        _, old = _RANK_MEMO.popitem(last=False)
-        try:
-            # CacheManager holds SQL cache entries until explicitly
-            # released (never GC-reclaimed): dropping the handle
-            # without unpersist would leak the evicted rank table's
-            # executor storage for the session lifetime.
-            old.unpersist()
-        except Exception:
-            pass
-    _RANK_MEMO[key] = ranks
-
-
-def _rank_memo_clear() -> None:
-    """Release every memoized rank table (bench/test hook — bench.py
-    calls this inside drop_persisted() so warm timings measure the
-    algorithm, not a memo hit)."""
-    while _RANK_MEMO:
-        _, old = _RANK_MEMO.popitem(last=False)
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-
-
-def co_occurrence_edges(
-    facts: DataFrame,
-    group_col: str,
-    item_col: str,
-    max_group: int = 64,
-) -> DataFrame:
-    """Undirected item-item edges: two items are linked when they
-    appear in the same group (parts in one order, docs in one
-    bucket). Pairs are generated INSIDE each group after a
-    collect_set bounded by `max_group` — a q-item group emits q·(q-1)
-    directed edges, and groups above the bound are dropped the same
-    way dedup drops degenerate LSH mega-buckets (a group that large
-    links everything to everything and carries no signal). The fact
-    table is never self-joined. Only the (src < dst) half is ever
-    shuffled: the edge set is symmetric by construction, so the
-    distinct runs over half the pair mass and the mirror is a
-    shuffle-free union afterward (measured 1.45s -> 0.99s at sf0.1).
-    The half-set is persisted so the union's two branches read one
-    materialization instead of re-deriving the groupBy + distinct per
-    branch (the mirrored projection breaks exchange reuse; persist,
-    not lazy localCheckpoint, because the latter runs analysis+toRdd
-    on the DRIVER at build time — measured ~0.7s before any job)."""
-    items = (
-        facts.groupBy(group_col)
-        .agg(F.collect_set(F.col(item_col)).alias("__items"))
-        .filter(F.size("__items").between(2, max_group))
-    )
-    a = F.explode(F.col("__items")).alias("src")
-    und = (
-        items.select(a, F.col("__items"))
-        .select(F.col("src"), F.explode(F.col("__items")).alias("dst"))
-        .filter(F.col("src") < F.col("dst"))
-        .distinct()
-        .transform(ring_persist)
-    )
-    return und.unionByName(
-        und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+# Memoized final rank tables for weighted_pagerank_from_half. The heavy
+# per-call caches (edge list, degrees, node set) are unpersisted before
+# returning; ONLY the model-sized result survives here, FIFO-capped.
+_RANKS = Memo("pagerank-ranks", 8)
+_rank_memo_clear = _RANKS.clear
 
 
 def _pagerank_local_finish(
@@ -224,8 +138,8 @@ def weighted_pagerank_from_half(
         F.col(dst).alias("dst"),
         F.col(weight).cast("double").alias("__w"),
     )
-    mk = _rank_memo_key(h, iters, damping, normalize)
-    hit = _RANK_MEMO.get(mk) if mk is not None else None
+    mk = memo_key((h,), iters, damping, normalize)
+    hit = _RANKS.get(mk)
     if hit is not None:
         return hit
     n_half = h.count()
@@ -239,7 +153,7 @@ def weighted_pagerank_from_half(
             (s, d, w / wsum[s]) for s, d, w in rows
         ] + [(d, s, w / wsum[d]) for s, d, w in rows]
         res = _pagerank_local_finish(h, shares, iters, damping, normalize)
-        _rank_memo_put(mk, res)
+        _RANKS.put(mk, res)
         return res
     wsum = (
         h.select(F.explode(F.array("src", "dst")).alias("node"), "__w")
@@ -317,7 +231,7 @@ def weighted_pagerank_from_half(
     wsum.unpersist()
     if not small_ranks:
         out.unpersist()
-    _rank_memo_put(mk, ranks)
+    _RANKS.put(mk, ranks, ranks)
     return ranks
 
 
@@ -346,8 +260,13 @@ def undirected_edges(
     item_col: str,
     max_group: int = 64,
 ) -> DataFrame:
-    """Unique undirected co-occurrence edges (u < v), same bounded
-    in-group generation as `co_occurrence_edges`."""
+    """Unique undirected co-occurrence edges (u < v): two items are
+    linked when they appear in the same group (parts in one order,
+    docs in one bucket). Pairs are generated INSIDE each group after a
+    collect_set bounded by `max_group`, and groups above the bound are
+    dropped the same way dedup drops degenerate LSH mega-buckets (a
+    group that large links everything to everything and carries no
+    signal). The fact table is never self-joined."""
     items = (
         facts.groupBy(group_col)
         .agg(F.collect_set(F.col(item_col)).alias("__items"))

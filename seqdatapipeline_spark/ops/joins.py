@@ -13,26 +13,15 @@ Scale design:
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# interval_count_adaptive's memoized planning statistics:
-# key -> (lo, hi, max_bn, n_pts, persisted bin-count DF, result DF).
-_ADAPTIVE_STATS: "OrderedDict" = OrderedDict()
+from ..session import Memo, memo_key
 
-
-def _adaptive_stats_clear() -> None:
-    """Release every memoized stats/plan entry (bench/test hook —
-    bench.py calls this inside drop_persisted() so warm timings
-    measure stats jobs + plan build, not a memo hit)."""
-    while _ADAPTIVE_STATS:
-        _, (*_, old_bc, _out) = _ADAPTIVE_STATS.popitem(last=False)
-        try:
-            old_bc.unpersist()
-        except Exception:
-            pass
+# interval_count_adaptive's memoized built plans; each entry holds its
+# persisted bin-count table.
+_INTERVAL_STATS = Memo("interval-stats", 8)
+_adaptive_stats_clear = _INTERVAL_STATS.clear
 
 
 def pe_mate_join(
@@ -671,8 +660,8 @@ def interval_count_adaptive(
     physical plan. Empty ``intervals`` (min/max NULL) short-circuits
     to an empty result of the correct schema without scanning points.
 
-    The collected stats AND the built result plan are MEMOIZED per
-    (canonicalized input plans, params) — the catalog-statistics +
+    The built result plan is MEMOIZED per (session, input
+    fingerprints, params; session.memo_key) — the catalog-statistics +
     prepared-statement move: a repeat call over the same inputs
     returns the immutable already-built DataFrame, skipping both the
     two driver-sequential stats jobs (~0.5s of job-launch latency on
@@ -690,26 +679,20 @@ def interval_count_adaptive(
         ivl_end=ivl_end,
         count_col=count_col,
     )
-    from ..session import plan_fingerprint
-
-    ck = None
-    fp_p, fp_i = plan_fingerprint(points), plan_fingerprint(intervals)
-    if fp_p is not None and fp_i is not None:
-        ck = (
-            fp_p,
-            fp_i,
-            tuple(group_cols),
-            tuned_bin,
-            max_points_per_bin,
-            tuple(sorted(kw.items())),
-        )
-    cached = _ADAPTIVE_STATS.get(ck) if ck is not None else None
+    ck = memo_key(
+        (points, intervals),
+        tuple(group_cols),
+        tuned_bin,
+        max_points_per_bin,
+        tuple(sorted(kw.items())),
+    )
+    cached = _INTERVAL_STATS.get(ck)
     if cached is not None:
         # Prepared-statement hit: the built plan is immutable, hand it
         # back without re-spending the ~0.5s of py4j plan construction
         # (the measured dominant cost of repeat calls — see the
         # perf-lessons note on Column-tree build cost).
-        return cached[-1]
+        return cached
     # The two stats actions below are driver-sequential and
     # latency-bound, not throughput-bound: a min/max over the interval
     # dim and an agg over the bounded bin-count table. Under AQE each
@@ -770,11 +753,7 @@ def interval_count_adaptive(
         out = interval_count_prefix(
             points, intervals, group_cols, bin_size=width, bounds=(lo, hi, n_pts), **kw
         )
-    if ck is not None:
-        while len(_ADAPTIVE_STATS) >= 8:
-            _, (*_, old_bc, _out) = _ADAPTIVE_STATS.popitem(last=False)
-            old_bc.unpersist()
-        _ADAPTIVE_STATS[ck] = (lo, hi, max_bn, n_pts, bin_counts, out)
+    _INTERVAL_STATS.put(ck, out, bin_counts)
     return out
 
 

@@ -11,7 +11,10 @@ thresholds replace the reference's shared-memory genome index
 from __future__ import annotations
 
 import hashlib
+import logging
 import os
+import threading
+from collections import OrderedDict
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -109,138 +112,13 @@ def fan_out(df: DataFrame, *cols: str, min_partitions: int | None = None) -> Dat
     return df.repartition(target, *cols) if cols else df.repartition(target)
 
 
-# Bounded registry of library-internal persists (ring_persist). Spark's
-# CacheManager holds SQL cache entries until explicitly released — the
-# blocks are LRU-evictable but the ENTRIES are not GC-reclaimed — so a
-# library that persists per call over varying inputs leaks entries for
-# the session lifetime unless something releases them.
-_PERSIST_RING: "list[DataFrame]" = []
-_PERSIST_RING_CAP = 16
-_PERSIST_RING_LOCK = __import__("threading").Lock()
-
 # no_aqe serialization: sections hold the RLock across their body so
 # concurrent no_aqe callers queue instead of interleaving restores;
 # a thread-local {id(session): depth} map makes same-thread,
 # same-session nesting a no-op below the outermost block while still
 # disabling AQE per-session when sessions nest.
-_NO_AQE_LOCK = __import__("threading").RLock()
-_NO_AQE_STATE = __import__("threading").local()
-_ring_log = __import__("logging").getLogger("seqdatapipeline_spark.ring")
-
-
-def ring_persist(df: DataFrame, storage_level=None) -> DataFrame:
-    """persist() with a bounded session-lifetime: registers the frame
-    in a FIFO ring (cap 16) and unpersists the oldest entry on
-    overflow. Evicting a frame that a long-lived returned plan still
-    references is CORRECT (the plan recomputes that subtree on next
-    use) — the ring trades bounded recompute for a hard bound on
-    CacheManager entries, mirroring _ADAPTIVE_STATS/_RANK_MEMO.
-
-    Known sharp edge (ADVICE r8): the ring is process-global and
-    shared by batch AND streaming consumers — a long-lived streaming
-    query whose plan references a ring-evicted persist silently
-    recomputes that subtree per micro-batch. Eviction is logged
-    (INFO) so such recompute cliffs are diagnosable; list mutation is
-    lock-guarded for multi-threaded callers."""
-    out = df.persist(storage_level) if storage_level is not None else df.persist()
-    evicted = []
-    with _PERSIST_RING_LOCK:
-        _PERSIST_RING.append(out)
-        while len(_PERSIST_RING) > _PERSIST_RING_CAP:
-            evicted.append(_PERSIST_RING.pop(0))
-    for old in evicted:
-        _ring_log.info(
-            "persist-ring eviction (cap %d): unpersisting oldest entry — "
-            "any live plan referencing it recomputes on next use",
-            _PERSIST_RING_CAP,
-        )
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    return out
-
-
-def ring_clear() -> None:
-    """Release every ring-registered persist (bench/test hook)."""
-    with _PERSIST_RING_LOCK:
-        drained, _PERSIST_RING[:] = _PERSIST_RING[:], []
-    for old in drained:
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-
-
-def persist_for_rescan(
-    df: DataFrame,
-    gate: "DataFrame | None" = None,
-    min_bytes: int | None = None,
-    storage_level=None,
-) -> DataFrame:
-    """Size-adaptive persist for a derived projection that downstream
-    plan branches re-evaluate several times (Spark shares no common
-    subtrees across join/union arms): persist it — bounded, via
-    ring_persist — when the subtree it re-derives is big enough that
-    re-scanning beats the cache barrier, and leave the plan untouched
-    otherwise.
-
-    The dispatch reads the Catalyst size ESTIMATE of ``gate`` (the
-    expensive input being re-scanned; defaults to ``df``) from the
-    optimizer — file-statistics-based, driver-side, zero jobs — and
-    compares it to ``min_bytes`` (conf
-    ``spark.seqdatapipeline.rescanPersistBytes``, default 256 MB).
-    Below the threshold a re-scan costs less than the persist's extra
-    AQE stage-materialization barriers (measured on
-    quality_percentile_by_source at sf0.1: persist = +3 driver jobs
-    for a wall within noise); above it each avoided re-evaluation
-    saves a full scan+compute pass of the gated subtree, which at
-    100 TB dominates any cache cost — the same size-tiered reasoning
-    as Catalyst's broadcast threshold, parameterized so a deployment
-    sizes it to its storage bandwidth.
-
-    GATE SEMANTICS (ADVICE r12): ``min_bytes`` is compared against the
-    estimate of the RE-SCANNED INPUT (``gate``), not of the persisted
-    projection ``df`` — the dispatch asks "is re-deriving this worth
-    avoiding", and the cost of re-deriving is a pass over the gate
-    subtree. A wide gate feeding a narrow derived table therefore
-    fires conservatively-early (the cache is cheaper than the estimate
-    suggests), never late. ``storage_level`` controls the persist of
-    corpus-cardinality projections (default: Spark's MEMORY_AND_DESER
-    via plain persist()); pass e.g. ``StorageLevel.MEMORY_AND_DISK``
-    when the cached projection itself is too wide to sit in executor
-    memory at deployment scale."""
-    if not rescan_gate_fires(gate if gate is not None else df, min_bytes):
-        return df
-    return ring_persist(df, storage_level=storage_level)
-
-
-def rescan_gate_fires(gate: DataFrame, min_bytes: int | None = None) -> bool:
-    """The persist_for_rescan dispatch predicate, exposed for callers
-    that switch PLAN FORMS on the same size gate (r13 dsir: below the
-    gate the two-pass token-level plan must stay byte-unchanged, so
-    the caller needs the decision BEFORE building the compact-table
-    form). Driver-side Catalyst file-statistics estimate, zero jobs;
-    False when the estimate is unavailable (keep the untouched
-    plan — same conservative default as persist_for_rescan)."""
-    spark = gate.sparkSession
-    if min_bytes is None:
-        try:
-            min_bytes = int(
-                spark.conf.get(
-                    "spark.seqdatapipeline.rescanPersistBytes",
-                    str(256 * 1024 * 1024),
-                )
-            )
-        except Exception:
-            min_bytes = 256 * 1024 * 1024
-    try:
-        est = int(
-            str(gate._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:
-        return False  # estimate unavailable: keep the untouched plan
-    return est >= min_bytes
+_NO_AQE_LOCK = threading.RLock()
+_NO_AQE_STATE = threading.local()
 
 
 @contextmanager
@@ -356,3 +234,155 @@ def plan_fingerprint(df: DataFrame) -> str | None:
         return None
     h = hashlib.sha256("\n".join(files).encode()).hexdigest()[:16]
     return f"{h}:{s}"
+
+
+class Memo:
+    """One session-reuse memo: a bounded FIFO of ``key -> value`` plus
+    the persisted frames each entry holds, behind a lock. Result memos
+    (interval stats + built plan, PageRank ranks, duplication factors)
+    and the persist ring are all instances, so ``clear_memos()``
+    releases every one of them in one call.
+
+    Spark's CacheManager holds SQL cache entries until explicitly
+    released — the blocks are LRU-evictable but the ENTRIES are never
+    GC-reclaimed — so evicting or clearing an entry unpersists the
+    frames stored with it and logs one INFO line naming the memo. A
+    live plan that still references a released frame is correct: it
+    recomputes that subtree on next use, which is the recompute cliff
+    the log line makes diagnosable. ``key=None`` (no durable data
+    identity, see memo_key) is never stored and never hits."""
+
+    def __init__(self, name: str, cap: int):
+        self.name, self.cap = name, cap
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+        _MEMOS.append(self)
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def get(self, key):
+        if key is None:
+            return None
+        with self._lock:
+            hit = self._entries.get(key)
+        return None if hit is None else hit[0]
+
+    def put(self, key, value, *frames: DataFrame) -> None:
+        """Store ``value``; ``frames`` are unpersisted on release."""
+        if key is None:
+            return
+        evicted = []
+        with self._lock:
+            self._entries[key] = (value, frames)
+            while len(self._entries) > self.cap:
+                evicted.append(self._entries.popitem(last=False)[1])
+        self._release(evicted, f"eviction (cap {self.cap})")
+
+    def clear(self) -> None:
+        with self._lock:
+            drained = list(self._entries.values())
+            self._entries.clear()
+        self._release(drained, "clear")
+
+    def _release(self, entries, why: str) -> None:
+        for _, frames in entries:
+            _memo_log.info(
+                "memo %s %s: unpersisting %d frame(s)", self.name, why, len(frames)
+            )
+            for f in frames:
+                try:
+                    f.unpersist()
+                except Exception:
+                    pass  # owning session already stopped
+
+
+_MEMOS: "list[Memo]" = []
+_memo_log = logging.getLogger("seqdatapipeline_spark.memo")
+
+
+def memo_key(frames, *params):
+    """The one memo key: session id + plan_fingerprint of every input
+    frame + the call's parameters, or None (do not memoize) when any
+    frame has no durable data identity. The session id keeps a result
+    built on one session from being served to another (its frames
+    would run on the wrong session, or on a stopped SparkContext); the
+    fingerprints cover the input files, so a rewritten directory is a
+    new key."""
+    fps = [plan_fingerprint(f) for f in frames]
+    if None in fps:
+        return None
+    return (frames[0].sparkSession._jsparkSession.sessionUUID(), *fps, *params)
+
+
+def clear_memos() -> None:
+    """Release every Memo instance (bench/test hook: a warm timing
+    must measure the operator, not a memo hit)."""
+    for m in _MEMOS:
+        m.clear()
+
+
+# Library-internal persists: a frame persisted per call over varying
+# inputs would otherwise hold a CacheManager entry for the session
+# lifetime. Process-global and shared by batch AND streaming
+# consumers (ADVICE r8): a long-lived streaming query whose plan
+# references an evicted persist recomputes that subtree per
+# micro-batch — the eviction log line names this memo.
+_RING = Memo("persist-ring", 16)
+ring_clear = _RING.clear
+
+
+def ring_persist(df: DataFrame) -> DataFrame:
+    """persist() with a bounded lifetime: the frame is held by the
+    cap-16 persist-ring memo and unpersisted when it is evicted or
+    cleared."""
+    out = df.persist()
+    _RING.put(id(out), out, out)
+    return out
+
+
+def persist_for_rescan(df: DataFrame, gate: "DataFrame | None" = None) -> DataFrame:
+    """Size-adaptive persist for a derived projection that downstream
+    plan branches re-evaluate several times (Spark shares no common
+    subtrees across join/union arms): persist it — bounded, via
+    ring_persist — when the subtree it re-derives is big enough that
+    re-scanning beats the cache barrier, and leave the plan untouched
+    otherwise.
+
+    The dispatch reads the Catalyst size ESTIMATE of ``gate`` (the
+    expensive input being re-scanned; defaults to ``df``) from the
+    optimizer — file-statistics-based, driver-side, zero jobs — and
+    compares it to the conf ``spark.seqdatapipeline.rescanPersistBytes``
+    (default 256 MB). Below the threshold a re-scan costs less than the
+    persist's extra AQE stage-materialization barriers (measured on
+    quality_percentile_by_source at sf0.1: persist = +3 driver jobs
+    for a wall within noise); above it each avoided re-evaluation
+    saves a full scan+compute pass of the gated subtree, which at
+    100 TB dominates any cache cost — the same size-tiered reasoning
+    as Catalyst's broadcast threshold, parameterized so a deployment
+    sizes it to its storage bandwidth. An unavailable estimate keeps
+    the untouched plan.
+
+    GATE SEMANTICS (ADVICE r12): the threshold is compared against the
+    estimate of the RE-SCANNED INPUT (``gate``), not of the persisted
+    projection ``df`` — the dispatch asks "is re-deriving this worth
+    avoiding", and the cost of re-deriving is a pass over the gate
+    subtree. A wide gate feeding a narrow derived table therefore
+    fires conservatively-early (the cache is cheaper than the estimate
+    suggests), never late."""
+    gate = gate if gate is not None else df
+    try:
+        min_bytes = int(
+            gate.sparkSession.conf.get(
+                "spark.seqdatapipeline.rescanPersistBytes", str(256 * 1024 * 1024)
+            )
+        )
+    except Exception:
+        min_bytes = 256 * 1024 * 1024
+    try:
+        est = int(
+            str(gate._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        )
+    except Exception:
+        return df
+    return ring_persist(df) if est >= min_bytes else df

@@ -58,3 +58,27 @@ def test_pin_tables_cover_the_headline():
         extra = set(table) - headline
         assert not missing, f"{table_name} missing headline queries: {missing}"
         assert not extra, f"{table_name} pins non-headline queries: {extra}"
+
+
+def test_benchmark_harness_clears_every_memo(spark):
+    """perfbench/workloads.py's clear_memos (frozen with the benchmark)
+    must empty every session.Memo between timed passes; a renamed
+    clear hook or a memo it misses fails here, not in a benchmark run."""
+    from seqdatapipeline_spark.extensions import dedup, graph  # noqa: F401
+    from seqdatapipeline_spark.ops import joins  # noqa: F401
+    from seqdatapipeline_spark.session import _MEMOS
+
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_workloads", os.path.join(REPO, "perfbench", "workloads.py")
+    )
+    workloads = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(workloads)
+
+    assert {"interval-stats", "pagerank-ranks", "dup-factor", "persist-ring"} <= {
+        m.name for m in _MEMOS
+    }
+    for m in _MEMOS:
+        m.put(("harness-probe", m.name), m.name, spark.range(1).persist())
+        assert len(m) > 0
+    workloads.clear_memos(spark)
+    assert {m.name: len(m) for m in _MEMOS} == {m.name: 0 for m in _MEMOS}

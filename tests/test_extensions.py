@@ -102,8 +102,7 @@ def test_minhash_collapse_dispatch_is_adaptive(spark):
     got = {(r.doc_a, r.doc_b) for r in dd.minhash_dedup_pairs(hashed).collect()}
     assert got == want
     # unique corpus → factor ~1.0 → the direct branch was dispatched
-    (factor,) = [v for v in dd._DUP_STATS_MEMO.values()]
-    assert factor < 1.25
+    assert dd._duplication_factor(hashed, "content_hash") < 1.25
 
     # mass duplication: every text x3 → factor ~3 → collapse branch;
     # the fan-out recovery must reproduce the uncollapsed pair set.
@@ -112,17 +111,40 @@ def test_minhash_collapse_dispatch_is_adaptive(spark):
     ).union(uniq.withColumn("doc_id", F.col("doc_id") + 20))
     want_dup = {(r.doc_a, r.doc_b) for r in dd.minhash_dedup_pairs(dup).collect()}
     dup_hashed = dup.withColumn("content_hash", F.md5("text"))
-    dd._dup_stats_clear()
     got_dup = {
         (r.doc_a, r.doc_b) for r in dd.minhash_dedup_pairs(dup_hashed).collect()
     }
     assert got_dup == want_dup
-    (factor_dup,) = [v for v in dd._DUP_STATS_MEMO.values()]
-    assert factor_dup >= 1.25
-    # the stat memoizes per (session, plan): a second call is a dict hit
-    assert dd._duplication_factor(dup_hashed.select("doc_id", "text", "content_hash"), "content_hash") >= 1.25
+    assert dd._duplication_factor(dup_hashed, "content_hash") >= 1.25
+    # driver-built frames have no durable data identity: never memoized
+    assert len(dd._DUP_FACTORS) == 0
+
+
+def test_duplication_factor_memo_follows_rewritten_files(spark, tmp_path):
+    """The dup-factor memo is keyed by the input files, not just the
+    plan's semantics: rewriting a directory in place must not serve
+    the old factor, while a repeat call on unchanged files is a memo
+    hit (no job)."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "docs")
+    rows = [(i, BASE) for i in range(100)]
+    _doc_df(spark, rows).withColumn("content_hash", F.md5("text")).write.parquet(path)
     dd._dup_stats_clear()
-    assert not dd._DUP_STATS_MEMO
+    assert dd._duplication_factor(spark.read.parquet(path), "content_hash") == 100.0
+    again = spark.read.parquet(path)  # the read's footer job runs here
+    st = spark.sparkContext.statusTracker()
+    j0 = max(st.getJobIdsForGroup(None) or [-1])
+    assert dd._duplication_factor(again, "content_hash") == 100.0
+    assert max(st.getJobIdsForGroup(None) or [-1]) == j0  # memo hit
+
+    uniq = [(i, f"{BASE} {i}") for i in range(100)]
+    _doc_df(spark, uniq).withColumn("content_hash", F.md5("text")).write.mode(
+        "overwrite"
+    ).parquet(path)
+    assert dd._duplication_factor(spark.read.parquet(path), "content_hash") < 1.25
+    dd._dup_stats_clear()
+    assert len(dd._DUP_FACTORS) == 0
 
 
 def test_lsh_max_bucket_drops_mega_buckets(spark):

@@ -110,19 +110,36 @@ def test_co_occurrence_edges_symmetric_no_self_loops(spark):
         [(1, 10), (1, 11), (1, 12), (2, 10), (2, 10), (3, 99)],
         "g int, item int",
     )
-    e = gr.co_occurrence_edges(facts, "g", "item").collect()
-    pairs = {(r["src"], r["dst"]) for r in e}
-    assert all(s != d for s, d in pairs)
-    assert pairs == {(a, b) for a, b in pairs if (b, a) in pairs}  # symmetric
+    e = gr.undirected_edges(facts, "g", "item").collect()
+    pairs = {(r["u"], r["v"]) for r in e}
+    assert all(u < v for u, v in pairs)  # one row per edge, no self loops
     # group 2 collapses to one distinct item (no pair), group 3 is a singleton
-    assert {10, 11, 12} == {s for s, _ in pairs}
+    assert pairs == {(10, 11), (10, 12), (11, 12)}
 
 
 def test_co_occurrence_mega_group_dropped(spark):
     rows = [(1, i) for i in range(80)] + [(2, 1), (2, 2)]
     facts = spark.createDataFrame(rows, "g int, item int")
-    e = gr.co_occurrence_edges(facts, "g", "item", max_group=64)
-    assert e.count() == 2  # only group 2 survives the bound
+    e = gr.undirected_edges(facts, "g", "item", max_group=64)
+    assert e.count() == 1  # only group 2 survives the bound
+
+
+def test_pagerank_memo_is_session_scoped(spark, tmp_path):
+    """A memoized rank table belongs to the session that built it: the
+    same file-backed edges read from another session must be computed
+    there, not served the first session's frame."""
+    path = str(tmp_path / "half")
+    spark.createDataFrame(
+        [(0, 1, 1.0), (0, 2, 2.0), (1, 2, 1.0), (2, 3, 3.0)], "src int, dst int, w double"
+    ).write.parquet(path)
+    gr._rank_memo_clear()
+    r1 = gr.weighted_pagerank_from_half(spark.read.parquet(path))
+    assert gr.weighted_pagerank_from_half(spark.read.parquet(path)) is r1  # memo hit
+    new = spark.newSession()
+    res = gr.weighted_pagerank_from_half(new.read.parquet(path))
+    assert res.sparkSession is new
+    assert sorted(map(tuple, res.collect())) == sorted(map(tuple, r1.collect()))
+    gr._rank_memo_clear()
 
 
 @pytest.mark.parametrize("bcast", [0, 1_000_000],

@@ -205,9 +205,10 @@ def test_quality_percentile_persist_dispatch_output_invariant(spark):
     ring_clear()
     # Snapshot BEFORE the forced build (ADVICE r12): the shared pytest
     # session may hold persisted RDDs ring_clear() does not drain
-    # (_RANK_MEMO rank tables, _ADAPTIVE_STATS), so a bare `size() > 0`
-    # can pass without persist_for_rescan having persisted anything —
-    # only an INCREASE proves the dispatch fired.
+    # (the other session.Memo instances: rank tables, interval bin
+    # counts), so a bare `size() > 0` can pass without
+    # persist_for_rescan having persisted anything — only an INCREASE
+    # proves the dispatch fired.
     n_before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
     spark.conf.set("spark.seqdatapipeline.rescanPersistBytes", "0")
     try:
