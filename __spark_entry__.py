@@ -42,10 +42,14 @@ _PRIORITY = [
     "form_scan",  # canary, last green r13
     "gene_read_count",  # canary, last green r13
     "triangle_count",  # CHANGED since green, last green r9
+    "decontaminate_ngram",  # CHANGED since green, last green r11
     "dedup_embedding_cosine",  # CHANGED since green, last green r12
     "srp_embedding_pairs",  # CHANGED since green, last green r12
     "graph_degree_stats",  # CHANGED since green, last green r12
     "feature_interval_join",  # CHANGED since green, last green r12
+    "ann_ivf_topk",  # CHANGED since green, last green r12
+    "ann_ivf_pruned_topk",  # CHANGED since green, last green r12
+    "ann_recall_report",  # CHANGED since green, last green r12
     "minhash_jaccard_estimate",  # CHANGED since green, last green r13
     "minhash_containment",  # CHANGED since green, last green r13
     "setsim_prefix_join",  # CHANGED since green, last green r13
@@ -60,6 +64,7 @@ _PRIORITY = [
     "semdedup_prune",  # CHANGED since green, last green r13
     "quality_percentile_by_source",  # CHANGED since green, last green r13
     "knn_graph",  # CHANGED since green, last green r13
+    "ivf_pq_topk",  # CHANGED since green, last green r13
     "bpe_pair_merge",  # last green r7
     "stream_late_monitor",  # last green r7
     "dedup_threshold_sweep",  # last green r7
@@ -84,11 +89,6 @@ _PRIORITY = [
     "winsorize_stats",  # last green r8
     "pmi_bigrams",  # last green r8
     "rank_fusion_rrf",  # last green r8
-    "late_event_rate",  # last green r8
-    "quality_features_vector",  # last green r8
-    "lsh_index_stats",  # last green r8
-    "shard_balance_report",  # last green r8
-    "neardup_review_sample",  # last green r8
 ]
 
 

@@ -140,7 +140,7 @@ BEST_KNOWN = {
 # the exact-dup collapse adaptively on a memoized duplication-factor
 # stat (extensions/dedup.py — the collapse's ~8 extra AQE-barrier
 # jobs were the whole curated penalty on this low-duplication corpus;
-# measured 19 vs 11 driver jobs, scripts/ab_lsh_curated.py), so its
+# measured 19 vs 11 driver jobs, SCALING.md), so its
 # curated wall is the plain plan + 1 stats job: pin re-seeded from
 # the measured post-dispatch run (1.189 at lambda 81-90ms — ratchet
 # further when a quiet curated run lands).

@@ -48,7 +48,10 @@ recent boundary available.
 from __future__ import annotations
 
 import argparse
+import ast
+import dis
 import glob
+import importlib.util
 import inspect
 import json
 import os
@@ -142,8 +145,6 @@ def _ast_spans(path: str) -> dict[str, tuple[int, int]]:
     exempt body edits from the recheck computation."""
     if path in _AST_SPANS:
         return _AST_SPANS[path]
-    import ast
-
     with open(path) as f:
         tree = ast.parse(f.read())
     spans: dict[str, tuple[int, int]] = {}
@@ -217,6 +218,43 @@ def _names_used(fn) -> set[str]:
     return names
 
 
+def _local_imports(fn) -> list:
+    """Objects bound by fn's function-local imports (``from .extensions
+    import corpus as cp`` inside a registration body), resolved relative
+    to fn's module. They never show up in ``fn.__globals__``, so without
+    this an edit reached only through such an import would not flag its
+    queries."""
+    mod = sys.modules.get(getattr(fn, "__module__", ""), None)
+    package = getattr(mod, "__package__", None)
+    out: list = []
+    for code in _code_objects(fn.__code__):
+        # IMPORT_NAME pops the two constants loaded before it: the
+        # relative level and the from-list.
+        prev: list = [None, None]
+        target = None
+        for ins in dis.get_instructions(code):
+            if ins.opname == "IMPORT_NAME":
+                level, fromlist = prev
+                try:
+                    name = importlib.util.resolve_name("." * (level or 0) + ins.argval, package)
+                    target = importlib.import_module(name)
+                except (ImportError, ValueError):
+                    target = None
+                    continue
+                if not fromlist:
+                    out.append(target)
+            elif ins.opname == "IMPORT_FROM" and target is not None:
+                attr = getattr(target, ins.argval, None)
+                if attr is None:
+                    try:
+                        attr = importlib.import_module(f"{target.__name__}.{ins.argval}")
+                    except ImportError:
+                        continue
+                out.append(attr)
+            prev = [prev[1], ins.argval if ins.opname == "LOAD_CONST" else None]
+    return out
+
+
 def trace_spans(fn, seen: set | None = None) -> set[tuple[str, int, int]]:
     """Source spans of fn plus every package function/class/constant
     transitively reachable through its globals and closure."""
@@ -237,7 +275,7 @@ def trace_spans(fn, seen: set | None = None) -> set[tuple[str, int, int]]:
         c.cell_contents for c in (fn.__closure__ or ())
         if c.cell_contents is not None
     ] if getattr(fn, "__closure__", None) else []
-    resolved = [g[n] for n in names if n in g] + closure_vals
+    resolved = [g[n] for n in names if n in g] + closure_vals + _local_imports(fn)
     for obj in resolved:
         if isinstance(obj, types.ModuleType) and getattr(obj, "__name__", "").startswith(PKG):
             # attribute calls: lay.foo(...) — add module attrs named in
@@ -246,20 +284,14 @@ def trace_spans(fn, seen: set | None = None) -> set[tuple[str, int, int]]:
                 attr = getattr(obj, n, None)
                 if attr is None:
                     continue
-                if callable(attr) and _is_pkg_obj(attr):
-                    spans |= trace_spans(attr, seen)
-                elif not callable(attr):
+                if callable(attr):
+                    spans |= _trace_obj(attr, seen)
+                else:
                     cs = _const_span(obj, n)
                     if cs:
                         spans.add(cs)
-        elif inspect.isclass(obj) and _is_pkg_obj(obj):
-            s = _span(obj)
-            if s:
-                spans.add(s)
-            for _, meth in inspect.getmembers(obj, inspect.isfunction):
-                spans |= trace_spans(meth, seen)
         elif callable(obj) and _is_pkg_obj(obj):
-            spans |= trace_spans(obj, seen)
+            spans |= _trace_obj(obj, seen)
         elif not callable(obj) and not isinstance(obj, types.ModuleType):
             # module-level constant in fn's own module
             mod = sys.modules.get(getattr(fn, "__module__", ""), None)
@@ -270,6 +302,134 @@ def trace_spans(fn, seen: set | None = None) -> set[tuple[str, int, int]]:
                         if cs:
                             spans.add(cs)
     return spans
+
+
+def _trace_obj(obj, seen: set) -> set[tuple[str, int, int]]:
+    """trace_spans for a package function; for a package class, its
+    span plus the trace of each of its methods."""
+    if not (callable(obj) and _is_pkg_obj(obj)):
+        return set()
+    if not inspect.isclass(obj):
+        return trace_spans(obj, seen)
+    spans = {s for s in [_span(obj)] if s}
+    for _, meth in inspect.getmembers(obj, inspect.isfunction):
+        spans |= trace_spans(meth, seen)
+    return spans
+
+
+# ---------------------------------------------------------------------------
+# Reachability: package top-level defs that no query or harness reaches
+# ---------------------------------------------------------------------------
+
+# Code (not docstrings or comments) in these paths roots the scan, along
+# with every registered query and the package's own module-level code.
+HARNESS = ["bench.py", "__spark_entry__.py", "perfbench", "scripts"]
+
+
+def _py_files(rel: str) -> list[str]:
+    path = os.path.join(REPO, rel)
+    if os.path.isfile(path):
+        return [path]
+    return sorted(glob.glob(os.path.join(path, "**", "*.py"), recursive=True))
+
+
+def _identifiers(nodes) -> set[str]:
+    out: set[str] = set()
+    for node in nodes:
+        for sub in ast.walk(node):
+            if isinstance(sub, ast.Name):
+                out.add(sub.id)
+            elif isinstance(sub, ast.Attribute):
+                out.add(sub.attr)
+    return out
+
+
+def _resolve(bound: list, idents: set[str]) -> list:
+    """The bound objects, plus each identifier looked up on the bound
+    package modules (``lay.write_curated_bucketed``, also when reached
+    through ``self.layout``)."""
+    out = list(bound)
+    for obj in bound:
+        if isinstance(obj, types.ModuleType) and obj.__name__.startswith(PKG):
+            out += [getattr(obj, n) for n in idents if hasattr(obj, n)]
+    return out
+
+
+def _harness_roots() -> list:
+    """Package objects that harness code imports or names."""
+    roots: list = []
+    for rel in HARNESS:
+        for path in _py_files(rel):
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            bound: list = []
+            for node in ast.walk(tree):
+                if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(PKG):
+                    mod = importlib.import_module(node.module)
+                    for alias in node.names:
+                        obj = getattr(mod, alias.name, None)
+                        if obj is None:
+                            obj = importlib.import_module(f"{node.module}.{alias.name}")
+                        bound.append(obj)
+            roots += _resolve(bound, _identifiers([tree]))
+    return roots
+
+
+def _module_level_roots(mod: types.ModuleType, tree) -> list:
+    """Objects named by a module's own top-level code: decorators (the
+    oracle builders inside ``@q(...)``), defaults, class bases and
+    module-level statements, but not def or class bodies."""
+    nodes: list = []
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            nodes += node.decorator_list + node.args.defaults + node.args.kw_defaults
+        elif isinstance(node, ast.ClassDef):
+            nodes += node.decorator_list + node.bases + node.keywords
+        else:
+            nodes.append(node)
+    # __all__ entries are the module's declared exports.
+    idents = _identifiers([n for n in nodes if n is not None]) | set(getattr(mod, "__all__", ()))
+    return _resolve([vars(mod)[n] for n in idents if n in vars(mod)], idents)
+
+
+
+
+def unreached_defs(keep=()) -> dict[str, tuple[str, int, int]]:
+    """'module.def' -> span for every top-level package def or class
+    that no registered query, no harness file and no package
+    module-level code reaches through the dependency tracer. Tests are
+    not roots: code only a test reaches is checked by nothing.
+
+    ``keep`` names defs ('io.layout.reattach_curated') kept on purpose:
+    what they reach counts as reached, and each is reported only while
+    nothing else reaches it."""
+    import __spark_entry__ as entrymod
+
+    roots = list(entrymod.queries().values()) + _harness_roots()
+    defs: dict[str, tuple[str, int, int]] = {}
+    for path in _py_files(PKG):
+        rel = os.path.relpath(path, REPO)
+        modname = rel[:-3].replace(os.sep, ".").removesuffix(".__init__")
+        mod = importlib.import_module(modname)
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        roots += _module_level_roots(mod, tree)
+        spans = _ast_spans(path)
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs[f"{modname.removeprefix(PKG + '.')}.{node.name}"] = (rel, *spans[node.name])
+    seen: set = set()
+    reached: set = set()
+    for obj in roots:
+        reached |= _trace_obj(obj, seen)
+    kept: set = set()
+    for name in keep:
+        modname, _, attr = f"{PKG}.{name}".rpartition(".")
+        kept |= _trace_obj(getattr(importlib.import_module(modname), attr), seen)
+    return {
+        name: span for name, span in defs.items()
+        if span not in reached and (name in keep or span not in kept)
+    }
 
 
 def diff_hunks(base: str) -> dict[str, list[tuple[int, int]]]:

@@ -227,7 +227,7 @@ def decontaminate(
             F.col("__rep"), F.explode(word_shingles_of(F.col("__w"), n)).alias("gram")
         )
     )
-    # Both sides are distinct per key (word_shingles dedups per doc),
+    # Both sides are distinct per key (word_shingles_of dedups per doc),
     # so count(*) after the join = |distinct shared n-grams|.
     rep_counts = (
         rep_grams.join(F.broadcast(bench_grams), "gram")

@@ -79,11 +79,6 @@ def word_shingles_of(words: Column, n: int = 3) -> Column:
     return F.array_distinct(F.transform(idx, gram))
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams via higher-order functions (JVM-side)."""
-    return word_shingles_of(F.split(text, " "), n)
-
-
 def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Exact dedup: hash-groupBy on content. Returns one row per
     distinct content with the kept (min) id and duplicate count.
@@ -290,7 +285,7 @@ def lsh_candidate_pairs(
     docs).
 
     Banding runs over DISTINCT signatures, doc-level pairs come back
-    by fan-out (the simhash_candidate_pairs structure): identical
+    by fan-out: identical
     texts have identical signatures, so doc-level buckets carry every
     duplicate copy and the in-bucket pair emission goes C(m,2) per
     m-copy group PER BAND — the r6 1000x replication (1000-member
@@ -540,47 +535,6 @@ def simhash_signature(
         *[F.when(F.col(f"b{b}") * 2 > F.col("n_tok"), F.lit("1")).otherwise(F.lit("0")) for b in range(bits)]
     )
     return votes.select(F.col(id_col), sig.alias("simhash"))
-
-
-def simhash_candidate_pairs(
-    sig: DataFrame, id_col: str = "doc_id", band_bits: int = 4, max_bucket: int | None = None
-) -> DataFrame:
-    """Near-dup candidates: docs agreeing on any simhash band
-    (Hamming-distance blocking). Blocked over DISTINCT signatures —
-    a band_bits-bit band has only 2^band_bits values, so doc-level
-    buckets grow with the corpus and explode quadratically, while the
-    signature universe is fixed (2^bits) and the qualifying signature
-    pairs expand to doc pairs through equi-joins, output-bound (same
-    structure as simhash_hamming_pairs; ``max_bucket`` caps the
-    signature-bucket size)."""
-    n = 16  # matches simhash_signature default
-    usig = sig.select("simhash").distinct()
-    bands = F.array(
-        *[
-            F.concat_ws("|", F.lit(str(i)), F.substring("simhash", i * band_bits + 1, band_bits))
-            for i in range(n // band_bits)
-        ]
-    )
-    keyed = usig.select(F.col("simhash"), F.explode(bands).alias("band_key"))
-    spairs = _bucket_pairs(keyed, "simhash", "band_key", max_bucket).select(
-        F.col("doc_a").alias("__sa"), F.col("doc_b").alias("__sb")
-    )
-    a = sig.select(F.col("simhash").alias("__sa"), F.col(id_col).alias("__da"))
-    b = sig.select(F.col("simhash").alias("__sb"), F.col(id_col).alias("__db"))
-    cross = (
-        spairs.join(a, "__sa")
-        .join(b, "__sb")
-        .select(
-            F.least("__da", "__db").alias("doc_a"),
-            F.greatest("__da", "__db").alias("doc_b"),
-        )
-    )
-    same = (
-        a.join(b.withColumnRenamed("__sb", "__sa"), "__sa")
-        .filter(F.col("__da") < F.col("__db"))
-        .select(F.col("__da").alias("doc_a"), F.col("__db").alias("doc_b"))
-    )
-    return cross.unionByName(same)
 
 
 def ngram_jaccard_pairs(
@@ -1206,7 +1160,7 @@ def minhash_estimate_pairs(
     )
 
     # Exact shingle SETS as one persisted array column (distinct by
-    # construction in word_shingles), built for REPRESENTATIVES only:
+    # construction in word_shingles_of), built for REPRESENTATIVES only:
     # the pair join then computes the true Jaccard with
     # array_intersect — no shingle explode, no per-branch
     # re-shingling. At production scale this table persists to

@@ -700,56 +700,6 @@ def embedding_covariance(
     )
 
 
-def pca_project(
-    emb: DataFrame,
-    k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Project embeddings onto their top-k principal components —
-    the dimensionality reduction / whitening step an embedding dedup
-    or ANN pipeline runs before indexing.
-
-    The covariance matrix (dims² doubles) is model-sized: collected to
-    the driver, eigendecomposed with numpy (exactly how MLlib PCA
-    fits), and the component matrix broadcasts into one Arrow matmul
-    pass over the corpus — training is two linear scans, serving is a
-    narrow map. Component signs are fixed deterministically (largest-
-    magnitude coordinate made positive) so reruns and engines agree.
-    Output: (id, components array<double> length k)."""
-    import numpy as np
-    import pandas as pd
-
-    spark = emb.sparkSession
-    cov_rows = embedding_covariance(emb, vec_col, ndigits=12).collect()
-    dims = max(r["dim_i"] for r in cov_rows) + 1 if cov_rows else 0
-    cov = np.zeros((dims, dims))
-    for r in cov_rows:
-        cov[r["dim_i"], r["dim_j"]] = r["cov"]
-    vals, vecs = np.linalg.eigh(cov)  # ascending eigenvalues
-    comp = vecs[:, ::-1][:, :k]  # top-k columns
-    for c in range(comp.shape[1]):  # deterministic sign convention
-        if comp[np.argmax(np.abs(comp[:, c])), c] < 0:
-            comp[:, c] = -comp[:, c]
-    bc = spark.sparkContext.broadcast(comp)
-
-    def project(batches):
-        w = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack([np.asarray(row, dtype=np.float64) for row in pdf[vec_col]])
-            p = x @ w
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "components": list(p)}
-            )
-
-    src = fan_out(emb).select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
-    )
-    return src.mapInPandas(project, schema=f"{id_col} long, components array<double>")
-
-
 def nearest_centroid(
     vectors: DataFrame,
     centroids: DataFrame,

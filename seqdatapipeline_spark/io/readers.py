@@ -1,9 +1,9 @@
 """Sources / scans (SURVEY.md §2.1).
 
-Text-shaped sources (job forms, batch lists, FASTQ) come in through
-``spark.read.text`` + declarative reshaping; the archive fallback and
-external-ingest connectors are thin path logic around ``spark.read``.
-Gzip decoding is automatic in the text source.
+The first-record probe, the archive fallback and the external-ingest
+connector are thin path logic around ``spark.read``. The text-shaped
+sources (job forms, batch lists) are parsed inside their registered
+queries, ``form_scan`` and ``batch_list_scan``.
 """
 
 from __future__ import annotations
@@ -12,86 +12,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ..schemas import READ
-
-
-def form_scan(spark: SparkSession, path: str) -> DataFrame:
-    """Parse job-form files: 8 positional header rows + a
-    ``<FastQFile>…</FastQFile>`` block (reference parserTools.py:9-91;
-    regex :44, positional unpack :67-91).
-
-    Reads whole files (one form per file), then extracts fields with
-    regexp — schema-on-read instead of the reference's silent
-    positional indexing.
-    """
-    raw = (
-        spark.read.format("text")
-        .option("wholetext", True)
-        .load(path)
-        .withColumn("form_file", F.input_file_name())
-    )
-    lines = F.split(F.col("value"), "\n")
-    fq_block = F.regexp_extract(F.col("value"), r"(?s)<FastQFile>(.*?)</FastQFile>", 1)
-    return raw.select(
-        "form_file",
-        F.trim(F.element_at(lines, 1)).alias("contact"),
-        F.trim(F.element_at(lines, 2)).alias("user_name"),
-        F.trim(F.element_at(lines, 3)).alias("application"),
-        F.trim(F.element_at(lines, 4)).alias("species"),
-        F.trim(F.element_at(lines, 5)).alias("sample_type"),
-        F.trim(F.element_at(lines, 6)).alias("mates"),
-        F.trim(F.element_at(lines, 7)).alias("external"),
-        F.trim(F.element_at(lines, 8)).alias("external_type"),
-        F.trim(F.element_at(lines, 9)).alias("seq_sample_id"),
-        F.filter(
-            F.transform(F.split(F.trim(fq_block), "\n"), lambda s: F.trim(s)),
-            lambda s: s != "",
-        ).alias("fq"),
-    )
-
-
-def batch_list_scan(spark: SparkSession, path: str) -> DataFrame:
-    """Batch file: one fastq (or ``mate1 mate2``) per line → array
-    (reference mainScript.py:217-225). The reference comma-joins;
-    the engine keeps ArrayType."""
-    return (
-        spark.read.text(path)
-        .filter(F.trim("value") != "")
-        .select(F.split(F.trim("value"), r"\s+").alias("fq"))
-    )
-
-
-def fastq_scan(spark: SparkSession, path: str) -> DataFrame:
-    """FASTQ 4-line records → READ schema rows (reference
-    tools.py:739-744 reads records by 4-line groups).
-
-    Line-group keys need a *stable global* row index;
-    monotonically_increasing_id is not contiguous across partitions, so
-    the 4-line grouping uses zipWithIndex once (the documented
-    exception to no-RDD, SURVEY.md §7 risk 4), then pivots each group
-    into one row.
-    """
-    lines = spark.read.text(path).rdd.map(lambda r: r.value).zipWithIndex()
-    grouped = (
-        lines.map(lambda t: (t[1] // 4, (t[1] % 4, t[0])))
-        .groupByKey()
-        .map(lambda kv: _fastq_record(dict(kv[1])))
-    )
-    return spark.createDataFrame(grouped, READ)
-
-
-def _fastq_record(parts: dict[int, str]):
-    header = parts.get(0, "")
-    fields = header[1:].split(" ", 1) if header.startswith("@") else [header, ""]
-    rid = fields[0]
-    mate = None
-    if "." in rid and rid.rsplit(".", 1)[-1] in ("1", "2"):  # SRA style (tools.py:754-755)
-        mate = int(rid.rsplit(".", 1)[-1])
-        rid = rid.rsplit(".", 1)[0]
-    elif len(fields) > 1 and fields[1][:1] in ("1", "2"):  # Illumina (tools.py:770-771)
-        mate = int(fields[1][0])
-    return (rid, mate, parts.get(1, ""), parts.get(3, ""))
 
 
 def fastq_probe_limit1(df: DataFrame, order_col: str) -> DataFrame:
@@ -112,14 +32,6 @@ def archive_fallback_scan(spark: SparkSession, primary: str, archive: str) -> Da
     except Exception:
         pass
     return spark.read.parquet(archive)
-
-
-def catalog_scan(spark: SparkSession, path: str, status: str = "current") -> DataFrame:
-    """Software-version catalog snapshot (reference tools.py:859-871:
-    ``select … from software_version where status=='current'`` via the
-    sqlite3 CLI). Engine reads the catalog as a dim table and filters —
-    swap `path` for a JDBC URL on a live catalog."""
-    return spark.read.parquet(path).filter(F.col("status") == status)
 
 
 def external_ingest(

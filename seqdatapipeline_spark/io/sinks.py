@@ -1,5 +1,5 @@
 """Sinks (SURVEY.md §2.1) — TSV outputs, status upsert, archive move,
-alert (email-shape) sink.
+bucketed tables with their layout spec.
 
 Everything is written with ``df.write`` (distributed, partitioned);
 no driver-side collect in any sink path.
@@ -30,23 +30,6 @@ def log_report_sink(df: DataFrame, path: str) -> None:
     """Tool-report text sink (reference tools.py:183-186 —
     trimming_report.txt from stdout+stderr)."""
     df.write.mode("overwrite").text(path)
-
-
-def status_insert_ignore(
-    spark: SparkSession, updates: DataFrame, path: str, key: str = "id"
-) -> DataFrame:
-    """INSERT OR IGNORE semantics (reference mainScript.py:336-341):
-    existing keys keep their row; only new keys append. Read-modify-
-    overwrite on Parquet (documented single-writer limitation —
-    SURVEY.md §7 risk 3; Delta MERGE is the cluster-grade swap-in)."""
-    try:
-        existing = spark.read.parquet(path)
-        fresh = updates.join(existing.select(key), on=key, how="left_anti")
-        merged = existing.unionByName(fresh)
-    except Exception:
-        merged = updates.dropDuplicates([key])
-    _overwrite_parquet(merged, path)
-    return spark.read.parquet(path)
 
 
 def status_upsert(
@@ -84,31 +67,6 @@ def archive_move_sink(spark: SparkSession, src_path: str, archive_path: str) -> 
     if os.path.isdir(src_path) or "://" in src_path:
         _hadoop_delete(spark, src_path)
     return archived
-
-
-def alerts_frame(
-    completed: DataFrame, submitted: DataFrame, key: str, user_col: str, contact_col: str
-) -> DataFrame:
-    """Completion-notice rows — email-sink shape without SMTP
-    (reference parserTools.py:94-176 constructEmail: plain+HTML listing
-    completed / not-completed IDs per user). Emitting an `alerts`
-    DataFrame keeps delivery pluggable (foreachBatch, webhook, SMTP)."""
-    done = completed.select(key).withColumn("__done", F.lit(True))
-    return (
-        submitted.join(done, on=key, how="left")
-        .withColumn("status", F.when(F.col("__done"), "completed").otherwise("not_completed"))
-        .withColumn(
-            "alert",
-            F.concat_ws(
-                " ",
-                F.col(user_col),
-                F.lit("sample"),
-                F.col(key).cast("string"),
-                F.col("status"),
-            ),
-        )
-        .select(key, user_col, contact_col, "status", "alert")
-    )
 
 
 def write_bucketed(

@@ -94,59 +94,12 @@ def dedup_keep_first(
     return agg.select(*keys, *[F.col(f"__best.{c}").alias(c) for c in rest]).select(df.columns)
 
 
-def group_route_jobs(
-    forms: DataFrame,
-    key_cols: list[str],
-    se_pred,
-    item_col: str,
-    param_col: str,
-) -> DataFrame:
-    """Batch routing dictionary D9 (reference pipelineParser.py:89-136):
-    group submissions by composite key; within each group collect the
-    SE list, PE list, and dedup'd PARAM list. One shuffle; lists are
-    sorted for determinism (the reference relied on dict order)."""
-    return forms.groupBy(*key_cols).agg(
-        F.array_sort(F.collect_list(F.when(se_pred, F.col(item_col)))).alias("se"),
-        F.array_sort(F.collect_list(F.when(~se_pred, F.col(item_col)))).alias("pe"),
-        F.array_sort(F.array_distinct(F.collect_list(param_col))).alias("params"),
-    )
-
-
 def ids_per_user(df: DataFrame, user_col: str, id_col: str) -> DataFrame:
     """Sample IDs per user (reference pipelineParser.py:137-140)."""
     return df.groupBy(user_col).agg(
         F.count("*").alias("n_ids"),
         F.array_join(F.array_sort(F.collect_list(F.col(id_col).cast("string"))), ",").alias("ids"),
     )
-
-
-def qc_read_stats(reads: DataFrame, seq_col: str = "sequence", qual_col: str = "quality") -> DataFrame:
-    """Per-position quality stats + GC% — fastqc core semantics
-    (reference tools.py:101-142 treats fastqc output as opaque; the
-    engine computes the underlying distributions natively).
-
-    posexplode keeps this a single wide shuffle on (position); the
-    per-read GC ratio is a pure expression (no UDF).
-    """
-    per_pos = (
-        reads.select(F.posexplode(F.split(F.col(qual_col), "")).alias("pos", "q"))
-        .filter(F.col("q") != "")
-        .groupBy("pos")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.avg(F.ascii("q") - 33), 4).alias("mean_q"),
-            F.min(F.ascii("q") - 33).alias("min_q"),
-            F.max(F.ascii("q") - 33).alias("max_q"),
-        )
-    )
-    return per_pos
-
-
-def gc_content(reads: DataFrame, seq_col: str = "sequence") -> DataFrame:
-    """Per-read GC fraction, JVM-side: length arithmetic, no explode."""
-    s = F.col(seq_col)
-    gc = F.length(s) - F.length(F.regexp_replace(s, "[GCgc]", ""))
-    return reads.withColumn("gc_frac", gc / F.length(s))
 
 
 def status_last_write_wins(

@@ -24,34 +24,6 @@ _INTERVAL_STATS = Memo("interval-stats", 8)
 _adaptive_stats_clear = _INTERVAL_STATS.clear
 
 
-def pe_mate_join(
-    r1: DataFrame,
-    r2: DataFrame,
-    key: str = "read_id",
-    swap_check: bool = True,
-) -> DataFrame:
-    """Pair mate-1/mate-2 read sets on read id (reference
-    tools.py:737-786 PE_check: verifies ``line1[0]==line2[0]``, swaps
-    so mate 1 comes first). Full-file semantics = inner equi-join; the
-    reference's single-record probe is the degenerate limit(1) case.
-
-    With ``swap_check`` the sides are reordered by their `mate` column
-    when present, mirroring the reference's mate-swap (tools.py:757-764),
-    so callers can pass files in either order.
-    """
-    from ..session import fan_out
-
-    if swap_check and "mate" in r1.columns and "mate" in r2.columns:
-        # Deterministic: side with min(mate)==1 is mate1.
-        pass  # columns drive per-row ordering below; file-level swap is I/O-layer
-    # Keyed fan-out both sides: co-partitions the join on the read id
-    # (no exchange in the join itself) and restores map parallelism
-    # for row-group-bound local files; no-op at real scale.
-    m1 = fan_out(r1.select(key, *[F.col(c).alias(f"{c}_1") for c in r1.columns if c != key]), key)
-    m2 = fan_out(r2.select(key, *[F.col(c).alias(f"{c}_2") for c in r2.columns if c != key]), key)
-    return m1.join(m2, on=key, how="inner")
-
-
 def mate_pair_enumerate(
     df: DataFrame,
     key: str,
@@ -128,14 +100,6 @@ def mate_pair_pivot(
         .filter(F.col("__p1").isNotNull() & F.col("__p2").isNotNull())
     )
     return out.drop("__p1", "__p2")
-
-
-def pe_mate_validate(r1: DataFrame, r2: DataFrame, key: str = "read_id") -> DataFrame:
-    """Mate-consistency check: ids present on one side only
-    (reference tools.py:746-751 mismatch error path). Empty ⇒ valid."""
-    only1 = r1.join(r2, key, "left_anti").select(F.col(key), F.lit(1).alias("side"))
-    only2 = r2.join(r1, key, "left_anti").select(F.col(key), F.lit(2).alias("side"))
-    return only1.unionByName(only2)
 
 
 def broadcast_lookup_join(
@@ -789,95 +753,6 @@ def band_classify(
         raise ValueError("band_classify: empty band table")
     out = fact.withColumn(cat_col, expr)
     return out if keep_unmatched else out.filter(F.col(cat_col).isNotNull())
-
-
-def range_band_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_val: str,
-    dim_lo,
-    dim_hi,
-) -> DataFrame:
-    """Generic broadcast band join: fact rows matched to dim rows where
-    ``dim_lo <= fact_val <= dim_hi`` (column names or Column exprs).
-    Used by metrics/feature classification queries."""
-    lo = F.col(dim_lo) if isinstance(dim_lo, str) else dim_lo
-    hi = F.col(dim_hi) if isinstance(dim_hi, str) else dim_hi
-    return fact.join(
-        F.broadcast(dim), on=(F.col(fact_val) >= lo) & (F.col(fact_val) <= hi), how="inner"
-    )
-
-
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_cols: list[str] | None = None,
-    strict: bool = False,
-    how: str = "inner",
-) -> DataFrame:
-    """As-of join: attach to each left row the most recent right row at
-    or before (``strict``: strictly before) its timestamp, per key.
-
-    Spark has no native as-of join, and the naive range-join +
-    row_number formulation degenerates to a BroadcastNestedLoopJoin
-    over every (left, preceding-right) pair. This is the scalable
-    rewrite: union both sides tagged with a side marker, sort within
-    each key by (ts, side) once, and carry the latest right payload
-    forward with last(ignorenulls) over a running window — one shuffle
-    on the key, no pair materialization, cost independent of how many
-    right rows precede each left row.
-
-    The right payload travels as a single struct so genuinely-NULL
-    payload fields don't make the carry reach past the true latest
-    match. Output columns: all left columns + ``right_cols`` (caller
-    renames right columns beforehand if names collide). Right rows
-    must be unique per (key, ts) for a deterministic result —
-    pre-aggregate with max_by if they are not. ``how='left'`` keeps
-    unmatched left rows with NULL payload.
-    """
-    from pyspark.sql import Window
-
-    keys = [on] if isinstance(on, str) else list(on)
-    payload = right_cols or [c for c in right.columns if c not in {*keys, right_ts}]
-    # At equal timestamps the right row must be visible for at-or-before
-    # semantics (sort before the left row) and hidden for strictly-before.
-    r_side, l_side = (0, 1) if not strict else (1, 0)
-
-    l2 = left.select(
-        *[F.col(c) for c in left.columns],
-        F.col(left_ts).alias("__t"),
-        F.lit(l_side).alias("__side"),
-        F.lit(None).cast(right.select(*payload).schema).alias("__r"),
-    )
-    r2 = right.select(
-        *[F.col(k) for k in keys],
-        *[
-            F.lit(None).cast(left.schema[c].dataType).alias(c)
-            for c in left.columns
-            if c not in keys
-        ],
-        F.col(right_ts).alias("__t"),
-        F.lit(r_side).alias("__side"),
-        F.struct(*[F.col(c) for c in payload]).alias("__r"),
-    )
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy("__t", "__side")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = l2.unionByName(r2).withColumn(
-        "__match", F.last("__r", ignorenulls=True).over(w)
-    )
-    out = carried.filter(F.col("__side") == l_side)
-    if how == "inner":
-        out = out.filter(F.col("__match").isNotNull())
-    return out.select(
-        *[F.col(c) for c in left.columns],
-        *[F.col(f"__match.{c}").alias(c) for c in payload],
-    )
 
 
 def asof_attach_prior(

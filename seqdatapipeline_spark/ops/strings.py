@@ -42,12 +42,6 @@ def pair_key(a: Column, b: Column) -> Column:
     return F.regexp_replace(common_prefix(a, b), "_R$", "_paired")
 
 
-def xml_tag_extract(s: Column, tag: str = "FastQFile") -> Column:
-    """All values inside <tag>…</tag> (reference parserTools.py:44,
-    ``re.findall('<FastQFile>(.*?)</FastQFile>', s, DOTALL)``)."""
-    return F.regexp_extract_all(s, F.lit(f"(?s)<{tag}>(.*?)</{tag}>"), 1)
-
-
 def username_from_email(email: Column) -> Column:
     """Local part of an address (reference parserTools.py:71)."""
     return F.element_at(F.split(email, "@"), 1)

@@ -1,5 +1,6 @@
-"""Window-shaped computations (SURVEY.md §2.5/2.6) and the peak-call
-composite operator (§2.4 `peak_call`, reference tools.py:555-622).
+"""Window-shaped computations (SURVEY.md §2.5/2.6) and the parts of
+the peak call (§2.4, reference tools.py:555-622): Poisson tail,
+Benjamini-Hochberg selection and gaps-and-islands merging.
 
 Scale notes: windows over fact tables are partitioned by a real key
 (chrom / user) — an unpartitioned window serializes through one task.
@@ -189,45 +190,6 @@ def bh_significant(
     return (
         with_cut.filter(F.col(pval_col) <= F.col("__cut"))
         .drop("__rank", "__m", "__cut")
-    )
-
-
-def peak_call(
-    cov: DataFrame,
-    chrom_col: str = "chrom",
-    bin_col: str = "bin",
-    count_col: str = "count",
-    qval: float = 0.01,
-    merge_gap_bins: int = 2,
-    correction: str = "bh",
-) -> DataFrame:
-    """Peak calling over a coverage table — macs2 callpeak semantics
-    (reference tools.py:555-622: windowed pileup vs local Poisson
-    background, q-value cutoff 0.01 ChIP / 0.05 ATAC tools.py:894-897,
-    enriched windows merged into peaks).
-
-    Pipeline: per-chrom expected rate λ (background) → Poisson tail p
-    per bin → significance selection → gaps-and-islands merge of
-    significant bins. ``correction='bh'`` (default) applies the
-    Benjamini–Hochberg FDR selection macs2 reports as q-values;
-    ``correction='raw'`` thresholds p < qval directly. All native
-    expressions; the only global stage is BH's order statistic over
-    the (bounded) per-bin aggregate.
-    """
-    lam = cov.groupBy(chrom_col).agg(F.avg(count_col).alias("__lam"))
-    scored = cov.join(F.broadcast(lam), chrom_col).withColumn(
-        "pval", poisson_tail(F.col(count_col), F.col("__lam"))
-    )
-    if correction == "bh":
-        sig = bh_significant(scored, "pval", qval, tie_cols=[chrom_col, bin_col])
-    else:
-        sig = scored.filter(F.col("pval") < qval)
-    islands = gaps_and_islands(sig, chrom_col, bin_col, gap=merge_gap_bins)
-    return islands.groupBy(chrom_col, "island").agg(
-        F.min(bin_col).alias("start_bin"),
-        F.max(bin_col).alias("end_bin"),
-        F.sum(count_col).alias("pileup"),
-        F.min("pval").alias("min_pval"),
     )
 
 

@@ -82,37 +82,6 @@ def merge_band_store(
     return pairs
 
 
-def streaming_neardup(
-    stream: DataFrame,
-    state_path: str,
-    checkpoint: str,
-    pairs_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    once: bool = True,
-):
-    """Wire a document stream into the band store via foreachBatch:
-    each micro-batch's surfaced pairs append to ``pairs_path``.
-    Exactly-once at batch granularity through the checkpoint; the
-    band store itself is append-only, so a replayed batch re-appends
-    duplicate keys — harmless for candidate generation (pairs are
-    distinct per batch) and compacted away by any later rewrite."""
-
-    def _sink(batch_df: DataFrame, _epoch: int) -> None:
-        pairs = merge_band_store(batch_df, state_path, id_col, text_col)
-        pairs.write.mode("append").parquet(pairs_path)
-
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    q = writer.trigger(availableNow=True).start() if once else writer.start()
-    if once:
-        q.awaitTermination()
-    return q
-
-
 def replay_batched(
     docs: DataFrame,
     state_root: str,

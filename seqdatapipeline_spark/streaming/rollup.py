@@ -62,34 +62,6 @@ def merge_rollup(
     return spark.read.parquet(state_path)
 
 
-def streaming_rollup(
-    stream: DataFrame,
-    state_path: str,
-    checkpoint: str,
-    key_cols: list[str],
-    partial_fn,
-    merges: dict[str, str],
-    once: bool = True,
-):
-    """Wire a stream into the rollup: per micro-batch, build the
-    partial aggregate with ``partial_fn(batch_df)`` (a plain batch
-    groupBy returning key_cols + metric columns) and merge it into the
-    state table. Returns after draining with availableNow when
-    ``once`` (the 12-hour-poll deployment shape of the reference's
-    scanner, with the trigger swapped)."""
-
-    def _sink(batch_df: DataFrame, _epoch: int) -> None:
-        merge_rollup(partial_fn(batch_df), state_path, key_cols, merges)
-
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    ).outputMode("update")
-    q = writer.trigger(availableNow=True).start() if once else writer.start()
-    if once:
-        q.awaitTermination()
-    return q
-
-
 def merge_grid_histogram(
     batch: DataFrame,
     state_path: str,

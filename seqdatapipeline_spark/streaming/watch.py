@@ -64,57 +64,20 @@ def stream_parquet_table(
     )
 
 
-def run_batches(
-    stream_df: DataFrame,
-    batch_fn,
-    checkpoint: str,
-    once: bool = True,
-):
+def run_batches(stream_df: DataFrame, batch_fn, checkpoint: str):
     """foreachBatch runner: each micro-batch of job files flows into
-    the batch pipeline (reference pipelineParser.py main loop). With
-    ``once`` the stream drains available input and stops — the testing
-    and backfill mode; otherwise caller sets a trigger."""
-    writer = stream_df.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint
+    the batch pipeline (reference pipelineParser.py main loop). The
+    stream drains the available input with ``availableNow`` and stops,
+    exactly-once per batch through the checkpoint; returns the
+    terminated query."""
+    q = (
+        stream_df.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if once:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer
-
-
-def completion_poll(outputs: DataFrame, group_col: str, ok_pred) -> DataFrame:
-    """Post-batch completion check (reference parserTools.py:221-241:
-    every archived output non-empty → notify + move). bool_and per
-    group; downstream alert/move hooks consume `complete`."""
-    return outputs.groupBy(group_col).agg(
-        F.count("*").alias("n_outputs"),
-        F.min(ok_pred.cast("boolean")).cast("boolean").alias("complete"),
-    )
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    window_len: str = "10 minutes",
-    slide: str | None = None,
-) -> DataFrame:
-    """Designed extension (absent in the reference — SURVEY.md §2.9):
-    watermarked tumbling/sliding event-time windows over the events
-    stream; late rows beyond the watermark are dropped with bounded
-    state."""
-    win = (
-        F.window(F.col(ts_col), window_len, slide)
-        if slide
-        else F.window(F.col(ts_col), window_len)
-    )
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(win, F.col("event_type"))
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-    )
+    q.awaitTermination()
+    return q
 
 
 def streaming_dedup(
@@ -142,16 +105,6 @@ def streaming_dedup(
     if ts_col is not None:
         return hashed.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
     return hashed.dropDuplicates(keys)
-
-
-def enrich_stream(stream: DataFrame, dim: DataFrame, on: str | list[str], how: str = "inner") -> DataFrame:
-    """Stream-static enrichment: each micro-batch joins against the
-    (batch) dim table with an explicit broadcast — the stream side
-    never shuffles, and the dim is re-resolved per micro-batch (so a
-    refreshed dim parquet is picked up without restarting the query).
-    The same code path works in batch mode, which is how the oracle
-    gate checks it."""
-    return stream.join(F.broadcast(dim), on=on, how=how)
 
 
 def stream_attribution_join(
@@ -191,7 +144,6 @@ def stream_into_curated(
     n_buckets: int = 32,
     sort_cols: "list[str] | None" = None,
     transform=None,
-    once: bool = True,
 ):
     """Streaming ingest INTO the curated bucketed store: each
     micro-batch lands via io.layout.append_curated_bucketed, so the
@@ -226,4 +178,4 @@ def stream_into_curated(
         )
         origin.catalog.refreshTable(table)
 
-    return run_batches(stream_df, _sink, checkpoint, once=once)
+    return run_batches(stream_df, _sink, checkpoint)

@@ -1,12 +1,12 @@
 """Deterministic in-memory domain fixtures (FIXTURES.md): genomic
 shapes the star schema can't exercise — SAM bitflags, interval ±1
-edges, chrM, mate swap, suffix-regex corpus, abs(TLEN) at 0."""
+edges, chrM, suffix-regex corpus, abs(TLEN) at 0."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from seqdatapipeline_spark.schemas import ALIGNMENT, FEATURE, READ
+from seqdatapipeline_spark.schemas import ALIGNMENT, FEATURE
 
 
 def alignments(spark: SparkSession) -> DataFrame:
@@ -39,24 +39,6 @@ def features(spark: SparkSession) -> DataFrame:
         ("chr1", "gene", 900, 2600, "+", {"gene_id": "gA", "gene_name": "alpha"}),   # non-exon
     ]
     return spark.createDataFrame(rows, FEATURE)
-
-
-def reads_pe(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
-    """Mate-1/mate-2 read sets; includes an unpaired id on each side
-    and SRA + Illumina id styles."""
-    r1 = [
-        ("SRR0001.1", 1, "ACGT", "IIII"),
-        ("SRR0001.2", 1, "ACGA", "IIII"),
-        ("M01:55:FC1:1:1", 1, "GGTT", "FFFF"),
-        ("only_in_r1", 1, "TTTT", "!!!!"),
-    ]
-    r2 = [
-        ("SRR0001.1", 2, "TGCA", "IIII"),
-        ("SRR0001.2", 2, "TGCC", "IIII"),
-        ("M01:55:FC1:1:1", 2, "AACC", "FFFF"),
-        ("only_in_r2", 2, "GGGG", "!!!!"),
-    ]
-    return spark.createDataFrame(r1, READ), spark.createDataFrame(r2, READ)
 
 
 FASTQ_NAMES = [

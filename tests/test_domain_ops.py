@@ -1,5 +1,5 @@
 """Domain-semantics unit tests over FIXTURES.md fixtures: FLAG
-bitflags, interval ±1 edges, chrM, mate swap, abs(TLEN)=0, suffix
+bitflags, interval ±1 edges, chrM, abs(TLEN)=0, suffix
 regex — the genomic edge cases the star-schema oracle can't reach."""
 
 from __future__ import annotations
@@ -166,14 +166,6 @@ def test_gene_read_count_unstranded(spark):
     )
     counts = {r.gene_id: r.n for r in agg.gene_read_count(j).collect()}
     assert counts["gA"] >= 2 and "gE" not in counts
-
-
-def test_pe_mate_join_and_validate(spark):
-    r1, r2 = fx.reads_pe(spark)
-    joined = jn.pe_mate_join(r1, r2)
-    assert joined.count() == 3
-    bad = jn.pe_mate_validate(r1, r2).collect()
-    assert {(r.read_id, r.side) for r in bad} == {("only_in_r1", 1), ("only_in_r2", 2)}
 
 
 def test_dedup_alignments_keep_best(spark):
@@ -632,40 +624,6 @@ def test_poisson_tail_matches_exact(spark):
     assert abs(got - exact) < 1e-9
 
 
-def test_peak_call_finds_enriched_region(spark):
-    # background bins count≈1; an enriched run at bins 50-52 with high counts
-    rows = [("chr1", b, 1) for b in range(100)] + [
-        ("chr1", 50, 30), ("chr1", 51, 28), ("chr1", 52, 25)
-    ]
-    cov = (
-        spark.createDataFrame(rows, "chrom string, bin long, count long")
-        .groupBy("chrom", "bin").agg(F.sum("count").alias("count"))
-    )
-    peaks = win.peak_call(cov, qval=0.01, merge_gap_bins=2).collect()
-    assert len(peaks) == 1
-    p = peaks[0]
-    assert p.start_bin == 50 and p.end_bin == 52 and p.pileup >= 83
-
-
-def test_qc_read_stats_positions(spark):
-    reads = spark.createDataFrame(
-        [("r1", 1, "ACGT", "IIII"), ("r2", 1, "ACGT", "!!II")],
-        "read_id string, mate int, sequence string, quality string",
-    )
-    stats = {r.pos: r for r in agg.qc_read_stats(reads).collect()}
-    assert stats[1].min_q == 0 and stats[1].max_q == 40  # '!'=0, 'I'=40
-    assert stats[3].mean_q == 40.0
-
-
-def test_gc_content(spark):
-    reads = spark.createDataFrame(
-        [("r1", 1, "GGCC", "IIII"), ("r2", 1, "ATAT", "IIII")],
-        "read_id string, mate int, sequence string, quality string",
-    )
-    got = {r.read_id: r.gc_frac for r in agg.gc_content(reads).collect()}
-    assert got["r1"] == 1.0 and got["r2"] == 0.0
-
-
 def test_bh_significant_matches_hand_computation(spark):
     """BH on a known p-value set: m=6, q=0.25. Sorted p: .01 .02 .03
     .20 .50 .90; thresholds (i/m)q: .0417 .0833 .125 .167 .208 .25.
@@ -683,47 +641,6 @@ def test_bh_significant_matches_hand_computation(spark):
         "pval", q=0.05, tie_cols=["bin"],
     )
     assert none.count() == 0
-
-
-def test_asof_join_semantics(spark):
-    """At-or-before vs strictly-before at an equal timestamp; latest
-    (not first) prior row wins; NULL payload fields don't make the
-    carry reach past the true match; left-how keeps unmatched rows."""
-    left = spark.createDataFrame(
-        [("u1", 10, "a"), ("u1", 5, "b"), ("u2", 7, "c")], "k string, ts long, tag string"
-    )
-    right = spark.createDataFrame(
-        [("u1", 3, 30.0), ("u1", 5, None), ("u1", 9, 90.0), ("u3", 1, 10.0)],
-        "k string, ts long, v double",
-    )
-    got = {
-        (r.k, r.ts): r.v
-        for r in jn.asof_join(
-            left, right, on="k", left_ts="ts", right_ts="ts", right_cols=["v"]
-        ).collect()
-    }
-    # ts=10 matches the latest prior (ts=9), not the earliest
-    assert got[("u1", 10)] == 90.0
-    # ts=5 matches the equal-ts right row whose payload is genuinely
-    # NULL — must NOT fall back to the ts=3 row
-    assert ("u1", 5) in got and got[("u1", 5)] is None
-    # u2 has no right rows -> dropped by inner
-    assert ("u2", 7) not in got
-
-    strict = {
-        (r.k, r.ts): r.v
-        for r in jn.asof_join(
-            left, right, on="k", left_ts="ts", right_ts="ts",
-            right_cols=["v"], strict=True,
-        ).collect()
-    }
-    # strictly-before: the equal-ts row is invisible, ts=3 row matches
-    assert strict[("u1", 5)] == 30.0
-
-    left_how = jn.asof_join(
-        left, right, on="k", left_ts="ts", right_ts="ts", right_cols=["v"], how="left"
-    )
-    assert left_how.count() == 3  # u2 kept with NULL payload
 
 
 def test_connected_components_chains_across_keys(spark):
@@ -858,7 +775,6 @@ def test_empty_input_robustness(spark):
 
     empty_docs = spark.createDataFrame([], "doc_id long, text string")
     empty_inc = spark.createDataFrame([], "node long, key string")
-    empty_ev = spark.createDataFrame([], "k string, ts long, v double")
 
     assert dd.connected_components(empty_inc).count() == 0
     assert dd.exact_dedup_groups(empty_docs).count() == 0
@@ -868,12 +784,6 @@ def test_empty_input_robustness(spark):
     assert cp.uniform_sample_k(
         spark.createDataFrame([], "doc_id long, lang string"), ["lang"], "doc_id"
     ).count() == 0
-    # as-of with an empty right side: inner drops all, left keeps all
-    left = spark.createDataFrame([("u1", 5, "a")], "k string, ts long, tag string")
-    assert jn.asof_join(left, empty_ev, on="k", left_ts="ts", right_ts="ts",
-                        right_cols=["v"]).count() == 0
-    assert jn.asof_join(left, empty_ev, on="k", left_ts="ts", right_ts="ts",
-                        right_cols=["v"], how="left").count() == 1
     # changelog with no changes: snapshot passes through
     snap = spark.createDataFrame([(1, 10.0)], "k long, v double")
     empty_ch = spark.createDataFrame([], "k long, seq long, op string, v double")

@@ -83,7 +83,7 @@ def test_minhash_collapse_dispatch_is_adaptive(spark):
     """The exact-dup collapse on a content_hash-bearing corpus is
     gated on the measured duplication factor (r12: the collapse costs
     ~8 extra driver jobs and only pays under duplication —
-    scripts/ab_lsh_curated.py). Both dispatch outcomes must return the
+    SCALING.md, dedup_minhash_lsh). Both dispatch outcomes must return the
     plain pipeline's exact pair set."""
     from pyspark.sql import functions as F
 
@@ -206,20 +206,6 @@ def test_lsh_max_bucket_drops_same_sig_pairs_when_all_bands_mega(spark):
     assert tight == {(0, 1)}
 
 
-def test_simhash_pairs_close_docs(spark):
-    docs = _doc_df(
-        spark,
-        [
-            (1, BASE),
-            (2, BASE + " extra"),
-            (3, "zzz qqq vvv www uuu ttt sss rrr"),
-        ],
-    )
-    sig = dd.simhash_signature(docs)
-    pairs = {(r.doc_a, r.doc_b) for r in dd.simhash_candidate_pairs(sig).collect()}
-    assert (1, 2) in pairs
-
-
 def test_exact_dedup_counts(spark):
     docs = _doc_df(spark, [(1, "aa"), (2, "aa"), (3, "bb")])
     got = {r.keep_id: r.n_dups for r in dd.exact_dedup_groups(docs).collect()}
@@ -292,34 +278,17 @@ def test_dir_poll_stream_glob_and_exactly_once(spark):
             seen.append([r.value for r in df.select("value").collect()])
 
         stream = watch.dir_poll_stream(spark, inbox)
-        watch.run_batches(stream, collect_batch, checkpoint=ckpt, once=True)
+        watch.run_batches(stream, collect_batch, checkpoint=ckpt)
         assert [v for b in seen for v in b] == ["alpha"]
 
         # second drain with the same checkpoint: nothing reprocessed,
         # only the new file arrives (the @-rename guard, natively).
         with open(os.path.join(inbox, "2job.txt"), "w") as f:
             f.write("beta\n")
-        watch.run_batches(stream, collect_batch, checkpoint=ckpt, once=True)
+        watch.run_batches(stream, collect_batch, checkpoint=ckpt)
         assert [v for b in seen for v in b] == ["alpha", "beta"]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_windowed_event_counts_semantics(spark):
-    # Batch-mode check of the streaming aggregation expression.
-    rows = [
-        ("2026-01-01 10:01:00", "click", 1.0),
-        ("2026-01-01 10:04:00", "click", 2.0),
-        ("2026-01-01 10:11:00", "click", 4.0),
-    ]
-    df = spark.createDataFrame(rows, "ts string, event_type string, value double").withColumn(
-        "ts", F.to_timestamp("ts")
-    )
-    out = {
-        (r.window.start.minute, r.n, r.total_value)
-        for r in watch.windowed_event_counts(df, window_len="10 minutes").collect()
-    }
-    assert out == {(0, 2, 3.0), (10, 1, 4.0)}
 
 
 def test_brute_topk_strategies_agree(spark, sf_dir):
@@ -904,31 +873,6 @@ def test_stream_span_dedup_cross_batch(spark, tmp_path):
     assert out1[1].n_spans_kept == 1 and out1[1].clean_text == shared
     assert out2[2].n_spans == 2 and out2[2].n_spans_kept == 1
     assert out2[2].clean_text == novel
-
-
-def test_pca_project_invariants(spark, sf_dir):
-    """pca_project must behave like a real PCA: deterministic across
-    runs (sign convention), and per-component projected variance
-    descending and matching the covariance model's eigenvalues."""
-    import numpy as np
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    k = 4
-    p1 = {r[0]: list(r[1]) for r in sim.pca_project(emb, k=k).collect()}
-    p2 = {r[0]: list(r[1]) for r in sim.pca_project(emb, k=k).collect()}
-    assert p1 == p2  # deterministic incl. eigenvector signs
-
-    proj = np.array([p1[i] for i in sorted(p1)])
-    var = proj.var(axis=0)
-    assert all(var[i] >= var[i + 1] - 1e-9 for i in range(k - 1))  # descending
-
-    cov_rows = sim.embedding_covariance(emb, ndigits=12).collect()
-    dims = max(r.dim_i for r in cov_rows) + 1
-    cov = np.zeros((dims, dims))
-    for r in cov_rows:
-        cov[r.dim_i, r.dim_j] = r.cov
-    evals = np.sort(np.linalg.eigvalsh(cov))[::-1][:k]
-    assert np.allclose(np.sort(var)[::-1], evals, rtol=1e-4, atol=1e-8)
 
 
 def test_curated_collapse_short_and_empty_text_parity(spark, tmp_path):

@@ -135,40 +135,6 @@ def test_streaming_dedup_across_batches(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_stream_static_enrichment(spark):
-    """Each micro-batch joins against the static dim; a second batch
-    arriving later still enriches (the dim is re-resolved per batch)."""
-    tmp = tempfile.mkdtemp()
-    inbox, ckpt = os.path.join(tmp, "in"), os.path.join(tmp, "ck")
-    os.makedirs(inbox)
-    try:
-        dim = spark.createDataFrame(
-            [("u1", "gold"), ("u2", "basic")], "user string, tier string"
-        )
-        got: list[tuple] = []
-
-        def run_once():
-            stream = spark.readStream.schema("id long, user string").json(inbox)
-            out = watch.enrich_stream(stream, dim, on="user")
-
-            def sink(df, epoch):
-                got.extend((r.id, r.tier) for r in df.collect())
-
-            q = out.writeStream.foreachBatch(sink).option(
-                "checkpointLocation", ckpt
-            ).outputMode("append").trigger(availableNow=True).start()
-            q.awaitTermination()
-
-        _write_events(inbox, "b1.json", [{"id": 1, "user": "u1"}, {"id": 2, "user": "u9"}])
-        run_once()
-        assert sorted(got) == [(1, "gold")]  # u9 has no dim row -> dropped
-        _write_events(inbox, "b2.json", [{"id": 3, "user": "u2"}])
-        run_once()
-        assert sorted(got) == [(1, "gold"), (3, "basic")]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def test_stream_stream_attribution_across_batches(spark):
     """Watermarked stream-stream join: a click arriving in a LATER
     micro-batch than its purchase must still match (the purchase is
@@ -240,12 +206,14 @@ def test_streaming_incremental_rollup(spark):
                 F.max("v").alias("mx"),
             )
 
+        merges = {"n": "sum", "sv": "sum", "mn": "min", "mx": "max"}
+
+        def sink(batch_df, _epoch):
+            rollup.merge_rollup(partial(batch_df), state, ["k"], merges)
+
         def run_once():
             stream = spark.readStream.schema("k string, v double").json(inbox)
-            rollup.streaming_rollup(
-                stream, state, ckpt, ["k"], partial,
-                merges={"n": "sum", "sv": "sum", "mn": "min", "mx": "max"},
-            )
+            watch.run_batches(stream, sink, ckpt)
 
         _write_events(inbox, "b1.json", [
             {"k": "a", "v": 1.0}, {"k": "a", "v": 2.0}, {"k": "b", "v": 5.0},
@@ -342,12 +310,11 @@ def test_streaming_neardup_cross_batch_pairs(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(inbox / "*.parquet"))
     )
-    nd.streaming_neardup(
-        stream,
-        state_path=str(tmp_path / "bands"),
-        checkpoint=str(tmp_path / "ckpt"),
-        pairs_path=str(tmp_path / "pairs"),
-    )
+    def sink(batch_df, _epoch):
+        pairs = nd.merge_band_store(batch_df, str(tmp_path / "bands"))
+        pairs.write.mode("append").parquet(str(tmp_path / "pairs"))
+
+    watch.run_batches(stream, sink, str(tmp_path / "ckpt"))
     pairs = {(r.doc_a, r.doc_b) for r in
              spark.read.parquet(str(tmp_path / "pairs")).collect()}
     assert (1, 2) in pairs

@@ -118,22 +118,6 @@ def test_salted_join_invariant_to_salt_count(spark, n_salts, fact):
 
 
 @given(
-    ids=st.lists(st.text(alphabet="abc", min_size=1, max_size=4), min_size=1, max_size=12, unique=True)
-)
-@settings(**SETTINGS)
-def test_pe_mate_join_symmetric(spark, ids):
-    """Joined key set is invariant to side order (reference mate-swap,
-    tools.py:757-764)."""
-    r1 = spark.createDataFrame([(i, 1, "A", "I") for i in ids[: len(ids) // 2 + 1]],
-                               "read_id string, mate int, sequence string, quality string")
-    r2 = spark.createDataFrame([(i, 2, "T", "I") for i in ids[len(ids) // 3 :]],
-                               "read_id string, mate int, sequence string, quality string")
-    k12 = {r.read_id for r in jn.pe_mate_join(r1, r2).collect()}
-    k21 = {r.read_id for r in jn.pe_mate_join(r2, r1).collect()}
-    assert k12 == k21
-
-
-@given(
     docs=st.lists(
         st.text(alphabet="ab c", min_size=1, max_size=40),
         min_size=1,
