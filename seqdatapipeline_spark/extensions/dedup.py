@@ -482,7 +482,7 @@ def minhash_dedup_pairs(
 
     The collapse is ADAPTIVE (r12): it costs ~8 extra driver jobs of
     AQE stage barriers (collapse groupBy + checkpoint + two member
-    fan-out joins — measured 19 vs 11 jobs, scripts/ab_lsh_curated.py)
+    fan-out joins — measured 19 vs 11 jobs, SCALING.md "Round-12 gate")
     and only pays when exact duplication actually shrinks the
     signature stage. One memoized HLL stat on the stored hash (a
     map-side-combinable agg, exchange-free on the bucketed curated
@@ -498,14 +498,12 @@ def minhash_dedup_pairs(
     if "content_hash" in docs.columns and (
         _duplication_factor(docs, "content_hash") >= collapse_threshold
     ):
-        groups, members = collapse_exact_text(
-            docs, id_col, text_col, shingle_n, members_materialize="checkpoint"
-        )
+        groups, members = collapse_exact_text(docs, id_col, text_col, shingle_n)
         reps = groups.select(F.col("__rep").alias(id_col), text_col)
         sig = minhash_signature(reps, id_col, text_col, num_hashes, shingle_n)
         rep_pairs = lsh_candidate_pairs(sig, id_col, num_hashes, band_size)
         return fan_out_rep_pairs(
-            rep_pairs, members, id_col, groups.filter("__has_sh"), {}
+            rep_pairs, members, id_col, groups.filter("__pairable"), {}
         )
     sig = minhash_signature(docs, id_col, text_col, num_hashes, shingle_n)
     return lsh_candidate_pairs(sig, id_col, num_hashes, band_size)
@@ -643,23 +641,57 @@ def embedding_near_dup_pairs(
     LSH/IVF cell id at 100 TB (see similarity.ivf_assign) — cell
     sizing is what bounds a block to executor memory.
 
+    Cosine is a pure function of the two vectors, so the block
+    scoring (embedding_block_pairs) runs over DISTINCT (block, vector)
+    values only (collapse_exact on the raw array — no hash, no
+    collision risk) and the full pair list comes back by member
+    fan-out: cross-group products carry the representative pair's
+    cosine, within-group id pairs are cos 1.0 (zero-norm groups
+    excluded — 0/0 cosine is NaN and never qualifies, matching the
+    uncollapsed arithmetic). An m-member exact-duplicate group
+    contributes one matrix row instead of m — at 100x replication
+    (m=100) the block tile shrinks 10^4-fold; measured 17.9 s →
+    output-bound seconds on the same data. NULL-block and NULL-vector
+    rows never join back through the membership map (NULL keys never
+    match), so they pair with nothing, as in the SQL oracle."""
+    groups, members = collapse_exact(
+        emb.select(F.col(block_col).alias("blk"), F.col(id_col), F.col(vec_col)),
+        ["blk", vec_col],
+        id_col,
+        [],
+        sum_sq(F.col(vec_col)) > 0,
+    )
+    rep_pairs = embedding_block_pairs(
+        groups.select("blk", F.col("__rep").alias(id_col), F.col(vec_col)),
+        id_col, vec_col, "blk", threshold, chunk_rows,
+    )
+    # Degenerate threshold > 1.0 admits nothing (cos caps at 1.0 for
+    # identical vectors), matching the uncollapsed form: no diagonal.
+    diag = groups.filter("__pairable") if threshold <= 1.0 else None
+    return fan_out_rep_pairs(
+        rep_pairs, members, id_col, diag, {"cos": 1.0}, "vec_a", "vec_b"
+    )
+
+
+def embedding_block_pairs(
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    block_col: str,
+    threshold: float,
+    chunk_rows: int,
+) -> DataFrame:
+    """The block-scoring step of embedding_near_dup_pairs, without the
+    exact-duplicate collapse: (vec_a < vec_b, cos) for every
+    same-block pair at or above ``threshold``. Callers pass
+    representatives that are already distinct.
+
     Each block is scored with one `applyInPandas` matmul over the
     normalized block matrix (row chunks of ``chunk_rows`` bound the
     similarity tile to chunk×n doubles), emitting only the (a < b)
     pairs at or above threshold — a 64-dim 200-vector block is one
     BLAS call instead of 20k interpreted array folds, measured ~20x
-    faster, and the pair set never materializes below the threshold.
-
-    Cosine is a pure function of the two vectors, so the matmul runs
-    over DISTINCT (block, vector) values only (groupBy on the raw
-    array — no hash, no collision risk) and the full pair list comes
-    back by member fan-out: cross-group products carry the
-    representative pair's cosine, within-group id pairs are cos 1.0
-    (zero-norm groups excluded — 0/0 cosine is NaN and never
-    qualifies, matching the uncollapsed arithmetic). An m-member
-    exact-duplicate group contributes one matrix row instead of m —
-    at 100x replication (m=100) the block tile shrinks 10^4-fold;
-    measured 17.9 s → output-bound seconds on the same data."""
+    faster, and the pair set never materializes below the threshold."""
     import numpy as np
     import pandas as pd
 
@@ -696,46 +728,15 @@ def embedding_near_dup_pairs(
     # NULL vectors (or NULL blocks) cannot pair: any cosine against
     # NULL is NULL and never reaches a threshold — dropping them here
     # keeps every block's np.stack shape-stable on crawl-dirty data.
-    # The NULL-block filter is equality-join semantics made explicit,
-    # not a behavior change: the members fan-out join below keys on
-    # blk, and NULL join keys never match, so NULL-block rows already
-    # produced no output pairs (and the SQL oracle's label-equality
-    # join excludes them identically).
-    base = emb.select(
+    # The NULL-block filter is equality-join semantics made explicit
+    # (the SQL oracle's label-equality join excludes them identically).
+    blocks = emb.select(
         F.col(block_col).alias("blk"), F.col(id_col), F.col(vec_col)
     ).filter(F.col(vec_col).isNotNull() & F.col("blk").isNotNull())
-    groups = (
-        base.groupBy("blk", vec_col)
-        .agg(F.min(id_col).alias("__rep"), F.count(F.lit(1)).alias("__cnt"))
-        .withColumn(
-            "__nz",
-            F.aggregate(
-                F.col(vec_col),
-                F.lit(0.0),
-                lambda acc, x: acc + x.cast("double") * x.cast("double"),
-            )
-            > 0,
-        )
-        .localCheckpoint(eager=True)
-    )
-    reps = groups.select("blk", F.col("__rep").alias(id_col), F.col(vec_col))
-    rep_pairs = (
-        fan_out(reps, "blk")
+    return (
+        fan_out(blocks, "blk")
         .groupBy("blk")
         .applyInPandas(score_block, schema="vec_a long, vec_b long, cos double")
-    )
-    # Narrow (id, rep) membership map, checkpointed once for the two
-    # fan-out consumers.
-    members = (
-        base.join(groups.select("blk", vec_col, "__rep"), ["blk", vec_col])
-        .select(F.col(id_col), "__rep")
-        .localCheckpoint(eager=True)
-    )
-    # Degenerate threshold > 1.0 admits nothing (cos caps at 1.0 for
-    # identical vectors), matching the uncollapsed form: no diagonal.
-    diag = groups.filter("__nz") if threshold <= 1.0 else None
-    return fan_out_rep_pairs(
-        rep_pairs, members, id_col, diag, {"cos": 1.0}, "vec_a", "vec_b"
     )
 
 
@@ -1116,13 +1117,8 @@ def minhash_estimate_pairs(
     components) next to the TRUE shingle Jaccard — the calibration
     table that tells you whether num_hashes is sized right for your
     dedup threshold before you trust the sketch at corpus scale.
-
-    The signature table is persisted once and feeds all three
-    consumers (band pairs + both sides of the pair join) — the
-    production pattern of materializing sketches rather than
-    recomputing the shingle/hash pipeline per branch. The true-Jaccard
-    branch joins the exact shingle sets only for candidate DOCUMENTS
-    (the pair join prunes first), never all pairs.
+    Both scores come from one join chain over the candidates of
+    minhash_rep_candidates (shared with minhash_containment_pairs).
 
     Exact duplicates are pre-collapsed (collapse_exact_text): both
     est and true Jaccard are pure functions of the two TEXTS, so the
@@ -1135,13 +1131,69 @@ def minhash_estimate_pairs(
     Without this, 1000x mass duplication pushes the doc-level scoring
     joins to ~10^9 rows per side (the r6 SCALING note's known gap);
     the contract OUTPUT is still every candidate pair."""
-    groups, members = collapse_exact_text(
-        docs, id_col, text_col, shingle_n, members_materialize="checkpoint"
+    groups, members, cand = minhash_rep_candidates(
+        docs, id_col, text_col, num_hashes, band_size, shingle_n
     )
+    shared = F.size(F.array_intersect("__sha", "__shb"))
+    union = F.size("__sha") + F.size("__shb") - shared
+    rep_scored = cand.select(
+        "doc_a",
+        "doc_b",
+        F.round("__j", 6).alias("est_jaccard"),
+        F.when(union > 0, F.round(shared / union, 6))
+        .otherwise(F.lit(0.0))
+        .alias("true_jaccard"),
+    ).withColumn(
+        "abs_err", F.round(F.abs(F.col("est_jaccard") - F.col("true_jaccard")), 6)
+    )
+    # Within-group pairs of identical texts score est = truth = 1.0
+    # and abs_err = 0.0 exactly. Only groups with a non-empty shingle
+    # set pair within themselves: shingle-less docs never get a
+    # signature (minhash_signature drops them, like the SQL mirror's
+    # explode), so identical short texts are NOT candidates in the
+    # pair form either.
+    return fan_out_rep_pairs(
+        rep_scored, members, id_col, groups.filter("__pairable"),
+        {"est_jaccard": 1.0, "true_jaccard": 1.0, "abs_err": 0.0},
+    )
+
+
+def minhash_rep_candidates(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    band_size: int,
+    shingle_n: int,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The representative-level LSH candidates that
+    minhash_estimate_pairs and minhash_containment_pairs both score:
+    ``(groups, members, cand)`` of collapse_exact_text, with ``cand`` =
+    (doc_a, doc_b, __j, __sha, __shb) over representatives — __j the
+    fraction of agreeing signature components, __sha/__shb the exact
+    shingle sets of the two sides.
+
+    The signature table is persisted once and feeds all three
+    consumers (band pairs + both sides of the pair join) — the
+    production pattern of materializing sketches rather than
+    recomputing the shingle/hash pipeline per branch. The exact
+    shingle SETS are one persisted array column (distinct by
+    construction in word_shingles_of), built for REPRESENTATIVES only
+    and joined only onto candidate pairs (the pair join prunes
+    first): scorers compute true overlaps with array_intersect — no
+    shingle explode, no per-branch re-shingling, never all pairs."""
+    groups, members = collapse_exact_text(docs, id_col, text_col, shingle_n)
     reps = groups.select(F.col("__rep").alias(id_col), text_col)
     sig = minhash_signature(reps, id_col, text_col, num_hashes, shingle_n).transform(ring_persist)
     pairs = lsh_candidate_pairs(sig, id_col, num_hashes, band_size)
-
+    sh_arr = (
+        fan_out(reps, id_col)
+        .withColumn("__w", F.split(F.col(text_col), " "))
+        .select(
+            F.col(id_col), word_shingles_of(F.col("__w"), shingle_n).alias("__sh")
+        )
+        .transform(ring_persist)
+    )
     sa = sig.select(
         F.col(id_col).alias("doc_a"),
         *[F.col(f"mh{j}").alias(f"__a{j}") for j in range(num_hashes)],
@@ -1153,30 +1205,11 @@ def minhash_estimate_pairs(
     agree = sum(
         (F.col(f"__a{j}") == F.col(f"__b{j}")).cast("int") for j in range(num_hashes)
     )
-    est = pairs.join(sa, "doc_a").join(sb, "doc_b").select(
-        "doc_a",
-        "doc_b",
-        F.round(agree / F.lit(num_hashes), 6).alias("est_jaccard"),
-    )
-
-    # Exact shingle SETS as one persisted array column (distinct by
-    # construction in word_shingles_of), built for REPRESENTATIVES only:
-    # the pair join then computes the true Jaccard with
-    # array_intersect — no shingle explode, no per-branch
-    # re-shingling. At production scale this table persists to
-    # storage once.
-    sh_arr = (
-        fan_out(reps, id_col)
-        .withColumn("__w", F.split(F.col(text_col), " "))
-        .select(
-            F.col(id_col), word_shingles_of(F.col("__w"), shingle_n).alias("__sh")
-        )
-        .transform(ring_persist)
-    )
-    shared = F.size(F.array_intersect("__sha", "__shb"))
-    union = F.size("__sha") + F.size("__shb") - shared
-    truth = (
-        pairs.join(
+    cand = (
+        pairs.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select("doc_a", "doc_b", (agree / F.lit(num_hashes)).alias("__j"))
+        .join(
             sh_arr.select(F.col(id_col).alias("doc_a"), F.col("__sh").alias("__sha")),
             "doc_a",
         )
@@ -1184,27 +1217,8 @@ def minhash_estimate_pairs(
             sh_arr.select(F.col(id_col).alias("doc_b"), F.col("__sh").alias("__shb")),
             "doc_b",
         )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.when(union > 0, F.round(shared / union, 6))
-            .otherwise(F.lit(0.0))
-            .alias("true_jaccard"),
-        )
     )
-    rep_scored = est.join(truth, ["doc_a", "doc_b"]).withColumn(
-        "abs_err", F.round(F.abs(F.col("est_jaccard") - F.col("true_jaccard")), 6)
-    )
-    # Within-group pairs of identical texts score est = truth = 1.0
-    # and abs_err = 0.0 exactly. Only groups with a non-empty shingle
-    # set pair within themselves: shingle-less docs never get a
-    # signature (minhash_signature drops them, like the SQL mirror's
-    # explode), so identical short texts are NOT candidates in the
-    # pair form either.
-    return fan_out_rep_pairs(
-        rep_scored, members, id_col, groups.filter("__has_sh"),
-        {"est_jaccard": 1.0, "true_jaccard": 1.0, "abs_err": 0.0},
-    )
+    return groups, members, cand
 
 
 def simhash_hamming_pairs(
@@ -1384,27 +1398,10 @@ def srp_near_dup_pairs(
     below excludes them: `sq < inf` is false for both NaN (NaN ranks
     above inf) and Inf; NULL elements make sq NULL (also false);
     zero-norm vectors stay, excluded downstream exactly as before."""
-    sq = F.aggregate(
-        F.col(vec_col),
-        F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
-    )
-    base = emb.filter(
-        F.col(vec_col).isNotNull() & (sq < F.lit(float("inf")))
-    ).select(F.col(id_col), F.col(vec_col))
-    groups = (
-        base.groupBy(vec_col)
-        .agg(F.min(id_col).alias("__rep"), F.count(F.lit(1)).alias("__cnt"))
-        .withColumn(
-            "__nz",
-            F.aggregate(
-                F.col(vec_col),
-                F.lit(0.0),
-                lambda acc, x: acc + x.cast("double") * x.cast("double"),
-            )
-            > 0,
-        )
-        .localCheckpoint(eager=True)
+    sq = sum_sq(F.col(vec_col))
+    base = emb.filter(F.col(vec_col).isNotNull() & (sq < F.lit(float("inf"))))
+    groups, members = collapse_exact(
+        base.select(F.col(id_col), F.col(vec_col)), [vec_col], id_col, [], sq > 0
     )
     reps = groups.select(F.col("__rep").alias(id_col), F.col(vec_col))
     sig = srp_signature(reps, id_col, vec_col, bits, dims)
@@ -1430,14 +1427,9 @@ def srp_near_dup_pairs(
         )
         .filter(F.col("cos") >= threshold)
     )
-    members = (
-        base.join(groups.select(F.col(vec_col), "__rep"), vec_col)
-        .select(F.col(id_col), "__rep")
-        .localCheckpoint(eager=True)
-    )
     # Degenerate threshold > 1.0 admits nothing (cos caps at 1.0 for
     # identical vectors), matching the uncollapsed form: no diagonal.
-    diag = groups.filter("__nz") if threshold <= 1.0 else None
+    diag = groups.filter("__pairable") if threshold <= 1.0 else None
     return fan_out_rep_pairs(
         rep_pairs, members, id_col, diag, {"cos": 1.0}, "vec_a", "vec_b"
     )
@@ -1461,9 +1453,9 @@ def minhash_containment_pairs(
 
     Estimated intersection from the MinHash Jaccard estimate:
     I = J/(1+J) · (|A|+|B|) (inclusion-exclusion solved for I), then
-    C = I/|size|. Same physical shape as minhash_estimate_pairs:
-    persisted signature table feeds bands + both join sides; exact
-    shingle sets join only onto CANDIDATE pairs.
+    C = I/|size|. The candidates and their signature agreement and
+    shingle sets come from minhash_rep_candidates, as in
+    minhash_estimate_pairs.
 
     Exact duplicates are pre-collapsed (the minhash_estimate_pairs
     move): every score is a pure function of the two texts, so the
@@ -1472,63 +1464,26 @@ def minhash_containment_pairs(
     orientation relative to its rep pair, and within-group pairs of
     identical texts emit 1.0 across the board (A = B makes both
     directions exact and the estimate saturates)."""
-    groups, members = collapse_exact_text(
-        docs, id_col, text_col, shingle_n, members_materialize="checkpoint"
-    )
-    reps = groups.select(F.col("__rep").alias(id_col), text_col)
-    sig = minhash_signature(reps, id_col, text_col, num_hashes, shingle_n).transform(ring_persist)
-    pairs = lsh_candidate_pairs(sig, id_col, num_hashes, band_size)
-
-    sa = sig.select(
-        F.col(id_col).alias("doc_a"),
-        *[F.col(f"mh{j}").alias(f"__a{j}") for j in range(num_hashes)],
-    )
-    sb = sig.select(
-        F.col(id_col).alias("doc_b"),
-        *[F.col(f"mh{j}").alias(f"__b{j}") for j in range(num_hashes)],
-    )
-    agree = sum(
-        (F.col(f"__a{j}") == F.col(f"__b{j}")).cast("int") for j in range(num_hashes)
-    )
-    est = pairs.join(sa, "doc_a").join(sb, "doc_b").select(
-        "doc_a", "doc_b", (agree / F.lit(num_hashes)).alias("__j")
-    )
-
-    sh_arr = (
-        fan_out(reps, id_col)
-        .withColumn("__w", F.split(F.col(text_col), " "))
-        .select(
-            F.col(id_col), word_shingles_of(F.col("__w"), shingle_n).alias("__sh")
-        )
-        .transform(ring_persist)
+    groups, members, cand = minhash_rep_candidates(
+        docs, id_col, text_col, num_hashes, band_size, shingle_n
     )
     shared = F.size(F.array_intersect("__sha", "__shb")).cast("double")
     za = F.size("__sha").cast("double")
     zb = F.size("__shb").cast("double")
     est_i = F.col("__j") / (1 + F.col("__j")) * (za + zb)
-    rep_scored = (
-        est.join(
-            sh_arr.select(F.col(id_col).alias("doc_a"), F.col("__sh").alias("__sha")),
-            "doc_a",
-        )
-        .join(
-            sh_arr.select(F.col(id_col).alias("doc_b"), F.col("__sh").alias("__shb")),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round("__j", 6).alias("est_jaccard"),
-            F.round(F.least(est_i / za, F.lit(1.0)), 6).alias("est_cont_a_in_b"),
-            F.round(F.least(est_i / zb, F.lit(1.0)), 6).alias("est_cont_b_in_a"),
-            F.round(shared / za, 6).alias("true_cont_a_in_b"),
-            F.round(shared / zb, 6).alias("true_cont_b_in_a"),
-        )
+    rep_scored = cand.select(
+        "doc_a",
+        "doc_b",
+        F.round("__j", 6).alias("est_jaccard"),
+        F.round(F.least(est_i / za, F.lit(1.0)), 6).alias("est_cont_a_in_b"),
+        F.round(F.least(est_i / zb, F.lit(1.0)), 6).alias("est_cont_b_in_a"),
+        F.round(shared / za, 6).alias("true_cont_a_in_b"),
+        F.round(shared / zb, 6).alias("true_cont_b_in_a"),
     )
     # Within-group pairs of identical texts score exactly 1.0 on all
     # five columns, so the directional swap is the identity on them.
     return fan_out_rep_pairs(
-        rep_scored, members, id_col, groups.filter("__has_sh"),
+        rep_scored, members, id_col, groups.filter("__pairable"),
         dict.fromkeys(
             ["est_jaccard", "est_cont_a_in_b", "est_cont_b_in_a",
              "true_cont_a_in_b", "true_cont_b_in_a"],
@@ -1701,18 +1656,20 @@ def setsim_prefix_join(
     )
 
 
-def collapse_exact_text(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    checkpoint: bool = True,
-    members_materialize: str = "persist",
+def collapse_exact(
+    base: DataFrame,
+    keys: list[str],
+    id_col: str,
+    carry: list[str],
+    pairable: Column,
 ) -> tuple[DataFrame, DataFrame]:
-    """Exact-duplicate pre-collapse for similarity operators whose
-    metric is a pure function of the text (shingle Jaccard, minhash
-    signature, n-gram overlap): group on md5(text), keep the min-id
-    representative per distinct content.
+    """THE exact-duplicate pre-collapse for similarity operators whose
+    metric is a pure function of the row's content (shingle Jaccard,
+    minhash signature, n-gram overlap, cosine): group ``base`` on the
+    content ``keys`` and keep the min-id representative per distinct
+    content. Text keys on a content hash (collapse_exact_text);
+    vectors key on the raw array (exact bit-equality, no hash, no
+    collision risk).
 
     Why this is THE scale fix for pair-emitting similarity ops: a
     viral boilerplate document duplicated 10^5 times contributes
@@ -1727,84 +1684,99 @@ def collapse_exact_text(
 
     Returns ``(groups, members)``:
 
-    - ``groups``: one row per distinct text — ``__k`` (content hash),
-      ``__rep`` (min id), ``text_col``, ``__cnt`` (group size),
-      ``__has_sh`` (≥ shingle_n words, i.e. a non-empty shingle set —
-      empty-set docs have undefined Jaccard and never pair).
-      localCheckpointed once: it feeds the rep-level similarity
-      pipeline, the identity buckets, AND the fan-out join.
-    - ``members``: (id, __rep, __has_sh) membership map for fan-out.
+    - ``groups``: one row per distinct content — the ``keys``,
+      ``__rep`` (min id), ``__cnt`` (group size), the ``carry``
+      columns (first value per group) and ``__pairable``, the
+      ``pairable`` expression over the group row: whether two members
+      of the group score against each other (text: a non-empty
+      shingle set; vectors: a non-zero norm). localCheckpointed once:
+      it feeds the rep-level similarity pipeline, the identity
+      buckets, AND the fan-out join.
+    - ``members``: (id, __rep, __pairable) membership map, plain
+      lineage. fan_out_rep_pairs materializes it for its two plan
+      branches; every other consumer reads it once, where any
+      materialization is pure overhead.
 
-    Cost: one map-side-combinable groupBy on the content hash (the
-    dedup_exact shuffle) + one equi-join back. Both scale linearly.
-    And when ``docs`` carries a STORED ``content_hash`` column — the
+    Cost: one map-side-combinable groupBy on the keys + one equi-join
+    back. Both scale linearly. Rows with a NULL key form a group but
+    never join back into ``members`` (NULL keys never match)."""
+    groups = exact_groups(base, keys, id_col, carry, pairable).localCheckpoint(
+        eager=True
+    )
+    members = (
+        base.select(F.col(id_col), *keys)
+        .join(groups.select(*keys, "__rep", "__pairable"), keys)
+        .select(F.col(id_col), "__rep", "__pairable")
+    )
+    return groups, members
+
+
+def exact_groups(
+    base: DataFrame,
+    keys: list[str],
+    id_col: str,
+    carry: list[str],
+    pairable: Column,
+) -> DataFrame:
+    """The lineage (not yet checkpointed) ``groups`` frame of
+    collapse_exact — exposed so layout tests can read the collapse
+    groupBy's physical plan."""
+    return (
+        base.groupBy(*keys)
+        .agg(
+            F.min(id_col).alias("__rep"),
+            F.count(F.lit(1)).cast("long").alias("__cnt"),
+            *[F.first(c).alias(c) for c in carry],
+        )
+        .withColumn("__pairable", pairable)
+    )
+
+
+def sum_sq(vec: Column) -> Column:
+    """Σx² of an array column in double (NULL when the array or any
+    element is NULL): the zero-norm and non-finite test of the
+    vector collapses."""
+    return F.aggregate(
+        vec, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
+    )
+
+
+def text_collapse_args(
+    docs: DataFrame, id_col: str, text_col: str, shingle_n: int
+) -> tuple:
+    """collapse_exact's arguments for text: key on the content hash,
+    carry the text, pairable = at least ``shingle_n`` words (a
+    non-empty shingle set — empty-set docs have undefined Jaccard and
+    never pair).
+
+    When ``docs`` carries a STORED ``content_hash`` column — the
     curated corpus convention (io.layout.write_curated_bucketed,
     bucketed on that column) — the groupBy keys on the stored column
     instead of recomputing md5, so on a curated scan Catalyst sees
     the clustering and BOTH the groupBy and the members join-back run
     exchange-free: the whole text-tier collapse becomes scan-side
     work, mirroring the genomics bucketed-layout win. The stored hash
-    is definitionally md5(text), so the two paths are bit-identical.
-    """
+    is definitionally md5(text), so the two paths are bit-identical."""
     key = (
         F.col("content_hash")
         if "content_hash" in docs.columns
         else F.md5(F.col(text_col))
     )
-    base = docs.select(
-        F.col(id_col),
-        F.col(text_col),
-        key.alias("__k"),
-    )
-    groups = (
-        base.groupBy("__k")
-        .agg(
-            F.min(id_col).alias("__rep"),
-            F.first(text_col).alias(text_col),
-            F.count(F.lit(1)).cast("long").alias("__cnt"),
-        )
-        .withColumn(
-            "__has_sh",
-            F.size(F.split(F.col(text_col), " ")) >= F.lit(shingle_n),
-        )
-    )
-    if checkpoint:
-        # Materialized once: groups feeds the rep-level similarity
-        # pipeline, the identity buckets, and the fan-out join.
-        # checkpoint=False exposes the lineage plan so callers (and
-        # the curated-layout tests) can verify the collapse groupBy
-        # runs against the scan's reported clustering.
-        groups = groups.localCheckpoint(eager=True)
-    # members is built AFTER the checkpoint branch decides which
-    # `groups` to use (building it first and rebuilding on the
-    # checkpointed frame was dead plan construction). How it is
-    # materialized depends on the CALLER's fan-out shape
-    # (``members_materialize``), because Spark 4 AQE turns every USE
-    # of a persisted frame into its own TableCacheQueryStage
-    # materialization job (r13 job profile: setsim_prefix_join's four
-    # member fan-out sides = four extra one-task driver jobs ≈ 4λ of
-    # pure launch latency):
-    #
-    # - "persist" (default): ring_persist — right when members is
-    #   consumed a few times ACROSS actions; one shared narrow
-    #   (id, hash, rep, has_sh) cache, lazily filled.
-    # - "checkpoint": localCheckpoint(eager) — right when ONE action
-    #   references members from several plan branches: one
-    #   materialization job up front, every consumer is a leaf
-    #   ExistingRDD scan with zero per-use stage jobs.
-    # - "none": leave the lineage — right for a SINGLE consumer,
-    #   where any materialization is pure overhead (the one consumer
-    #   re-derives the join exactly once either way; at scale the
-    #   work is identical, one scan + one equi-join).
-    members = base.select(F.col(id_col), "__k").join(
-        groups.select("__k", "__rep", "__has_sh"), "__k"
-    )
-    if checkpoint:
-        if members_materialize == "checkpoint":
-            members = members.localCheckpoint(eager=True)
-        elif members_materialize == "persist":
-            members = ring_persist(members)
-    return groups, members
+    base = docs.select(F.col(id_col), F.col(text_col), key.alias("__k"))
+    pairable = F.size(F.split(F.col(text_col), " ")) >= F.lit(shingle_n)
+    return base, ["__k"], id_col, [text_col], pairable
+
+
+def collapse_exact_text(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    shingle_n: int = 3,
+) -> tuple[DataFrame, DataFrame]:
+    """collapse_exact keyed on the text's content hash: ``groups`` =
+    (__k, __rep, __cnt, text_col, __pairable), ``members`` =
+    (id, __rep, __pairable)."""
+    return collapse_exact(*text_collapse_args(docs, id_col, text_col, shingle_n))
 
 
 def fan_out_rep_pairs(
@@ -1818,13 +1790,16 @@ def fan_out_rep_pairs(
     swap: tuple = (),
 ) -> DataFrame:
     """Member-level pairs from the representative-level pairs of an
-    exact-duplicate collapse (collapse_exact_text and the distinct-
-    vector collapses): the one fan-out every collapsed pair operator
-    shares.
+    exact-duplicate collapse (collapse_exact): the one fan-out every
+    collapsed pair operator shares.
 
     - ``rep_pairs``: (a, b, *scores) over representatives, a < b.
-    - ``members``: (id_col, __rep) membership map; materialize it
-      before the call (two plan branches read it).
+    - ``members``: the collapse's (id_col, __rep) membership map, as
+      lineage. Materialized here: two plan branches of ONE action
+      read it, and Spark 4 AQE turns every use of a persisted frame
+      into its own TableCacheQueryStage job (r13: four one-task jobs
+      for setsim's four member sides), while an eager local
+      checkpoint costs one job and its readers are leaf scans.
     - ``diag_groups``: the collapse's (__rep, __cnt) group rows whose
       members pair AMONG THEMSELVES (a scoreable value: non-empty
       shingle set, non-zero vector), or None when no within-group pair
@@ -1852,6 +1827,7 @@ def fan_out_rep_pairs(
                 *[F.lit(v).alias(c) for c, v in scores.items()],
             )
         )
+    members = members.select(F.col(id_col), "__rep").localCheckpoint(eager=True)
     ma = members.select(F.col("__rep").alias(a), F.col(id_col).alias("__ida"))
     mb = members.select(F.col("__rep").alias(b), F.col(id_col).alias("__idb"))
     keep = F.col("__ida") < F.col("__idb")  # member order == rep order?
@@ -1894,7 +1870,7 @@ def setsim_prefix_join_collapsed(
     - within-group: C(m, 2) id pairs at jaccard 1.0 per non-empty
       duplicate group (docs with < shingle_n words have an empty
       shingle set and undefined 0/0 Jaccard — they never pair, which
-      the __has_sh flag preserves).
+      the __pairable flag preserves).
 
     Same output set as the uncollapsed form; what changes is the
     CANDIDATE mass: with m-member duplicate groups the raw prefix
@@ -1906,14 +1882,12 @@ def setsim_prefix_join_collapsed(
     Identical texts have identical shingle sets, so every non-empty
     duplicate group is a clique at Jaccard exactly 1.0: its pairs are
     the fan_out_rep_pairs diagonal of the group."""
-    groups, members = collapse_exact_text(
-        docs, id_col, text_col, shingle_n, members_materialize="checkpoint"
-    )
+    groups, members = collapse_exact_text(docs, id_col, text_col, shingle_n)
     reps = groups.select(F.col("__rep").alias(id_col), text_col)
     rep_pairs = setsim_prefix_join(reps, id_col, text_col, threshold, shingle_n)
     # Degenerate threshold > 1.0 admits nothing (Jaccard caps at 1.0
     # for identical sets), matching the uncollapsed form: no diagonal.
-    diag = groups.filter("__has_sh") if threshold <= 1.0 else None
+    diag = groups.filter("__pairable") if threshold <= 1.0 else None
     return fan_out_rep_pairs(rep_pairs, members, id_col, diag, {"jaccard": 1.0})
 
 
@@ -1950,13 +1924,9 @@ def setsim_clusters_collapsed(
     the node-universe label table `connected_components_edges` builds
     is members'-rep-domain-sized and was immediately re-joined, so
     folding it away removes one corpus-scale equi-join from the
-    output path. `members` itself stays un-materialized: it has
-    exactly ONE consumer here, so a persist would only add a cache
-    barrier for a table that is derived once either way.
+    output path. `members` is read once, as lineage.
     """
-    groups, members = collapse_exact_text(
-        docs, id_col, text_col, shingle_n, members_materialize="none"
-    )
+    groups, members = collapse_exact_text(docs, id_col, text_col, shingle_n)
     reps = groups.select(F.col("__rep").alias(id_col), text_col)
     # Materialize the qualified pair list ONCE: the incidence below
     # references it from BOTH union branches (doc_a and doc_b sides),
@@ -1988,7 +1958,7 @@ def setsim_clusters_collapsed(
     # join shorter.
     return members.join(conv, members["__rep"] == conv["u"], "left").select(
         members[id_col],
-        F.when(members["__has_sh"], F.coalesce(conv["v"], members["__rep"]))
+        F.when(members["__pairable"], F.coalesce(conv["v"], members["__rep"]))
         .otherwise(members[id_col])
         .alias("cluster_id"),
     )
@@ -2027,7 +1997,7 @@ def lsh_recall_counts(
     scale with distinct content and the group aggregate is one scan.
     """
     groups, _ = collapse_exact_text(docs, id_col, text_col, shingle_n)
-    reps = groups.filter(F.col("__has_sh")).select(
+    reps = groups.filter(F.col("__pairable")).select(
         F.col("__rep").alias(id_col), text_col
     )
     cnts = groups.select(F.col("__rep"), F.col("__cnt"))
@@ -2055,7 +2025,7 @@ def lsh_recall_counts(
         )
 
     hit = truth.join(lsh.select("doc_a", "doc_b"), ["doc_a", "doc_b"])
-    within = groups.filter(F.col("__has_sh")).agg(
+    within = groups.filter(F.col("__pairable")).agg(
         F.coalesce(F.sum(F.col("__cnt") * (F.col("__cnt") - 1) / 2), F.lit(0))
         .cast("long")
         .alias("__w")

@@ -2065,8 +2065,9 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup clustering end-to-end: blocked cosine pairs
-    (extensions.dedup.embedding_near_dup_pairs — equi-join on the
-    coarse block, Arrow matmul inside blocks) closed transitively into
+    (extensions.dedup.embedding_block_pairs, the block scoring of
+    embedding_near_dup_pairs — equi-join on the coarse block, Arrow
+    matmul inside blocks) closed transitively into
     duplicate clusters (connected_components over the pair graph, each
     pair its own bucket). Only vectors that appear in some pair are
     labeled — the output is the dedup worklist, keyed by its
@@ -2085,26 +2086,19 @@ def q_dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join; zero-norm groups never pair (NaN cosine) and stay
     unlabeled, matching the oracle."""
     emb = _t(spark, sf_dir, "embeddings")
-    base = emb.select("label", "vec_id", "embedding")
-    groups = (
-        base.groupBy("label", "embedding")
-        .agg(
-            F.min("vec_id").alias("__rep"),
-            F.count(F.lit(1)).cast("long").alias("__cnt"),
-        )
-        .withColumn(
-            "__nz",
-            F.aggregate(
-                F.col("embedding"),
-                F.lit(0.0),
-                lambda acc, x: acc + x.cast("double") * x.cast("double"),
-            )
-            > 0,
-        )
-        .localCheckpoint(eager=True)
+    groups, members = dd.collapse_exact(
+        emb.select("label", "vec_id", "embedding"),
+        ["label", "embedding"],
+        "vec_id",
+        [],
+        dd.sum_sq(F.col("embedding")) > 0,
     )
-    reps = groups.select("label", F.col("__rep").alias("vec_id"), "embedding")
-    pairs = dd.embedding_near_dup_pairs(reps, block_col="label", threshold=0.3)
+    # Representatives are distinct already: score their blocks
+    # directly (a second collapse would be an identity).
+    pairs = dd.embedding_block_pairs(
+        groups.select("label", F.col("__rep").alias("vec_id"), "embedding"),
+        "vec_id", "embedding", "label", 0.3, 1024,
+    )
     pid = F.concat_ws("|", F.col("vec_a"), F.col("vec_b"))
     # Both incidence rows per pair in ONE pass (a two-branch union
     # would recompute the Arrow pair-scoring subtree per branch —
@@ -2120,14 +2114,11 @@ def q_dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Multi-member non-zero groups pair within themselves (cos 1.0 >=
     # threshold), so their rep is always labeled even with no cross
     # edge; singletons are labeled only via a cross pair.
-    ident = groups.filter((F.col("__cnt") >= 2) & F.col("__nz")).select(
+    ident = groups.filter((F.col("__cnt") >= 2) & F.col("__pairable")).select(
         F.col("__rep").alias("node"),
         F.concat(F.lit("self|"), F.col("__rep")).alias("key"),
     )
     cc = dd.connected_components(inc.unionByName(ident))
-    members = base.join(
-        groups.select("label", "embedding", "__rep"), ["label", "embedding"]
-    ).select("vec_id", "__rep")
     return members.join(cc, members["__rep"] == cc["node"]).select(
         "vec_id", "cluster_id"
     )
@@ -4351,39 +4342,6 @@ def _adaptive_cell_assign(e: DataFrame, vectors: DataFrame | None = None) -> Dat
     )
 
 
-def _collapse_exact_vectors(e: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Exact-duplicate pre-collapse for embeddings — the vector twin
-    of dedup.collapse_exact_text. Identical float arrays have cosine
-    1.0 to each other and IDENTICAL cosine to every other vector, and
-    cell assignment is a pure function of the embedding, so every
-    copy lands in the same cell as its representative: pair-emitting
-    cell stages (semdedup, kNN graph) can run over DISTINCT vectors
-    and reconstruct per-copy outputs arithmetically. Without this, m
-    copies of one vector co-locate BY CONSTRUCTION and the within-
-    cell pair join carries C(m,2) rows per duplicate group — the r6
-    1000x embeddings sweep (1000-member groups -> ~10^9 pair rows)
-    is the measured failure. groupBy on the raw array is exact
-    bit-equality.
-
-    Returns ``(groups, members)``: groups = (embedding, __rep=min id,
-    __cnt), checkpointed (feeds the rep pipeline AND the fan-out);
-    members = (vec_id, __rep)."""
-    groups = (
-        e.groupBy("embedding")
-        .agg(
-            F.min("vec_id").alias("__rep"),
-            F.count(F.lit(1)).cast("long").alias("__cnt"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    members = (
-        e.select("vec_id", "embedding")
-        .join(groups.select("embedding", "__rep"), "embedding")
-        .select("vec_id", "__rep")
-    )
-    return groups, members
-
-
 @q(
     "semdedup_prune",
     f"""
@@ -4413,22 +4371,29 @@ def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic (measured 15.4x wall at 10x data before this; the
     count() driving k is a single scalar, the one collect this
     operator makes). Exact-duplicate vectors are pre-collapsed
-    (_collapse_exact_vectors): copies co-locate by construction, so
-    the raw pair join carries C(m,2) rows per m-copy group (~10^9 at
-    the 1000x sweep's 1000-member groups); instead the pair join
-    runs over DISTINCT vectors and per-copy rows are reconstructed —
-    a non-minimum copy always has an earlier identical same-cell
-    member, so its max_dup_cos is exactly round(cos(v,v),6) = 1.0;
-    a representative (the group minimum) can only be flagged by
-    OTHER groups, whose members all compare at the rep-level cosine
-    and include an earlier one iff the other group's MINIMUM id is
-    smaller — precisely the rep-level x.vec_id < y.vec_id join.
+    (dedup.collapse_exact on the raw array): copies co-locate by
+    construction, so the raw pair join carries C(m,2) rows per m-copy
+    group (~10^9 at the 1000x sweep's 1000-member groups); instead
+    the pair join runs over DISTINCT vectors and per-copy rows are
+    reconstructed — a non-minimum copy always has an earlier
+    identical same-cell member, so its max_dup_cos is exactly
+    round(cos(v,v),6) = 1.0; a representative (the group minimum)
+    can only be flagged by OTHER groups, whose members all compare at
+    the rep-level cosine and include an earlier one iff the other
+    group's MINIMUM id is smaller — precisely the rep-level
+    x.vec_id < y.vec_id join.
     Zero-norm vectors are dropped end to end: _adaptive_cell_assign
     leaves them unassigned (the uncollapsed form's NULL cosine never
     clears the threshold), and dup_out inner-joins the assignment on
     __rep, so a zero-norm group emits neither rep nor copy rows."""
     e = _t(spark, sf_dir, "embeddings")
-    groups, members = _collapse_exact_vectors(e)
+    groups, members = dd.collapse_exact(
+        e.select("vec_id", "embedding"),
+        ["embedding"],
+        "vec_id",
+        [],
+        dd.sum_sq(F.col("embedding")) > 0,
+    )
     reps = groups.select(F.col("__rep").alias("vec_id"), "embedding")
     # The assignment subtree (a corpus-wide Arrow BLAS pass) feeds
     # BOTH self-join sides plus the copy fan-out — three executions
@@ -5154,7 +5119,13 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     the uncollapsed output row for row; the final window partitions
     on src_id over <= ~16 candidate rows."""
     e = _t(spark, sf_dir, "embeddings")
-    groups, members = _collapse_exact_vectors(e)
+    groups, members = dd.collapse_exact(
+        e.select("vec_id", "embedding"),
+        ["embedding"],
+        "vec_id",
+        [],
+        dd.sum_sq(F.col("embedding")) > 0,
+    )
     # Same gated materialization as semdedup_prune: the Arrow
     # assignment feeds both self-join sides, and the membership map
     # feeds the candidate AND source fan-outs (two corpus scans each

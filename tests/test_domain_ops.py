@@ -1019,7 +1019,7 @@ def test_curated_documents_text_tier_parity_and_collapse_exchange_free(spark):
     be string-compared here (the collapse is behind an eager
     localCheckpoint, and AQE plan strings interleave per-stage
     Initial Plan sections), so the plan assertion targets the
-    collapse lineage directly via checkpoint=False."""
+    collapse lineage directly, built by dd.exact_groups."""
     import __spark_entry__ as entrymod
     from pyspark.sql import functions as F
     from seqdatapipeline_spark.extensions import dedup as dd
@@ -1038,7 +1038,7 @@ def test_curated_documents_text_tier_parity_and_collapse_exchange_free(spark):
     plain = {op: set(map(tuple, qs[op](spark, sf).collect())) for op in ops}
     # Plain-path collapse: md5 computed in-query, groupBy must shuffle.
     plain_docs = spark.read.parquet(f"{sf}/documents.parquet")
-    g_plain, _ = dd.collapse_exact_text(plain_docs, checkpoint=False)
+    g_plain = dd.exact_groups(*dd.text_collapse_args(plain_docs, "doc_id", "text", 3))
     p_plain = g_plain._jdf.queryExecution().executedPlan().toString()
     assert p_plain.count("Exchange hashpartitioning") >= 1
 
@@ -1050,7 +1050,7 @@ def test_curated_documents_text_tier_parity_and_collapse_exchange_free(spark):
             spark, sf, "documents", "content_hash"
         )
         assert curated
-        g_cur, _ = dd.collapse_exact_text(src, checkpoint=False)
+        g_cur = dd.exact_groups(*dd.text_collapse_args(src, "doc_id", "text", 3))
         p_cur = g_cur._jdf.queryExecution().executedPlan().toString()
         assert "Bucketed: true" in p_cur, p_cur
         assert p_cur.count("Exchange hashpartitioning") == 0, p_cur
@@ -1340,7 +1340,7 @@ def test_append_curated_bucketed_keeps_clustering_and_parity(spark, tmp_path):
         assert set(map(tuple, cur.select("doc_id").collect())) == set(
             map(tuple, docs.select("doc_id").collect())
         )
-        g_cur, _ = dd.collapse_exact_text(cur, checkpoint=False)
+        g_cur = dd.exact_groups(*dd.text_collapse_args(cur, "doc_id", "text", 3))
         p_cur = g_cur._jdf.queryExecution().executedPlan().toString()
         assert "Bucketed: true" in p_cur, p_cur
         assert p_cur.count("Exchange hashpartitioning") == 0, p_cur

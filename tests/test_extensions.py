@@ -514,6 +514,30 @@ def test_decontaminate_flags_planted_overlap(spark):
     assert got == {1: 2}
 
 
+def test_single_reader_collapses_take_no_persist_ring_slot(spark):
+    """lsh_recall_counts never reads the collapse's membership map and
+    decontaminate reads it once, so neither may park it in the cap-16
+    persist ring: only fan_out_rep_pairs, whose two plan branches
+    read it, materializes members."""
+    from seqdatapipeline_spark import session
+    from seqdatapipeline_spark.extensions import corpus as cp
+
+    docs = _doc_df(
+        spark,
+        [(i, BASE) for i in range(1, 5)]
+        + [(5, BASE.replace("today", "tonight")), (6, "alpha beta gamma delta epsilon")],
+    )
+    bench = _doc_df(spark, [(100, "alpha beta gamma delta epsilon")])
+    session.clear_memos()
+    ring0 = len(session._RING)
+    (recall,) = dd.lsh_recall_counts(docs).collect()
+    assert len(session._RING) == ring0
+    hits = {r.doc_id: r.n_shared for r in cp.decontaminate(docs, bench, n=4).collect()}
+    assert len(session._RING) == ring0
+    assert hits == {6: 2}
+    assert recall.n_true >= 6  # C(4, 2) within the four BASE copies
+
+
 def test_shuffle_shards_is_permutation_and_seed_sensitive(spark, sf_dir):
     """Every doc appears exactly once, pos is dense 1..N per shard,
     and a different seed draws a different permutation while the same

@@ -608,7 +608,7 @@ def test_stream_into_curated_keeps_fast_paths_current(spark):
         cur = spark.table(name)
         assert cur.count() == docs.count()
         assert set(map(tuple, qs["dedup_minhash_lsh"](spark, sf).collect())) == plain_pairs
-        g_cur, _ = dd.collapse_exact_text(cur, checkpoint=False)
+        g_cur = dd.exact_groups(*dd.text_collapse_args(cur, "doc_id", "text", 3))
         p_cur = g_cur._jdf.queryExecution().executedPlan().toString()
         assert "Bucketed: true" in p_cur
         assert p_cur.count("Exchange hashpartitioning") == 0, p_cur

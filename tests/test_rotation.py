@@ -155,14 +155,10 @@ def test_ast_spans_cover_decorated_function_bodies():
     block finder can stop inside the decorator's string argument —
     which would silently exempt body edits from the recheck
     computation (the bug found while building the r12 tracer)."""
+    import __spark_entry__ as entrymod
     import rotate_window as rw
-    import seqdatapipeline_spark.registry_ext as rx
 
-    fn = rx.QUERIES["dedup_embedding_cosine"] if hasattr(rx, "QUERIES") else None
-    if fn is None:
-        from seqdatapipeline_spark.registry import QUERIES
-
-        fn = QUERIES["dedup_embedding_cosine"]
+    fn = entrymod.queries()["dedup_embedding_cosine"]
     rel, start, end = rw._span(fn)
     with open(os.path.join(REPO, rel)) as f:
         lines = f.readlines()
