@@ -43,6 +43,7 @@ _PRIORITY = [
     "gene_read_count",  # canary, last green r13
     "triangle_count",  # CHANGED since green, last green r9
     "decontaminate_ngram",  # CHANGED since green, last green r11
+    "stream_span_dedup",  # CHANGED since green, last green r11
     "dedup_embedding_cosine",  # CHANGED since green, last green r12
     "srp_embedding_pairs",  # CHANGED since green, last green r12
     "graph_degree_stats",  # CHANGED since green, last green r12
@@ -65,6 +66,7 @@ _PRIORITY = [
     "quality_percentile_by_source",  # CHANGED since green, last green r13
     "knn_graph",  # CHANGED since green, last green r13
     "ivf_pq_topk",  # CHANGED since green, last green r13
+    "stream_minhash_dedup",  # CHANGED since green, last green r13
     "bpe_pair_merge",  # last green r7
     "stream_late_monitor",  # last green r7
     "dedup_threshold_sweep",  # last green r7
@@ -87,8 +89,6 @@ _PRIORITY = [
     "simhash_hamming_pairs",  # last green r8
     "mad_outliers",  # last green r8
     "winsorize_stats",  # last green r8
-    "pmi_bigrams",  # last green r8
-    "rank_fusion_rrf",  # last green r8
 ]
 
 

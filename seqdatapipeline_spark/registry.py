@@ -1180,3 +1180,9 @@ def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "click_id", "user_id", "click_ts", "purchase_id", "purchase_ts", "purchase_value"
     )
+
+
+# The extension and scalar registrations fill QUERIES/ORACLES as an
+# import side effect; importing them here makes `registry` complete on
+# its own (after every name they import from this module is defined).
+from . import registry_ext, registry_scalars  # noqa: E402,F401

@@ -899,6 +899,81 @@ def test_stream_span_dedup_cross_batch(spark, tmp_path):
     assert out2[2].clean_text == novel
 
 
+def test_stream_span_dedup_file_uri_state_path(spark, tmp_path):
+    """A ``file://`` state path is the same store as the plain path:
+    batch 2's first span, stored by batch 1, must be dropped."""
+    from seqdatapipeline_spark.streaming import neardup as nd
+
+    state = "file://" + str(tmp_path / "spans")
+    nd.merge_span_store(_doc_df(spark, [(1, "a b c d e f g h i j")]), state)
+    out = nd.merge_span_store(_doc_df(spark, [(2, "a b c d e k l m n o")]), state).collect()
+    assert [(r.n_spans_kept, r.clean_text) for r in out] == [(1, "k l m n o")]
+
+
+@pytest.mark.parametrize("cutover", [1 << 63, -1], ids=["local", "distributed"])
+def test_band_store_read_error_raises(spark, tmp_path, cutover):
+    """A damaged store is an error, not an empty store: corrupt store
+    files must fail the batch instead of silently dropping every
+    cross-batch pair."""
+    from seqdatapipeline_spark.streaming import neardup as nd
+
+    state = tmp_path / "bands"
+    nd.merge_band_store(_doc_df(spark, [(1, BASE)]), str(state), local_max_bytes=cutover)
+    for part in state.glob("part-*"):
+        part.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        nd.merge_band_store(_doc_df(spark, [(2, BASE)]), str(state), local_max_bytes=cutover)
+
+
+def test_neardup_tiers_are_output_identical(spark, tmp_path):
+    """Both tiers of both stores drain the same 3 small batches: a
+    NULL-text doc, a doc under shingle_n words, an empty batch, a NULL
+    id, an id repeated inside a batch and one re-sent across batches.
+    Pairs, span rows, schemas and store contents must be equal; the
+    driver-local tier's jobs per call are pinned (one collect, a
+    two-job broadcast probe once a store exists, one append when the
+    batch adds rows)."""
+    import pyarrow.parquet as pq
+
+    from seqdatapipeline_spark.streaming import neardup as nd
+
+    short = "alpha beta gamma delta epsilon"
+    batches = [
+        [(1, BASE), (2, BASE.replace("old", "new")), (3, None), (4, "two words"),
+         (5, f"{short} zeta")],
+        [],
+        [(1, BASE), (6, f"{short} eta theta"), (6, f"{short} eta theta"),
+         (None, "an id nobody knows holds these words"), (7, "")],
+    ]
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs():
+        return len(tracker.getJobIdsForGroup(None))
+
+    def drain(tier, cutover):
+        root = "file://" + str(tmp_path / tier)
+        out, n_jobs = [], []
+        for rows in batches:
+            df = _doc_df(spark, rows)
+            j0 = jobs()
+            pairs = nd.merge_band_store(df, root + "/bands", local_max_bytes=cutover)
+            j1 = jobs()
+            spans = nd.merge_span_store(df, root + "/spans", local_max_bytes=cutover)
+            n_jobs.append((j1 - j0, jobs() - j1))
+            out.append((pairs.schema, sorted(map(tuple, pairs.collect())),
+                        spans.schema, sorted(map(tuple, spans.collect()), key=repr)))
+        stores = [sorted(map(tuple, pq.read_table(str(tmp_path / tier / s)).to_pylist()), key=repr)
+                  for s in ("bands", "spans")]
+        return out, stores, n_jobs
+
+    local, local_stores, local_jobs = drain("local", 1 << 63)
+    dist, dist_stores, _ = drain("dist", -1)
+    assert local == dist
+    assert local_stores == dist_stores
+    assert local[0][1] == [(1, 2)] and (1, 2) in local[2][1]  # in-batch, cross-batch
+    assert local_jobs == [(2, 2), (1, 1), (4, 4)]
+
+
 def test_curated_collapse_short_and_empty_text_parity(spark, tmp_path):
     """Curated-vs-plain parity on the adversarial corpus the generated
     tables may not contain: duplicated sub-shingle texts (< 3 words,

@@ -173,6 +173,29 @@ def test_ast_spans_cover_decorated_function_bodies():
     assert '"ann_topk_cosine"' not in block
 
 
+def test_registry_import_alone_registers_every_query():
+    """`registry.QUERIES` must be complete without anyone importing
+    registry_ext / registry_scalars first: re-import the package from
+    scratch (the loaded modules are restored afterwards) and compare
+    with the entry point's query set."""
+    import __spark_entry__ as entrymod
+
+    pkg = "seqdatapipeline_spark"
+    saved = {n: m for n, m in sys.modules.items() if n == pkg or n.startswith(pkg + ".")}
+    for n in saved:
+        del sys.modules[n]
+    try:
+        from seqdatapipeline_spark.registry import QUERIES
+
+        fresh = set(QUERIES)
+    finally:
+        for n in [n for n in sys.modules if n == pkg or n.startswith(pkg + ".")]:
+            del sys.modules[n]
+        sys.modules.update(saved)
+    assert "chunk_documents" in fresh
+    assert fresh == set(entrymod.queries())
+
+
 def test_never_checked_queries_lead_the_window():
     import __spark_entry__ as entrymod
     import rotate_window as rw
