@@ -20,8 +20,6 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 from seqdatapipeline_spark import registry  # noqa: E402
-from seqdatapipeline_spark import registry_ext  # noqa: E402,F401 — populates registry
-from seqdatapipeline_spark import registry_scalars  # noqa: E402,F401 — populates registry
 
 
 def entry(spark: SparkSession) -> DataFrame:

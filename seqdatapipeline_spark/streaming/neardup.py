@@ -14,8 +14,7 @@ band per doc. Each batch:
    read-modify-overwrite race, unlike mutable-state sinks).
 
 Two tiers, chosen per batch from the optimizer's size estimate of the
-batch (driver-side, zero jobs) against a ``local_max_bytes``
-parameter:
+batch (driver-side, zero jobs) against ``LOCAL_MAX_BYTES``:
 
 - **driver-local** (small increments): the keys are computed by the
   same Spark expressions and collected once with ``toArrow``; the
@@ -97,7 +96,6 @@ def merge_band_store(
     text_col: str = "text",
     num_hashes: int = 12,
     band_size: int = 2,
-    local_max_bytes: int = LOCAL_MAX_BYTES,
 ) -> DataFrame:
     """Fold one batch of documents into the band store; return the
     near-dup candidate pairs this batch surfaces (as canonical
@@ -113,7 +111,7 @@ def merge_band_store(
     store = _read_store(
         spark, state_path, StructType([id_field, StructField("band_key", StringType())])
     )
-    if _size_estimate(batch_docs) <= local_max_bytes:
+    if _size_estimate(batch_docs) <= LOCAL_MAX_BYTES:
         return _local_band_pairs(keyed, id_field, store, state_path)
     keyed = keyed.localCheckpoint(eager=True)
     lo, hi = F.least("a", "b").alias("doc_a"), F.greatest("a", "b").alias("doc_b")
@@ -210,7 +208,6 @@ def merge_span_store(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 5,
-    local_max_bytes: int = LOCAL_MAX_BYTES,
 ) -> DataFrame:
     """Incremental C4 span dedup — the streaming half of
     `dedup_spans_exact`. A persistent span store holds the hash of
@@ -231,7 +228,7 @@ def merge_span_store(
     NULL-text rows are excluded, mirroring batch span_dedup (the
     identity only holds if both halves share the text-family NULL
     contract)."""
-    local = _size_estimate(batch_docs) <= local_max_bytes
+    local = _size_estimate(batch_docs) <= LOCAL_MAX_BYTES
     batch_docs = batch_docs.filter(F.col(text_col).isNotNull())
     spark = batch_docs.sparkSession
     w = F.split(F.col(text_col), " ")

@@ -911,21 +911,22 @@ def test_stream_span_dedup_file_uri_state_path(spark, tmp_path):
 
 
 @pytest.mark.parametrize("cutover", [1 << 63, -1], ids=["local", "distributed"])
-def test_band_store_read_error_raises(spark, tmp_path, cutover):
+def test_band_store_read_error_raises(spark, tmp_path, monkeypatch, cutover):
     """A damaged store is an error, not an empty store: corrupt store
     files must fail the batch instead of silently dropping every
     cross-batch pair."""
     from seqdatapipeline_spark.streaming import neardup as nd
 
+    monkeypatch.setattr(nd, "LOCAL_MAX_BYTES", cutover)
     state = tmp_path / "bands"
-    nd.merge_band_store(_doc_df(spark, [(1, BASE)]), str(state), local_max_bytes=cutover)
+    nd.merge_band_store(_doc_df(spark, [(1, BASE)]), str(state))
     for part in state.glob("part-*"):
         part.write_bytes(b"not a parquet file")
     with pytest.raises(Exception, match="FAILED_READ_FILE"):
-        nd.merge_band_store(_doc_df(spark, [(2, BASE)]), str(state), local_max_bytes=cutover)
+        nd.merge_band_store(_doc_df(spark, [(2, BASE)]), str(state))
 
 
-def test_neardup_tiers_are_output_identical(spark, tmp_path):
+def test_neardup_tiers_are_output_identical(spark, tmp_path, monkeypatch):
     """Both tiers of both stores drain the same 3 small batches: a
     NULL-text doc, a doc under shingle_n words, an empty batch, a NULL
     id, an id repeated inside a batch and one re-sent across batches.
@@ -951,14 +952,15 @@ def test_neardup_tiers_are_output_identical(spark, tmp_path):
         return len(tracker.getJobIdsForGroup(None))
 
     def drain(tier, cutover):
+        monkeypatch.setattr(nd, "LOCAL_MAX_BYTES", cutover)
         root = "file://" + str(tmp_path / tier)
         out, n_jobs = [], []
         for rows in batches:
             df = _doc_df(spark, rows)
             j0 = jobs()
-            pairs = nd.merge_band_store(df, root + "/bands", local_max_bytes=cutover)
+            pairs = nd.merge_band_store(df, root + "/bands")
             j1 = jobs()
-            spans = nd.merge_span_store(df, root + "/spans", local_max_bytes=cutover)
+            spans = nd.merge_span_store(df, root + "/spans")
             n_jobs.append((j1 - j0, jobs() - j1))
             out.append((pairs.schema, sorted(map(tuple, pairs.collect())),
                         spans.schema, sorted(map(tuple, spans.collect()), key=repr)))
