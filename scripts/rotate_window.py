@@ -333,31 +333,59 @@ def _py_files(rel: str) -> list[str]:
     return sorted(glob.glob(os.path.join(path, "**", "*.py"), recursive=True))
 
 
-def _identifiers(nodes) -> set[str]:
+def _identifiers(nodes, reads_only: bool = False) -> set[str]:
+    """Names and attribute names in the nodes; with ``reads_only`` an
+    assignment's own target is left out (it is not a read of itself)."""
     out: set[str] = set()
     for node in nodes:
         for sub in ast.walk(node):
-            if isinstance(sub, ast.Name):
+            if isinstance(sub, ast.Name) and (not reads_only or isinstance(sub.ctx, ast.Load)):
                 out.add(sub.id)
             elif isinstance(sub, ast.Attribute):
                 out.add(sub.attr)
     return out
 
 
+def _imported_names(tree, package: str | None) -> set[tuple[str, str]]:
+    """(module, name) for every ``from <package module> import name``
+    in the tree, relative imports resolved against ``package``."""
+    out: set[tuple[str, str]] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom):
+            try:
+                mod = importlib.util.resolve_name("." * node.level + (node.module or ""), package)
+            except (ImportError, ValueError):
+                continue
+            if mod.startswith(PKG):
+                out |= {(mod, alias.name) for alias in node.names}
+    return out
+
+
+def _names_on(bound: list, idents: set[str]) -> set[tuple[str, str]]:
+    """(module, name) for each identifier looked up on a bound package
+    module."""
+    return {
+        (obj.__name__, n)
+        for obj in bound
+        if isinstance(obj, types.ModuleType) and obj.__name__.startswith(PKG)
+        for n in idents
+        if hasattr(obj, n)
+    }
+
+
 def _resolve(bound: list, idents: set[str]) -> list:
     """The bound objects, plus each identifier looked up on the bound
     package modules (``lay.write_curated_bucketed``, also when reached
     through ``self.layout``)."""
-    out = list(bound)
-    for obj in bound:
-        if isinstance(obj, types.ModuleType) and obj.__name__.startswith(PKG):
-            out += [getattr(obj, n) for n in idents if hasattr(obj, n)]
-    return out
+    return list(bound) + [getattr(sys.modules[m], n) for m, n in _names_on(bound, idents)]
 
 
-def _harness_roots() -> list:
-    """Package objects that harness code imports or names."""
+def _harness_roots() -> tuple[list, set[tuple[str, str]]]:
+    """Package objects that harness code imports or names, and the
+    (module, name) pairs it imports or looks up (module constants have
+    no identity of their own to trace)."""
     roots: list = []
+    names: set[tuple[str, str]] = set()
     for rel in HARNESS:
         for path in _py_files(rel):
             with open(path) as f:
@@ -371,14 +399,16 @@ def _harness_roots() -> list:
                         if obj is None:
                             obj = importlib.import_module(f"{node.module}.{alias.name}")
                         bound.append(obj)
-            roots += _resolve(bound, _identifiers([tree]))
-    return roots
+            idents = _identifiers([tree])
+            roots += _resolve(bound, idents)
+            names |= _imported_names(tree, None) | _names_on(bound, idents)
+    return roots, names
 
 
-def _module_level_roots(mod: types.ModuleType, tree) -> list:
-    """Objects named by a module's own top-level code: decorators (the
-    oracle builders inside ``@q(...)``), defaults, class bases and
-    module-level statements, but not def or class bodies."""
+def _module_level_nodes(tree) -> list:
+    """A module's own top-level code: decorators (the oracle builders
+    inside ``@q(...)``), defaults, class bases and module-level
+    statements, but not def or class bodies."""
     nodes: list = []
     for node in tree.body:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
@@ -387,26 +417,39 @@ def _module_level_roots(mod: types.ModuleType, tree) -> list:
             nodes += node.decorator_list + node.bases + node.keywords
         else:
             nodes.append(node)
+    return [n for n in nodes if n is not None]
+
+
+def _module_level_roots(mod: types.ModuleType, tree) -> list:
+    """Objects named by a module's own top-level code."""
     # __all__ entries are the module's declared exports.
-    idents = _identifiers([n for n in nodes if n is not None]) | set(getattr(mod, "__all__", ()))
+    idents = _identifiers(_module_level_nodes(tree)) | set(getattr(mod, "__all__", ()))
     return _resolve([vars(mod)[n] for n in idents if n in vars(mod)], idents)
 
 
 
 
 def unreached_defs(keep=()) -> dict[str, tuple[str, int, int]]:
-    """'module.def' -> span for every top-level package def or class
+    """'module.name' -> span for every top-level package def or class
     that no registered query, no harness file and no package
-    module-level code reaches through the dependency tracer. Tests are
-    not roots: code only a test reaches is checked by nothing.
+    module-level code reaches through the dependency tracer, and for
+    every module-level constant (a non-callable top-level assignment)
+    that none of them reads. Tests are not roots: code only a test
+    reaches is checked by nothing.
 
-    ``keep`` names defs ('io.layout.reattach_curated') kept on purpose:
-    what they reach counts as reached, and each is reported only while
-    nothing else reaches it."""
+    A constant is read when a reached def names it, when module-level
+    code of its own module names it, or when a harness file or any
+    package module imports it or looks it up on its module.
+
+    ``keep`` names defs or constants ('io.layout.reattach_curated')
+    kept on purpose: what they reach counts as reached, and each is
+    reported only while nothing else reaches it."""
     import __spark_entry__ as entrymod
 
-    roots = list(entrymod.queries().values()) + _harness_roots()
+    roots, names_read = _harness_roots()
+    roots += list(entrymod.queries().values())
     defs: dict[str, tuple[str, int, int]] = {}
+    consts: dict[str, tuple[str, str, tuple[str, int, int]]] = {}
     for path in _py_files(PKG):
         rel = os.path.relpath(path, REPO)
         modname = rel[:-3].replace(os.sep, ".").removesuffix(".__init__")
@@ -414,10 +457,22 @@ def unreached_defs(keep=()) -> dict[str, tuple[str, int, int]]:
         with open(path) as f:
             tree = ast.parse(f.read())
         roots += _module_level_roots(mod, tree)
+        names_read |= {(modname, n) for n in _identifiers(_module_level_nodes(tree), True)}
+        names_read |= _imported_names(tree, mod.__package__)
         spans = _ast_spans(path)
+        prefix = modname.removeprefix(PKG).lstrip(".") + "."
         for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                defs[f"{modname.removeprefix(PKG + '.')}.{node.name}"] = (rel, *spans[node.name])
+                defs[f"{prefix}{node.name}".lstrip(".")] = (rel, *spans[node.name])
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                for t in targets:
+                    # __all__ is read by star-imports, not by code
+                    if not isinstance(t, ast.Name) or t.id == "__all__":
+                        continue
+                    span = _const_span(mod, t.id)
+                    if span and not callable(vars(mod).get(t.id)):
+                        consts[f"{prefix}{t.id}".lstrip(".")] = (modname, t.id, span)
     seen: set = set()
     reached: set = set()
     for obj in roots:
@@ -426,8 +481,12 @@ def unreached_defs(keep=()) -> dict[str, tuple[str, int, int]]:
     for name in keep:
         modname, _, attr = f"{PKG}.{name}".rpartition(".")
         kept |= _trace_obj(getattr(importlib.import_module(modname), attr), seen)
+    consts = {
+        name: span for name, (modname, attr, span) in consts.items()
+        if (modname, attr) not in names_read
+    }
     return {
-        name: span for name, span in defs.items()
+        name: span for name, span in {**defs, **consts}.items()
         if span not in reached and (name in keep or span not in kept)
     }
 

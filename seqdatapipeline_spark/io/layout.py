@@ -270,13 +270,23 @@ def append_curated_bucketed(
     and every scan keeps reporting the clustering: consumers stay
     exchange-free, now over base + appended data. Pre-repartitioning
     on the bucket key keeps it to at most one new file per bucket per
-    batch (run compact_layout periodically to fold small files).
-    ``n_buckets``/``sort_cols`` are read from the table's own spec by
-    Spark — parameters here are only for the repartition hint and an
-    optional within-batch sort to preserve row-group skipping."""
+    batch (run compact_curated periodically to fold small files).
+    Spark hashes the rows with the table's own bucket spec; the
+    parameters here are only the repartition width (default: the
+    bucket count in the table's `_sg_spec.json` manifest, so the batch
+    lands as at most one file per bucket) and an optional within-batch
+    sort to preserve row-group skipping."""
     spark = df.sparkSession
     if n_buckets is None:
-        n_buckets = 32
+        from .sinks import read_table_spec, resolve_table_location
+
+        spec = read_table_spec(spark, resolve_table_location(spark, name))
+        if spec is None or not spec.get("n_buckets"):
+            raise ValueError(
+                f"no bucketed _sg_spec.json manifest for {name} — re-curate it "
+                "once (any r11+ curated write mints the manifest) or pass n_buckets"
+            )
+        n_buckets = int(spec["n_buckets"])
     batch = df.repartition(n_buckets, F.col(bucket_col))
     if sort_cols:
         batch = batch.sortWithinPartitions(bucket_col, *sort_cols)

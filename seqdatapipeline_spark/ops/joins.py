@@ -13,15 +13,29 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import Memo, memo_key
+from ..session import Memo, fan_out, memo_key, no_aqe
 
 # interval_count_adaptive's memoized built plans; each entry holds its
 # persisted bin-count table.
 _INTERVAL_STATS = Memo("interval-stats", 8)
 _adaptive_stats_clear = _INTERVAL_STATS.clear
+
+# interval_count_adaptive's routing constants, read at call time (tests
+# patch them to force a route or a width). The sparse route's bin width
+# is the optimum of the sf0.1 sweep (25-400) and the 10x re-sweep; the
+# route holds while no bin of that width holds more than
+# MAX_POINTS_PER_BIN points (measured crossover: sparse wins 1.0 s vs
+# 1.8 s at sf0.1, dense wins 2.5 s vs 4.7 s at 10x and 18 s vs 617 s at
+# 100x). The dense route sizes its bins to hold TARGET_POINTS_PER_BIN
+# points (the sf0.1 sweep optimum) and rolls them up into superbins of
+# SUPERBIN_BINS bins.
+TUNED_BIN = 50
+MAX_POINTS_PER_BIN = 1000
+TARGET_POINTS_PER_BIN = 273
+SUPERBIN_BINS = 4096
 
 
 def mate_pair_enumerate(
@@ -262,208 +276,188 @@ def skew_router_join(
     )
 
 
-def interval_count_binned(
-    points: DataFrame,
-    intervals: DataFrame,
-    group_cols: list[str],
-    bin_size: int | str = 50,
-    point_chrom: str = "rname",
-    point_pos: str = "pos",
-    ivl_chrom: str = "chrom",
-    ivl_start: str = "start",
-    ivl_end: str = "end",
-    count_col: str = "n",
-    target_points_per_bin: int = 273,
-    precomputed_bin_counts: DataFrame | None = None,
+def interval_count_adaptive(
+    points: DataFrame, intervals: DataFrame, group_cols: list[str]
 ) -> DataFrame:
     """Count points per interval group **without materializing the
     point×interval pairs** — the scale form of htseq-count / coverage
-    classification when the answer is a count, not the pairs.
+    classification when the answer is a count, not the pairs. Points
+    are (``rname``, ``pos``), intervals (``chrom``, ``start``, ``end``,
+    *group_cols*), closed on both ends; the output is *group_cols* plus
+    the count ``n``, equal to
+    ``interval_join_binned(...).groupBy(group_cols).count()`` (checked
+    in tests).
 
-    A naive overlap join can emit orders of magnitude more rows than
-    either input (dense intervals × dense points). Instead:
+    Each point falls in bin ``floor(pos / width)``. Only the two edge
+    bins of an interval need the exact ``pos BETWEEN start AND end``
+    test against raw points; its interior bins are counted wholesale by
+    one of two terms, picked from the statistic the dispatcher observes:
 
-    - **interior bins**: a bin strictly inside [start, end] contributes
-      its pre-aggregated point count — a join of exploded interval bins
-      against a per-(chrom, bin) count table that is |bins| rows, not
-      |points| rows, with map-side partial aggregation on both sides.
-    - **edge bins**: only the first/last bin of each interval needs the
-      exact ``pos BETWEEN start AND end`` test against raw points, so
-      the expensive comparison touches ~2/span of the data.
+    - **sparse** (no ``TUNED_BIN``-wide bin holds more than
+      ``MAX_POINTS_PER_BIN`` points): each interval explodes into its
+      interior bins, which join a per-(chrom, bin) count table — lowest
+      constant factor, measured fastest up to ~1000 points per bin.
+    - **dense**: a distributed prefix sum, two signed F-lookups per
+      interval, with the width sized to ``TARGET_POINTS_PER_BIN``. At a
+      fixed width the edge join grows with points per bin, and shrinking
+      bins grows the interior explode instead (384x wall at 100x
+      replication of both sides over a fixed domain); the prefix form is
+      linear in |points| + |intervals| at any density.
 
-    Equivalent to ``interval_join_binned(...).groupBy(group).count()``
-    (closed interval on both ends), checked in tests.
+    The result is bit-identical for any width and either term, so the
+    choice moves only the physical plan.
 
-    ``bin_size="auto"`` sizes bins from point density so
-    points-per-bin stays ≈ ``target_points_per_bin`` (the sf0.1 sweep
-    optimum) as depth grows. With a FIXED bin width the edge-bin exact
-    join does work ∝ intervals × points-per-bin — quadratic when both
-    sides grow over a fixed coordinate domain; adaptive width keeps it
-    linear. The two sizing inputs are a parquet-metadata row count and
-    a min/max over the interval dim — scalar jobs, not data collects.
-    The result is bit-identical for ANY bin size (the rewrite is exact
-    regardless); only the cost model moves.
+    The decision statistic is the per-(chrom, bin) count table at
+    ``TUNED_BIN``, persisted: its rows are bounded by domain/bin width
+    (never ∝ |points|), its ``max`` is exactly what the edge join's
+    cost depends on (robust to hot spots, unlike a mean), and the sparse
+    term joins that SAME table, so the probe scan replaces a scan the
+    plan needed anyway. The dense term sizes its width from the table's
+    ``sum``. Two eager jobs per call: the interval min/max and the
+    table's max/sum, both with AQE scoped off (under AQE each becomes
+    3-5 stage jobs; measured r10, 9 jobs / 0.89-1.08 s of plan build vs
+    3 jobs / ~0.5 s). Both aggregates are skew-free by construction, so
+    runtime re-planning could improve nothing; the RETURNED plan keeps
+    AQE. Empty ``intervals`` (min/max NULL) return an empty frame of
+    the output schema without scanning points.
 
-    ``precomputed_bin_counts``: per-(``__c``, ``__bin``) count table at
-    exactly ``bin_size`` width, typically the (persisted, tiny — rows
-    bounded by domain/bin_size) table the adaptive dispatcher already
-    built for its decision stats. Supplying it removes one full scan
-    of ``points`` from the interior plan; the edge join still probes
-    raw points (it needs positions, which the count table lacks)."""
-    from ..session import fan_out
-
-    if bin_size == "auto":
-        n_pts = points.count()
-        lo, hi = intervals.agg(F.min(ivl_start), F.max(ivl_end)).first()
+    The built plan is MEMOIZED per (session, input fingerprints, group
+    columns, the four routing constants read at this call;
+    session.memo_key), so a repeat call over the same inputs skips both
+    stats jobs and the ~0.5 s of py4j plan construction, and a patched
+    constant never gets a plan built for the other route. The entry
+    holds the persisted bin table, so the interior join keeps hitting
+    the same storage entry; it is as stale as any persisted frame over
+    mutated input files. Bounded at 8 entries, FIFO; evicted entries
+    unpersist their bin table."""
+    ck = memo_key(
+        (points, intervals),
+        tuple(group_cols),
+        TUNED_BIN,
+        MAX_POINTS_PER_BIN,
+        TARGET_POINTS_PER_BIN,
+        SUPERBIN_BINS,
+    )
+    cached = _INTERVAL_STATS.get(ck)
+    if cached is not None:
+        return cached
+    spark = points.sparkSession
+    with no_aqe(spark):
+        lo, hi = intervals.agg(F.min("start"), F.max("end")).first()
+    if lo is None or hi is None:
+        return intervals.select(*group_cols).limit(0).withColumn("n", F.lit(0).cast("long"))
+    # Points outside [lo, hi] can match no interval: filtering them at
+    # the scan (a pushed-down range predicate) limits the bin tables to
+    # the interval domain, and makes the density that sizes the dense
+    # width the one the edge join will see.
+    points = points.filter((F.col("pos") >= F.lit(lo)) & (F.col("pos") <= F.lit(hi)))
+    pts, bins = _binned_points(points, TUNED_BIN)
+    # persist() INSIDE the no_aqe scope: the CacheManager compiles the
+    # cached plan at registration time with the session conf of that
+    # moment — registered under AQE it materializes as 3 stage-jobs
+    # (measured: jobs of 3/35/68 tasks) even when the triggering
+    # action runs with AQE off.
+    with no_aqe(spark):
+        bins = bins.persist()
+        max_bn, n_pts = bins.agg(F.max("__bn"), F.sum("__bn")).first()
+    if (max_bn or 0) <= MAX_POINTS_PER_BIN:
+        out = _count_at(pts, bins, intervals, group_cols, TUNED_BIN, dense=False)
+    else:
         domain = max(1.0, float(hi) - float(lo))
-        bin_size = max(1, round(target_points_per_bin * domain / max(n_pts, 1)))
-    b = F.lit(bin_size)
-    # Keyed fan-out on (chrom, bin): lifts map-side parallelism for
-    # row-group-bound local inputs (no-op at scale) and pre-partitions
-    # both the bin-count aggregation and the edge equi-join on the
-    # same keys, so neither adds an exchange.
+        width = max(1, round(TARGET_POINTS_PER_BIN * domain / max(n_pts or 0, 1)))
+        out = _count_at(*_binned_points(points, width), intervals, group_cols, width, dense=True)
+    _INTERVAL_STATS.put(ck, out, bins)
+    return out
+
+
+def _binned_points(points: DataFrame, width: int) -> tuple[DataFrame, DataFrame]:
+    """(``__c``, ``__p``, ``__bin``) per point at bin width ``width``,
+    and its per-(``__c``, ``__bin``) count table (``__bn``). The points
+    are fanned out on (chrom, bin): that lifts map-side parallelism for
+    row-group-bound local inputs (a no-op at scale) and pre-partitions
+    both the count aggregation and the edge equi-join on the same keys,
+    so neither adds an exchange."""
     pts = fan_out(
         points.select(
-            F.col(point_chrom).alias("__c"),
-            F.col(point_pos).alias("__p"),
-            (F.col(point_pos) / b).cast("long").alias("__bin"),
+            F.col("rname").alias("__c"),
+            F.col("pos").alias("__p"),
+            (F.col("pos") / F.lit(width)).cast("long").alias("__bin"),
         ),
         "__c",
         "__bin",
     )
-    bin_counts = (
-        precomputed_bin_counts
-        if precomputed_bin_counts is not None
-        else pts.groupBy("__c", "__bin").agg(F.count("*").alias("__bn"))
+    return pts, pts.groupBy("__c", "__bin").agg(F.count("*").alias("__bn"))
+
+
+def _count_at(
+    pts: DataFrame,
+    bins: DataFrame,
+    intervals: DataFrame,
+    group_cols: list[str],
+    width: int,
+    dense: bool,
+) -> DataFrame:
+    """interval_count_adaptive's count at bin width ``width`` from its
+    binned points and their count table (``_binned_points``): the
+    interior term (``_dense_interior`` or ``_sparse_interior``) plus
+    one contribution per point that passes an interval's edge-bin exact
+    test, summed per group."""
+    ivl = intervals.withColumn("__lo", (F.col("start") / F.lit(width)).cast("long")).withColumn(
+        "__hi", (F.col("end") / F.lit(width)).cast("long")
     )
-    ivl = intervals.withColumn("__lo", (F.col(ivl_start) / b).cast("long")).withColumn(
-        "__hi", (F.col(ivl_end) / b).cast("long")
-    )
-    interior_bins = ivl.filter(F.col("__hi") >= F.col("__lo") + 2).withColumn(
-        "__ibin", F.explode(F.sequence(F.col("__lo") + 1, F.col("__hi") - 1))
-    )
-    interior = interior_bins.join(
-        bin_counts,
-        on=(interior_bins[ivl_chrom] == bin_counts["__c"])
-        & (interior_bins["__ibin"] == bin_counts["__bin"]),
-    ).select(*group_cols, F.col("__bn").alias("__contrib"))
+    inner = ivl.filter(F.col("__hi") >= F.col("__lo") + 2)
+    interior = (_dense_interior if dense else _sparse_interior)(inner, bins, group_cols)
     edge_bins = ivl.withColumn("__ibin", F.explode(F.array_distinct(F.array("__lo", "__hi"))))
     edges = (
         edge_bins.join(
-            pts,
-            on=(edge_bins[ivl_chrom] == pts["__c"]) & (edge_bins["__ibin"] == pts["__bin"]),
+            pts, on=(edge_bins["chrom"] == pts["__c"]) & (edge_bins["__ibin"] == pts["__bin"])
         )
-        .filter((F.col("__p") >= F.col(ivl_start)) & (F.col("__p") <= F.col(ivl_end)))
+        .filter((F.col("__p") >= F.col("start")) & (F.col("__p") <= F.col("end")))
         .select(*group_cols, F.lit(1).alias("__contrib"))
     )
-    return (
-        interior.unionByName(edges)
-        .groupBy(*group_cols)
-        .agg(F.sum("__contrib").alias(count_col))
+    out = interior.unionByName(edges).groupBy(*group_cols).agg(F.sum("__contrib").alias("n"))
+    # Signed lookups net to 0 for groups with no overlapping points;
+    # dropping them restores the inner-join parity of the pair forms
+    # (every per-interval term is non-negative, so 0 == no matches).
+    # Every sparse contribution is positive, so it needs no filter.
+    return out.filter(F.col("n") > 0) if dense else out
+
+
+def _sparse_interior(inner: DataFrame, bins: DataFrame, group_cols: list[str]) -> DataFrame:
+    """Interior term by explosion: every bin strictly inside an interval
+    contributes its pre-aggregated count — a join against a table of
+    |bins| rows, not |points| rows."""
+    interior_bins = inner.withColumn(
+        "__ibin", F.explode(F.sequence(F.col("__lo") + 1, F.col("__hi") - 1))
     )
+    return interior_bins.join(
+        bins,
+        on=(interior_bins["chrom"] == bins["__c"]) & (interior_bins["__ibin"] == bins["__bin"]),
+    ).select(*group_cols, F.col("__bn").alias("__contrib"))
 
 
-def interval_count_prefix(
-    points: DataFrame,
-    intervals: DataFrame,
-    group_cols: list[str],
-    bin_size: int | str = "auto",
-    point_chrom: str = "rname",
-    point_pos: str = "pos",
-    ivl_chrom: str = "chrom",
-    ivl_start: str = "start",
-    ivl_end: str = "end",
-    count_col: str = "n",
-    target_points_per_bin: int = 273,
-    superbin_bins: int = 4096,
-    bounds: tuple | None = None,
-) -> DataFrame:
-    """Interval-COUNT via a distributed prefix sum — linear in
-    |points| + |intervals| at ANY density, where the explode-interior
-    form (``interval_count_binned``) has an inherent sqrt(density)
-    floor: a fixed bin width blows up the edge join as points-per-bin
-    grows (measured 384x wall at 100x replication of both sides over
-    a fixed coordinate domain), while shrinking bins with density
-    blows up the interior explode (intervals x bins-per-interval).
-
-    Here the interior term needs no per-bin join at all: with
-    ``F(q)`` = cumulative count of points in bins <= q,
+def _dense_interior(inner: DataFrame, bins: DataFrame, group_cols: list[str]) -> DataFrame:
+    """Interior term by prefix sum: with ``F(q)`` = count of points in
+    bins <= q,
 
         interior(ivl) = F(hi_bin - 1) - F(lo_bin)
 
-    so each interval costs two F-lookups (emitted as +/- signed
-    contributions and summed by ``group_cols`` — no interval id is
-    ever materialized) plus the same two edge-bin exact probes as the
-    binned form. Adaptive bins then pin points-per-bin for the edge
-    join with no interior penalty, making every term linear.
+    so each interval costs two F-lookups, emitted as +/- signed
+    contributions and summed by ``group_cols`` (no interval id is ever
+    materialized), with no per-bin join.
 
     F is built without a global single-task window: bins roll up into
-    superbins of ``superbin_bins`` bins; the only per-chrom ordered
-    scan runs over the DENSIFIED superbin range (~points /
-    (target*superbin) rows — ~10^6 at 10^12 points), within-superbin
-    prefixes parallelize across superbins, and F at an arbitrary
-    (possibly unpopulated) query bin resolves as-of inside one
-    superbin partition by unioning the signed queries into the
-    bin-count stream and running one ordered sum. Lookup skew (many
-    intervals ending in one hot superbin) widens a window partition
-    by the query count only — query rows are constant-width.
-
-    Bit-identical to ``interval_join_binned(...).groupBy().count()``
-    for any bin size (closed interval on both ends); pytest pins
-    equality with the explode-interior form on randomized inputs.
-
-    Points outside [min(start), max(end)] can match no interval, so
-    they are filtered at the scan (pushed-down range predicate) —
-    this bounds the bin/superbin tables by the interval domain and
-    makes the density that sizes "auto" the density the edge join
-    will actually see, not one diluted by out-of-domain mass.
-
-    ``bounds``: optional precomputed ``(lo, hi, n_pts)`` — interval
-    min/max and the count of points already filtered to that range —
-    from a dispatcher that ran these scalar jobs for its own decision.
-    When given, ``points`` is treated as pre-filtered and neither the
-    min/max aggregate nor the range filter re-runs here (the previous
-    shape re-ran both, one extra Spark job per call)."""
-    from pyspark.sql import Window
-
-    from ..session import fan_out
-
-    if bounds is not None:
-        lo, hi = bounds[0], bounds[1]
-    else:
-        lo, hi = intervals.agg(F.min(ivl_start), F.max(ivl_end)).first()
-        points = points.filter(
-            (F.col(point_pos) >= F.lit(lo)) & (F.col(point_pos) <= F.lit(hi))
-        )
-    if lo is None or hi is None:
-        # Empty intervals: no group can count anything. Short-circuit to
-        # an empty frame of the output schema (group_cols + count_col)
-        # instead of letting the "auto" width math hit float(None).
-        return (
-            intervals.select(*group_cols)
-            .limit(0)
-            .withColumn(count_col, F.lit(0).cast("long"))
-        )
-    if bin_size == "auto":
-        n_pts = bounds[2] if bounds is not None and len(bounds) > 2 else points.count()
-        domain = max(1.0, float(hi) - float(lo))
-        bin_size = max(1, round(target_points_per_bin * domain / max(n_pts, 1)))
-    b = F.lit(bin_size)
-    sbw = F.lit(superbin_bins)
-    pts = fan_out(
-        points.select(
-            F.col(point_chrom).alias("__c"),
-            F.col(point_pos).alias("__p"),
-            (F.col(point_pos) / b).cast("long").alias("__bin"),
-        ),
-        "__c",
-        "__bin",
-    )
-    bin_counts = (
-        pts.groupBy("__c", "__bin")
-        .agg(F.count("*").alias("__bn"))
-        .withColumn("__sb", F.floor(F.col("__bin") / sbw).cast("long"))
-    )
+    superbins of ``SUPERBIN_BINS`` bins; the only per-chrom ordered scan
+    runs over the DENSIFIED superbin range (~points / (target *
+    superbin) rows — ~10^6 at 10^12 points), within-superbin prefixes
+    parallelize across superbins, and F at an arbitrary (possibly
+    unpopulated) query bin resolves as-of inside one superbin partition
+    by unioning the signed queries into the bin-count stream and running
+    one ordered sum. Lookup skew (many intervals ending in one hot
+    superbin) widens a window partition by the query count only — query
+    rows are constant-width."""
+    sbw = F.lit(SUPERBIN_BINS)
+    bin_counts = bins.withColumn("__sb", F.floor(F.col("__bin") / sbw).cast("long"))
     # Exclusive cumulative per superbin over the DENSIFIED range, so a
     # query superbin always equi-joins (populated-only would need a
     # second as-of). The ordered scan is per chrom over ~bins/superbin
@@ -485,17 +479,13 @@ def interval_count_prefix(
         .withColumn("__sbcum", F.coalesce(F.sum("__sbn").over(w_sb), F.lit(0)))
         .select("__c", "__sb", "__sbcum")
     )
-    ivl = intervals.withColumn("__lo", (F.col(ivl_start) / b).cast("long")).withColumn(
-        "__hi", (F.col(ivl_end) / b).cast("long")
-    )
     # Signed F-lookups: +F(hi-1) and -F(lo) per interval with an
     # interior. Query superbins clamp into the populated range so the
     # boundary cases (query before any point -> 0, after all -> total)
     # fall out of the same window arithmetic.
     queries = (
-        ivl.filter(F.col("__hi") >= F.col("__lo") + 2)
-        .select(
-            F.col(ivl_chrom).alias("__c"),
+        inner.select(
+            F.col("chrom").alias("__c"),
             *group_cols,
             F.explode(
                 F.array(
@@ -547,7 +537,7 @@ def interval_count_prefix(
         .orderBy("__bin", "__isq")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    lookups = (
+    return (
         merged.withColumn("__local", F.coalesce(F.sum("__bn").over(w_local), F.lit(0)))
         .filter(F.col("__isq") == 1)
         .join(sb_cum, on=["__c", "__sb"], how="inner")
@@ -558,167 +548,6 @@ def interval_count_prefix(
             ),
         )
     )
-    edge_bins = ivl.withColumn(
-        "__ibin", F.explode(F.array_distinct(F.array("__lo", "__hi")))
-    )
-    edges = (
-        edge_bins.join(
-            pts,
-            on=(edge_bins[ivl_chrom] == pts["__c"]) & (edge_bins["__ibin"] == pts["__bin"]),
-        )
-        .filter((F.col("__p") >= F.col(ivl_start)) & (F.col("__p") <= F.col(ivl_end)))
-        .select(*group_cols, F.lit(1).alias("__contrib"))
-    )
-    # Signed lookups net to 0 for groups with no overlapping points;
-    # dropping them restores the inner-join parity of the pair forms
-    # (every per-interval term is non-negative, so 0 == no matches).
-    return (
-        lookups.unionByName(edges)
-        .groupBy(*group_cols)
-        .agg(F.sum("__contrib").alias(count_col))
-        .filter(F.col(count_col) > 0)
-    )
-
-
-def interval_count_adaptive(
-    points: DataFrame,
-    intervals: DataFrame,
-    group_cols: list[str],
-    tuned_bin: int = 50,
-    max_points_per_bin: int = 1000,
-    point_chrom: str = "rname",
-    point_pos: str = "pos",
-    ivl_chrom: str = "chrom",
-    ivl_start: str = "start",
-    ivl_end: str = "end",
-    count_col: str = "n",
-    target_points_per_bin: int = 273,
-) -> DataFrame:
-    """Stats-driven physical choice between the two exact
-    interval-COUNT forms — the same move Catalyst makes between
-    broadcast and sort-merge, applied where it can't see the cost:
-
-    - sparse (max points-per-bin at ``tuned_bin`` <=
-      ``max_points_per_bin``): ``interval_count_binned`` at the swept
-      fixed width — lowest constant factor, measured fastest up to
-      ~1000 points/bin;
-    - dense: ``interval_count_prefix`` with a density-matched width —
-      linear where the explode-interior form grows with
-      points-per-bin (384x wall at 100x replication vs 18s for the
-      prefix form on the same data).
-
-    The decision stat is the per-(chrom, bin) count table at
-    ``tuned_bin`` itself, persisted: its row count is bounded by
-    domain/bin_size (data-size-independent — ~KBs at sf0.1, ~1 GB for
-    a 3 Gbp genome at bin 50, never ∝ |points|), ``max(count)`` over
-    it is exactly the quantity the edge join's cost depends on (and,
-    unlike the mean the previous dispatcher used, robust to hot-spot
-    skew), and on the sparse path the binned form reuses the SAME
-    persisted table for its interior join — so the probe scan replaces
-    a scan the main job needed anyway instead of adding one (measured:
-    1.08s → ~0.85s at sf0.1). The small cache is left to Spark's LRU
-    (the returned plan references it lazily; unpersisting here would
-    recompute it). Dense path: the probe's sum(count) sizes the prefix
-    width, passed via ``bounds`` so nothing re-aggregates. Both forms
-    are bit-identical for any width, so the switch moves only the
-    physical plan. Empty ``intervals`` (min/max NULL) short-circuits
-    to an empty result of the correct schema without scanning points.
-
-    The built result plan is MEMOIZED per (session, input
-    fingerprints, params; session.memo_key) — the catalog-statistics +
-    prepared-statement move: a repeat call over the same inputs
-    returns the immutable already-built DataFrame, skipping both the
-    two driver-sequential stats jobs (~0.5s of job-launch latency on
-    local mode regardless of data size) and the ~0.5s of py4j plan
-    construction. The cache holds the persisted bin-table handle so
-    the interior join keeps hitting the same storage entry, and is as
-    stale as any persisted frame over mutated input files — same
-    contract as Spark's own plan cache. Bounded at 8 entries, FIFO;
-    evicted entries unpersist their bin table."""
-    kw = dict(
-        point_chrom=point_chrom,
-        point_pos=point_pos,
-        ivl_chrom=ivl_chrom,
-        ivl_start=ivl_start,
-        ivl_end=ivl_end,
-        count_col=count_col,
-    )
-    ck = memo_key(
-        (points, intervals),
-        tuple(group_cols),
-        tuned_bin,
-        max_points_per_bin,
-        tuple(sorted(kw.items())),
-    )
-    cached = _INTERVAL_STATS.get(ck)
-    if cached is not None:
-        # Prepared-statement hit: the built plan is immutable, hand it
-        # back without re-spending the ~0.5s of py4j plan construction
-        # (the measured dominant cost of repeat calls — see the
-        # perf-lessons note on Column-tree build cost).
-        return cached
-    # The two stats actions below are driver-sequential and
-    # latency-bound, not throughput-bound: a min/max over the interval
-    # dim and an agg over the bounded bin-count table. Under AQE each
-    # becomes 3-5 stage-materialization jobs whose per-job launch
-    # latency (~0.1s on a busy local box) dominates — measured r10:
-    # 9 jobs / 0.89-1.08s of plan build vs 3 jobs / ~0.5s with AQE
-    # scoped off. Both aggregates are skew-free by construction
-    # (interval dim is catalog-sized; the bin table is bounded by
-    # domain/bin_size), so AQE's runtime re-planning can improve
-    # nothing here. The RETURNED plan keeps AQE: only the eager stats
-    # phase is scoped.
-    from ..session import no_aqe
-
-    spark = points.sparkSession
-    with no_aqe(spark):
-        lo, hi = intervals.agg(F.min(ivl_start), F.max(ivl_end)).first()
-    if lo is None or hi is None:
-        return interval_count_binned(
-            points.limit(0), intervals, group_cols, bin_size=tuned_bin, **kw
-        )
-    points = points.filter(
-        (F.col(point_pos) >= F.lit(lo)) & (F.col(point_pos) <= F.lit(hi))
-    )
-    from ..session import fan_out
-
-    b = F.lit(tuned_bin)
-    pts = fan_out(
-        points.select(
-            F.col(point_chrom).alias("__c"),
-            (F.col(point_pos) / b).cast("long").alias("__bin"),
-        ),
-        "__c",
-        "__bin",
-    )
-    # persist() INSIDE the no_aqe scope: the CacheManager compiles the
-    # cached plan at registration time with the session conf of that
-    # moment — registered under AQE it materializes as 3 stage-jobs
-    # (measured: jobs of 3/35/68 tasks) even when the triggering
-    # action runs with AQE off.
-    with no_aqe(spark):
-        bin_counts = (
-            pts.groupBy("__c", "__bin").agg(F.count("*").alias("__bn")).persist()
-        )
-        max_bn, n_pts = bin_counts.agg(F.max("__bn"), F.sum("__bn")).first()
-    max_bn, n_pts = max_bn or 0, n_pts or 0
-    if max_bn <= max_points_per_bin:
-        out = interval_count_binned(
-            points,
-            intervals,
-            group_cols,
-            bin_size=tuned_bin,
-            precomputed_bin_counts=bin_counts,
-            **kw,
-        )
-    else:
-        domain = max(1.0, float(hi) - float(lo))
-        width = max(1, round(target_points_per_bin * domain / max(n_pts, 1)))
-        out = interval_count_prefix(
-            points, intervals, group_cols, bin_size=width, bounds=(lo, hi, n_pts), **kw
-        )
-    _INTERVAL_STATS.put(ck, out, bin_counts)
-    return out
 
 
 def band_classify(

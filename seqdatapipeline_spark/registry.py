@@ -542,12 +542,12 @@ def q_feature_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     points against intervals, then count per group key. Executed with
     the interval-COUNT rewrite (ops.joins.interval_count_adaptive):
     the point×interval pair set (59M rows at sf0.1 for 600k×20k
-    inputs) is never materialized — sparse inputs take the swept
-    fixed-bin form (interior bins read a pre-aggregated per-bin count
-    table, only the two edge bins of each interval touch raw points),
-    dense inputs switch to the distributed prefix-sum form whose
-    interior is two F-lookups per interval (linear at any density;
-    the fixed-bin edge join alone is 384x wall at 100x replication).
+    inputs) is never materialized — on the sparse route interior bins
+    read a pre-aggregated per-bin count table at the swept fixed width
+    and only the two edge bins of each interval touch raw points; on
+    the dense route the interior is two prefix-sum F-lookups per
+    interval (linear at any density; the fixed-bin edge join alone is
+    384x wall at 100x replication).
     Pair-producing callers use interval_join_binned; the plan here is
     the one a 100 TB htseq-count wants."""
     li = _t(spark, sf_dir, "lineitem").select(
@@ -559,12 +559,7 @@ def q_feature_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("p_retailprice") * 0.5).alias("start"),
         (F.col("p_retailprice") * 1.5).alias("end"),
     )
-    # tuned_bin=50: optimum of the sf0.1 sweep (25-400) and the 10x
-    # re-sweep; the dispatcher keeps it while points-per-bin stays
-    # under ~1000 and flips to the prefix-sum form beyond (measured
-    # crossover: binned wins 1.0s vs 1.8s at sf0.1, prefix wins 2.5s
-    # vs 4.7s at 10x and 18s vs 617s at 100x).
-    return jn.interval_count_adaptive(li, part, group_cols=["p_brand"], tuned_bin=50)
+    return jn.interval_count_adaptive(li, part, group_cols=["p_brand"])
 
 
 @q(

@@ -17,6 +17,7 @@ import threading
 from collections import OrderedDict
 from contextlib import contextmanager
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -341,6 +342,23 @@ def ring_persist(df: DataFrame) -> DataFrame:
     return out
 
 
+# persist_for_rescan's gate: an input whose size estimate reaches this
+# many bytes is persisted rather than re-scanned (tests patch it).
+RESCAN_PERSIST_BYTES = 256 * 1024 * 1024
+
+
+def size_estimate(df: DataFrame) -> int | None:
+    """Catalyst's size estimate of ``df`` in bytes: driver-side, zero
+    jobs (file statistics for a scan). A plan without statistics, such
+    as an RDD-backed frame, reads as Long.MaxValue; None when the
+    estimate cannot be read at all, so each caller keeps its own
+    conservative choice."""
+    try:
+        return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    except Py4JError:
+        return None
+
+
 def persist_for_rescan(df: DataFrame, gate: "DataFrame | None" = None) -> DataFrame:
     """Size-adaptive persist for a derived projection that downstream
     plan branches re-evaluate several times (Spark shares no common
@@ -349,19 +367,16 @@ def persist_for_rescan(df: DataFrame, gate: "DataFrame | None" = None) -> DataFr
     re-scanning beats the cache barrier, and leave the plan untouched
     otherwise.
 
-    The dispatch reads the Catalyst size ESTIMATE of ``gate`` (the
-    expensive input being re-scanned; defaults to ``df``) from the
-    optimizer — file-statistics-based, driver-side, zero jobs — and
-    compares it to the conf ``spark.seqdatapipeline.rescanPersistBytes``
-    (default 256 MB). Below the threshold a re-scan costs less than the
-    persist's extra AQE stage-materialization barriers (measured on
-    quality_percentile_by_source at sf0.1: persist = +3 driver jobs
-    for a wall within noise); above it each avoided re-evaluation
-    saves a full scan+compute pass of the gated subtree, which at
-    100 TB dominates any cache cost — the same size-tiered reasoning
-    as Catalyst's broadcast threshold, parameterized so a deployment
-    sizes it to its storage bandwidth. An unavailable estimate keeps
-    the untouched plan.
+    The dispatch compares the size estimate of ``gate`` (the expensive
+    input being re-scanned; defaults to ``df``) with
+    ``RESCAN_PERSIST_BYTES`` (256 MB). Below the threshold a re-scan
+    costs less than the persist's extra AQE stage-materialization
+    barriers (measured on quality_percentile_by_source at sf0.1:
+    persist = +3 driver jobs for a wall within noise); above it each
+    avoided re-evaluation saves a full scan+compute pass of the gated
+    subtree, which at 100 TB dominates any cache cost — the same
+    size-tiered reasoning as Catalyst's broadcast threshold. An
+    unavailable estimate keeps the untouched plan.
 
     GATE SEMANTICS (ADVICE r12): the threshold is compared against the
     estimate of the RE-SCANNED INPUT (``gate``), not of the persisted
@@ -370,19 +385,5 @@ def persist_for_rescan(df: DataFrame, gate: "DataFrame | None" = None) -> DataFr
     subtree. A wide gate feeding a narrow derived table therefore
     fires conservatively-early (the cache is cheaper than the estimate
     suggests), never late."""
-    gate = gate if gate is not None else df
-    try:
-        min_bytes = int(
-            gate.sparkSession.conf.get(
-                "spark.seqdatapipeline.rescanPersistBytes", str(256 * 1024 * 1024)
-            )
-        )
-    except Exception:
-        min_bytes = 256 * 1024 * 1024
-    try:
-        est = int(
-            str(gate._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:
-        return df
-    return ring_persist(df) if est >= min_bytes else df
+    est = size_estimate(gate if gate is not None else df)
+    return ring_persist(df) if est is not None and est >= RESCAN_PERSIST_BYTES else df

@@ -61,6 +61,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..extensions.dedup import lsh_band_incidence, minhash_signature
+from ..session import size_estimate
 
 # Default cutover of both stores: a batch whose optimizer size estimate
 # is at most this many bytes takes the driver-local tier. Measured
@@ -70,12 +71,12 @@ from ..extensions.dedup import lsh_band_incidence, minhash_signature
 LOCAL_MAX_BYTES = 192 * 1024
 
 
-def _size_estimate(df: DataFrame) -> int:
-    """Catalyst's size estimate of ``df`` in bytes: driver-side, zero
-    jobs (file statistics for a scan). A plan without statistics, such
-    as an RDD-backed frame, reads as Long.MaxValue and so never takes
-    the driver-local tier."""
-    return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+def _local_tier(batch_docs: DataFrame) -> bool:
+    """Whether the batch takes the driver-local tier. A batch without a
+    readable estimate, or without statistics (an RDD-backed frame reads
+    as Long.MaxValue), takes the distributed one."""
+    est = size_estimate(batch_docs)
+    return est is not None and est <= LOCAL_MAX_BYTES
 
 
 def _read_store(spark: SparkSession, path: str, schema: StructType) -> DataFrame | None:
@@ -111,7 +112,7 @@ def merge_band_store(
     store = _read_store(
         spark, state_path, StructType([id_field, StructField("band_key", StringType())])
     )
-    if _size_estimate(batch_docs) <= LOCAL_MAX_BYTES:
+    if _local_tier(batch_docs):
         return _local_band_pairs(keyed, id_field, store, state_path)
     keyed = keyed.localCheckpoint(eager=True)
     lo, hi = F.least("a", "b").alias("doc_a"), F.greatest("a", "b").alias("doc_b")
@@ -167,7 +168,9 @@ def _local_band_pairs(
                 (min(a, b), max(a, b))
                 for a, b in zip(cross.column(0).to_pylist(), cross.column(1).to_pylist())
             )
-        batch.write.mode("append").parquet(state_path)
+        # one file per batch: the collected keys arrive as one Arrow
+        # chunk per task, which would otherwise write one file each
+        batch.coalesce(1).write.mode("append").parquet(state_path)
     # the distributed tier's union with the store-read side is nullable
     nullable = id_field.nullable or store is not None
     schema = StructType(
@@ -228,7 +231,7 @@ def merge_span_store(
     NULL-text rows are excluded, mirroring batch span_dedup (the
     identity only holds if both halves share the text-family NULL
     contract)."""
-    local = _size_estimate(batch_docs) <= LOCAL_MAX_BYTES
+    local = _local_tier(batch_docs)
     batch_docs = batch_docs.filter(F.col(text_col).isNotNull())
     spark = batch_docs.sparkSession
     w = F.split(F.col(text_col), " ")

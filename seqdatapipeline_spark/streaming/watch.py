@@ -141,7 +141,6 @@ def stream_into_curated(
     table: str,
     bucket_col: str,
     checkpoint: str,
-    n_buckets: int = 32,
     sort_cols: "list[str] | None" = None,
     transform=None,
 ):
@@ -173,9 +172,7 @@ def stream_into_curated(
 
     def _sink(df: DataFrame, epoch_id: int) -> None:
         batch = transform(df) if transform is not None else df
-        append_curated_bucketed(
-            batch, table, bucket_col, n_buckets=n_buckets, sort_cols=sort_cols
-        )
+        append_curated_bucketed(batch, table, bucket_col, sort_cols=sort_cols)
         origin.catalog.refreshTable(table)
 
     return run_batches(stream_df, _sink, checkpoint)

@@ -61,10 +61,24 @@ def test_interval_join_binned_matches_broadcast(spark):
     assert sorted(map(tuple, b1.collect())) == sorted(map(tuple, b2.collect()))
 
 
+def _count_at(points, intervals, group_cols, width, dense):
+    """One interval-count term at an explicit bin width, bypassing the
+    dispatcher's choice of route and width."""
+    return jn._count_at(
+        *jn._binned_points(points, width), intervals, group_cols, width, dense
+    )
+
+
+def _route(df):
+    """The route an interval_count_adaptive plan took."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return "dense" if "__sbcum" in plan else "sparse"
+
+
 def test_interval_count_binned_matches_join_count(spark):
-    """The count rewrite (interior-bin pre-agg + edge-bin exact test)
-    must agree with materialize-pairs-then-count for every bin size,
-    including bins smaller/larger than the interval span."""
+    """The count rewrite's sparse term (interior-bin pre-agg + edge-bin
+    exact test) must agree with materialize-pairs-then-count for every
+    bin size, including bins smaller/larger than the interval span."""
     al = fx.alignments(spark)
     ft = fx.features(spark)
     expected = sorted(
@@ -79,47 +93,45 @@ def test_interval_count_binned_matches_join_count(spark):
         ftg = ft.withColumn("gene_id", F.col("attributes")["gene_id"])
         got = sorted(
             (r.gene_id, r.n)
-            for r in jn.interval_count_binned(al, ftg, ["gene_id"], bin_size=bs).collect()
+            for r in _count_at(al, ftg, ["gene_id"], bs, dense=False).collect()
         )
         assert got == expected, (bs, got, expected)
 
 
-def test_interval_count_prefix_and_adaptive_match_join_count(spark):
-    """The prefix-sum form (two-level cumulative + signed F-lookups)
-    and the stats dispatcher must both agree with the explode form,
+def test_interval_count_prefix_and_adaptive_match_join_count(spark, monkeypatch):
+    """The prefix-sum term (two-level cumulative + signed F-lookups)
+    and the stats dispatcher must both agree with the sparse term,
     across bin widths and a superbin width small enough to force
     cross-superbin lookups; the dispatcher must route each density
-    regime to the intended physical form."""
+    regime to the intended term."""
     al = fx.alignments(spark)
     ftg = fx.features(spark).withColumn("gene_id", F.col("attributes")["gene_id"])
     expected = sorted(
         (r.gene_id, r.n)
-        for r in jn.interval_count_binned(al, ftg, ["gene_id"], bin_size=500).collect()
+        for r in _count_at(al, ftg, ["gene_id"], 500, dense=False).collect()
     )
-    for bs, sb in ((7, 4), (100, 4096), ("auto", 16)):
+    for bs, sb in ((7, 4), (100, 4096)):
+        monkeypatch.setattr(jn, "SUPERBIN_BINS", sb)
         got = sorted(
             (r.gene_id, r.n)
-            for r in jn.interval_count_prefix(
-                al, ftg, ["gene_id"], bin_size=bs, superbin_bins=sb
-            ).collect()
+            for r in _count_at(al, ftg, ["gene_id"], bs, dense=True).collect()
         )
         assert got == expected, (bs, sb, got, expected)
-    # Sparse fixture -> binned route; forcing the threshold to 0 points
-    # per bin -> prefix route; both exact.
-    for thresh in (1000, 0):
-        got = sorted(
-            (r.gene_id, r.n)
-            for r in jn.interval_count_adaptive(
-                al, ftg, ["gene_id"], max_points_per_bin=thresh
-            ).collect()
-        )
+    # Sparse fixture -> sparse route; forcing the threshold to 0 points
+    # per bin -> dense route at the density-sized width (over 16-bin
+    # superbins); both exact.
+    monkeypatch.setattr(jn, "SUPERBIN_BINS", 16)
+    for thresh, route in ((1000, "sparse"), (0, "dense")):
+        monkeypatch.setattr(jn, "MAX_POINTS_PER_BIN", thresh)
+        out = jn.interval_count_adaptive(al, ftg, ["gene_id"])
+        assert _route(out) == route, thresh
+        got = sorted((r.gene_id, r.n) for r in out.collect())
         assert got == expected, (thresh, got, expected)
 
 
 def test_interval_count_adaptive_empty_intervals(spark):
     """Empty interval dim (min/max aggregate yields NULLs) must return
-    an empty frame of the grouped schema, not TypeError on float(None)
-    — parity with what interval_count_binned always did."""
+    an empty frame of the grouped schema, not TypeError on float(None)."""
     al = fx.alignments(spark)
     ftg = (
         fx.features(spark)
@@ -129,33 +141,6 @@ def test_interval_count_adaptive_empty_intervals(spark):
     out = jn.interval_count_adaptive(al, ftg, ["gene_id"])
     assert out.count() == 0
     assert set(out.columns) == {"gene_id", "n"}
-    # Direct prefix-form call (bounds=None, auto width) hits the same
-    # NULL min/max edge; it must short-circuit, not float(None).
-    out2 = jn.interval_count_prefix(al, ftg, ["gene_id"], bin_size="auto")
-    assert out2.count() == 0
-    assert set(out2.columns) == {"gene_id", "n"}
-
-
-def test_interval_count_prefix_bounds_passthrough(spark):
-    """Precomputed (lo, hi, n_pts) bounds must skip the internal
-    min/max + re-filter and still produce the exact result when the
-    caller pre-filtered points to [lo, hi]."""
-    al = fx.alignments(spark)
-    ftg = fx.features(spark).withColumn("gene_id", F.col("attributes")["gene_id"])
-    expected = sorted(
-        (r.gene_id, r.n)
-        for r in jn.interval_count_binned(al, ftg, ["gene_id"], bin_size=500).collect()
-    )
-    lo, hi = ftg.agg(F.min("start"), F.max("end")).first()
-    al_f = al.filter((F.col("pos") >= F.lit(lo)) & (F.col("pos") <= F.lit(hi)))
-    n = al_f.count()
-    got = sorted(
-        (r.gene_id, r.n)
-        for r in jn.interval_count_prefix(
-            al_f, ftg, ["gene_id"], bin_size="auto", bounds=(lo, hi, n)
-        ).collect()
-    )
-    assert got == expected
 
 
 def test_gene_read_count_unstranded(spark):
@@ -1350,6 +1335,34 @@ def test_append_curated_bucketed_keeps_clustering_and_parity(spark, tmp_path):
         )
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_append_curated_bucketed_default_width_is_table_bucket_count(spark):
+    """A default append repartitions to the table's own bucket count
+    (from its manifest), so it adds at most one file per bucket."""
+    import glob
+
+    from seqdatapipeline_spark.io import layout as lay
+    from seqdatapipeline_spark.io.sinks import resolve_table_location
+
+    table, n_buckets = "t_append_default_width", 16
+    try:
+        lay.write_curated_bucketed(
+            spark.range(0, 400).withColumn("v", F.col("id") % 7), table, "id", n_buckets
+        )
+        loc = resolve_table_location(spark, table).removeprefix("file:")
+
+        def data_files():
+            return set(glob.glob(f"{loc}/part-*"))
+
+        before = data_files()
+        lay.append_curated_bucketed(
+            spark.range(400, 800).withColumn("v", F.col("id") % 7), table, "id"
+        )
+        assert 0 < len(data_files() - before) <= n_buckets
+        assert spark.table(table).count() == 800
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_refresh_curated_ivf_appends_assignments(spark):

@@ -949,7 +949,9 @@ def test_neardup_tiers_are_output_identical(spark, tmp_path, monkeypatch):
     tracker = spark.sparkContext.statusTracker()
 
     def jobs():
-        return len(tracker.getJobIdsForGroup(None))
+        # the newest job id, not the count: the status tracker drops old
+        # jobs past spark.ui.retainedJobs, which shrinks the count
+        return max(tracker.getJobIdsForGroup(None) or [-1])
 
     def drain(tier, cutover):
         monkeypatch.setattr(nd, "LOCAL_MAX_BYTES", cutover)
@@ -974,6 +976,20 @@ def test_neardup_tiers_are_output_identical(spark, tmp_path, monkeypatch):
     assert local_stores == dist_stores
     assert local[0][1] == [(1, 2)] and (1, 2) in local[2][1]  # in-batch, cross-batch
     assert local_jobs == [(2, 2), (1, 1), (4, 4)]
+
+
+def test_band_store_local_tier_writes_one_file_per_batch(spark, tmp_path, monkeypatch):
+    """Each driver-local batch appends one part file to the band store,
+    however many tasks collected its keys."""
+    from seqdatapipeline_spark.streaming import neardup as nd
+
+    monkeypatch.setattr(nd, "LOCAL_MAX_BYTES", 1 << 63)
+    state = tmp_path / "bands"
+    n_batches = 3
+    for i in range(n_batches):
+        docs = [(i * 100 + j, f"{BASE} {i} {j}") for j in range(100)]
+        nd.merge_band_store(_doc_df(spark, docs).repartition(4), str(state))
+    assert len(list(state.glob("part-*"))) == n_batches
 
 
 def test_curated_collapse_short_and_empty_text_parity(spark, tmp_path):

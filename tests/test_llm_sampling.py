@@ -191,11 +191,12 @@ def test_quality_percentile_is_monotone_within_source(spark):
             assert seen.setdefault(s, p) == p
 
 
-def test_quality_percentile_persist_dispatch_output_invariant(spark):
+def test_quality_percentile_persist_dispatch_output_invariant(spark, monkeypatch):
     # r12: the scored projection persists adaptively above the
-    # rescanPersistBytes gate. Forcing the gate to 0 must flip the
+    # RESCAN_PERSIST_BYTES gate. Forcing the gate to 0 must flip the
     # dispatch to the persisted branch (a cache entry appears) with
     # byte-identical output to the default (re-scan) plan.
+    from seqdatapipeline_spark import session
     from seqdatapipeline_spark.session import ring_clear
 
     fn = _q("quality_percentile_by_source")
@@ -210,58 +211,59 @@ def test_quality_percentile_persist_dispatch_output_invariant(spark):
     # persist_for_rescan having persisted anything — only an INCREASE
     # proves the dispatch fired.
     n_before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    spark.conf.set("spark.seqdatapipeline.rescanPersistBytes", "0")
+    monkeypatch.setattr(session, "RESCAN_PERSIST_BYTES", 0)
     try:
         forced_df = fn(spark, "/root/testdata/sf0.01")
         forced = sorted(map(tuple, forced_df.collect()))
         jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
         assert jmap.size() > n_before  # the dispatch really persisted
     finally:
-        spark.conf.unset("spark.seqdatapipeline.rescanPersistBytes")
         ring_clear()
     assert forced == base
 
 
-def test_cell_assign_persist_dispatch_output_invariant(spark):
+def test_cell_assign_persist_dispatch_output_invariant(spark, monkeypatch):
     # r12: semdedup_prune / knn_graph persist the Arrow cell
     # assignment (and knn_graph the membership map) above the rescan
     # gate. Forcing the gate must not change a single output row.
+    from seqdatapipeline_spark import session
     from seqdatapipeline_spark.session import ring_clear
 
     for name in ("semdedup_prune", "knn_graph"):
         fn = _q(name)
         base = sorted(map(tuple, fn(spark, "/root/testdata/sf0.01").collect()))
         ring_clear()
-        spark.conf.set("spark.seqdatapipeline.rescanPersistBytes", "0")
+        monkeypatch.setattr(session, "RESCAN_PERSIST_BYTES", 0)
         try:
             forced = sorted(
                 map(tuple, fn(spark, "/root/testdata/sf0.01").collect())
             )
         finally:
-            spark.conf.unset("spark.seqdatapipeline.rescanPersistBytes")
+            monkeypatch.undo()
             ring_clear()
         assert forced == base, name
 
 
-def test_pq_model_persist_dispatch_output_invariant(spark):
+def test_pq_model_persist_dispatch_output_invariant(spark, monkeypatch):
     # r13: pq_ivf_build gate-persists the coarse/codebook model tables
     # (each referenced from two plan branches; every reference
     # re-derived the model with its own TakeOrdered corpus pass).
     # Forcing the gate must not change a single output row of either
     # consumer query.
+    from seqdatapipeline_spark import session
     from seqdatapipeline_spark.session import ring_clear
 
     for name in ("ivf_pq_topk", "pq_ann_topk"):
         fn = _q(name)
         base = sorted(map(tuple, fn(spark, "/root/testdata/sf0.01").collect()))
         ring_clear()
-        spark.conf.set("spark.seqdatapipeline.rescanPersistBytes", "0")
+        monkeypatch.setattr(session, "RESCAN_PERSIST_BYTES", 0)
         try:
             forced = sorted(
                 map(tuple, fn(spark, "/root/testdata/sf0.01").collect())
             )
         finally:
-            spark.conf.unset("spark.seqdatapipeline.rescanPersistBytes")
+            monkeypatch.undo()
             ring_clear()
         assert forced == base, name
 

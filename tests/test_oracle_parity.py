@@ -95,7 +95,23 @@ def _assert_driver_hashable(name, schema):
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_parity(spark, sf_dir, name):
-    sdf = QUERIES[name](spark, sf_dir)
+    _assert_parity(QUERIES[name](spark, sf_dir), sf_dir, name)
+
+
+def test_oracle_parity_interval_count_dense_route(spark, sf_dir, monkeypatch):
+    """The fixture is sparse, so the parametrized parity run above only
+    checks feature_interval_join's sparse route. With the threshold at 0
+    points per bin the dispatcher takes the dense prefix-sum route,
+    which must match the oracle as well."""
+    from seqdatapipeline_spark.ops import joins as jn
+
+    monkeypatch.setattr(jn, "MAX_POINTS_PER_BIN", 0)
+    sdf = QUERIES["feature_interval_join"](spark, sf_dir)
+    assert "__sbcum" in sdf._jdf.queryExecution().optimizedPlan().toString()
+    _assert_parity(sdf, sf_dir, "feature_interval_join")
+
+
+def _assert_parity(sdf, sf_dir, name):
     _assert_driver_hashable(name, sdf.schema)
     s_rows = [tuple(r) for r in sdf.collect()]
     s_cols = sdf.columns

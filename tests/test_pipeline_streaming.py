@@ -602,7 +602,6 @@ def test_stream_into_curated_keeps_fast_paths_current(spark):
             name,
             "content_hash",
             ckpt,
-            n_buckets=8,
             transform=lambda df: df.withColumn("content_hash", F.md5("text")),
         )
         cur = spark.table(name)
@@ -656,7 +655,6 @@ def test_stream_into_curated_resumes_after_reattach(spark):
             table,
             "content_hash",
             ckpt,
-            n_buckets=4,
             transform=lambda df: df.withColumn("content_hash", F.md5("text")),
         )
         cur = spark.table(table)

@@ -478,7 +478,7 @@ def test_skew_router_join_broadcasts_hot_hash(spark):
 
 
 def test_interval_count_prefix_plan_has_no_interior_explode(spark):
-    """The prefix-sum form must not regress to the explode-interior
+    """The dense (prefix-sum) term must not regress to the explode-interior
     shape: no per-interval sequence() explode of interior bins (the
     term that is intervals x bins-per-interval — quadratic when bins
     shrink with density), and the cumulative windows must be keyed by
@@ -499,7 +499,7 @@ def test_interval_count_prefix_plan_has_no_interior_explode(spark):
         (F.col("id") % 50).cast("double").alias("start"),
         ((F.col("id") % 50) + 100).cast("double").alias("end"),
     )
-    plan = _plan(jn.interval_count_prefix(pts, ivl, ["gid"], bin_size=2))
+    plan = _plan(jn._count_at(*jn._binned_points(pts, 2), ivl, ["gid"], 2, dense=True))
     assert "sequence((__lo" not in plan, plan[:3000]
     # both cumulative windows ride the superbin key
     assert "__sb" in plan
@@ -515,10 +515,10 @@ def test_plain_reader_memo_costs_zero_jobs_on_repeat(spark, sf_dir):
 
     st = spark.sparkContext.statusTracker()
     _t(spark, sf_dir, "part")  # first read may cost footer jobs
-    j0 = len(st.getJobIdsForGroup(None))
+    j0 = max(st.getJobIdsForGroup(None) or [-1])
     for _ in range(3):
         _t(spark, sf_dir, "part")
-    assert len(st.getJobIdsForGroup(None)) == j0
+    assert max(st.getJobIdsForGroup(None) or [-1]) == j0
 
 
 def test_interval_adaptive_build_phase_runs_at_most_three_jobs(spark, sf_dir, queries):
@@ -534,7 +534,7 @@ def test_interval_adaptive_build_phase_runs_at_most_three_jobs(spark, sf_dir, qu
     fn = queries["feature_interval_join"]
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # memo warm-up
     _adaptive_stats_clear()  # force the stats jobs to re-run
-    j0 = len(st.getJobIdsForGroup(None))
+    j0 = max(st.getJobIdsForGroup(None) or [-1])
     fn(spark, sf_dir)
-    assert len(st.getJobIdsForGroup(None)) - j0 <= 3
+    assert max(st.getJobIdsForGroup(None) or [-1]) - j0 <= 3
     _adaptive_stats_clear()

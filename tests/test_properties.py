@@ -66,9 +66,12 @@ def test_dedup_keep_first_idempotent_and_minimal(spark, rows):
     bin_size=st.sampled_from([3, 10, 64, 500]),
 )
 @settings(**SETTINGS)
-def test_interval_count_rewrite_equals_join_count(spark, points, intervals, bin_size):
+def test_interval_count_rewrite_equals_join_count(
+    spark, monkeypatch, points, intervals, bin_size
+):
     """The interior+edge count rewrite must equal materialize-pairs-
-    then-count for arbitrary points, intervals, and bin sizes."""
+    then-count for arbitrary points, intervals, and bin sizes, with
+    either interior term."""
     pts = spark.createDataFrame([("c", p) for p in points], "rname string, pos long")
     ivl = spark.createDataFrame(
         [("c", f"g{i}", s, s + w) for i, (s, w) in enumerate(intervals)],
@@ -81,19 +84,19 @@ def test_interval_count_rewrite_equals_join_count(spark, points, intervals, bin_
         .agg(F.count("*").alias("n"))
         .collect()
     )
+    binned = jn._binned_points(pts, bin_size)
     got = sorted(
         (r.gid, r.n)
-        for r in jn.interval_count_binned(pts, ivl, ["gid"], bin_size=bin_size).collect()
+        for r in jn._count_at(*binned, ivl, ["gid"], bin_size, dense=False).collect()
     )
     assert got == expected, (bin_size, got, expected)
-    # The prefix-sum form must agree too; superbin_bins=3 forces the
+    # The prefix-sum term must agree too; 3-bin superbins force the
     # two-level cumulative across superbin boundaries and the dense
     # gap/clamp paths (intervals here extend past the point domain).
+    monkeypatch.setattr(jn, "SUPERBIN_BINS", 3)
     got_prefix = sorted(
         (r.gid, r.n)
-        for r in jn.interval_count_prefix(
-            pts, ivl, ["gid"], bin_size=bin_size, superbin_bins=3
-        ).collect()
+        for r in jn._count_at(*binned, ivl, ["gid"], bin_size, dense=True).collect()
     )
     assert got_prefix == expected, (bin_size, got_prefix, expected)
 

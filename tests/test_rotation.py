@@ -223,10 +223,20 @@ def test_trace_follows_function_local_imports():
     assert rw._span(corpus.chunk_documents) in rw.trace_spans(query)
 
 
-# Package defs that no registered query or harness reaches, each kept on
-# purpose. Everything else outside the tracer's closure is dead code
-# that no oracle checks: delete it, or reach it from a query.
+# Package defs that no registered query or harness reaches, and module
+# constants that no reached code reads, each kept on purpose. Everything
+# else outside the tracer's closure is dead code that no oracle checks:
+# delete it, or reach it from a query.
 KEEP = {
+    "__version__": "the package's declared version, for readers of the installed package",
+    "extensions.textstats.TOKEN_RE": "the token pattern re_token_count counts and the oracles spell out",
+    **{
+        f"schemas.{name}": "documented D1-D9 data-model struct"
+        for name in (
+            "JOB_FORM", "READ", "ALIGNMENT", "FEATURE",
+            "COVERAGE", "FRAGMENT_HIST", "STATUS_LOG", "MEDIA",
+        )
+    },
     "ops.joins.interval_join_broadcast": "reference the interval-count tests compare against",
     "ops.joins.interval_join_binned": "reference the interval-count tests compare against",
     "io.layout.reattach_curated": "recovers the curated catalog after a process restart",
@@ -244,8 +254,8 @@ def test_every_package_def_is_reached():
 
     unreached = rw.unreached_defs(KEEP)
     assert set(unreached) == set(KEEP), (
-        "package defs reached by no registered query, harness or "
-        "module-level code (delete them or add a reasoned KEEP entry): "
+        "package defs or constants reached by no registered query, harness "
+        "or module-level code (delete them or add a reasoned KEEP entry): "
         f"{sorted(set(unreached) - set(KEEP))}; KEEP entries now reached "
         f"(drop them): {sorted(set(KEEP) - set(unreached))}"
     )
